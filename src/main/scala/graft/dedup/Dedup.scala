@@ -1,6 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.TextFns._
 
@@ -34,10 +35,175 @@ object Dedup {
     * an exchange instead of a driver-sized broadcast. */
   private def verifyHint(hsC: DataFrame, budgetBytes: Long): DataFrame => DataFrame = {
     val st = hsC.agg(count(lit(1)).as("n"),
-      coalesce(sum(size(col("hashes"))), lit(0L)).as("nh")).head()
+      coalesce(sum(size(col("sh"))), lit(0L)).as("nh")).head()
     val estBytes = st.getAs[Long]("nh") * 8L + st.getAs[Long]("n") * 32L
     if (estBytes <= budgetBytes) (df: DataFrame) => broadcast(df)
     else (df: DataFrame) => df
+  }
+
+  /** (doc_id, sz, h): one row per shingle hash of a (doc_id, hashes)
+    * frame, next to the doc's set size. */
+  private def shingleRows(hs: DataFrame): DataFrame =
+    hs.select(col("doc_id"), size(col("hashes")).as("sz"), explode(col("hashes")).as("h"))
+
+  /** Rare-first PPJoin prefix (doc_id, sz, prefix) per doc from
+    * already-RANKED rows (doc_id, sz, dfreq, h): the
+    * |X| − ceil(t·|X|) + 1 rarest hashes, ties on hash. The cut is the
+    * native (dfreq, h) sort + cut (graft.functions.PrefixCut); the
+    * composed slice(array_sort(...)) form pays an interpreted lambda
+    * per comparison of every per-doc sort. The 1e-9 nudge inside ceil
+    * keeps the bound conservative when t·sz is inexact in binary
+    * (0.1·30 = 3.0000000000000004 would otherwise over-prune an
+    * exact-threshold pair). Per-doc extraction is a hash aggregate +
+    * one local array sort of ≤ |doc| elements (cheaper than a
+    * sort-based window over the exploded frame). */
+  private def prefixCut(ranked: DataFrame, threshold: Double): DataFrame =
+    ranked.groupBy(col("doc_id"), col("sz"))
+      .agg(collect_list(struct(col("dfreq"), col("h"))).as("ranked"))
+      .select(col("doc_id"), col("sz"),
+        expr("graft_prefix_cut(ranked, " +
+          s"cast(sz - ceil($threshold * sz - 1e-9) + 1 AS int))").as("prefix"))
+
+  /** [[prefixCut]] under the frame's OWN document-frequency order —
+    * the order [[prefixCandidates]], [[incrementalDedup]] and
+    * [[containmentPairs]] rank by. The PPJoin prefix theorem needs the
+    * SAME global order on both join sides, so the df ranking always
+    * comes from the FULL frame the two sides are drawn from. */
+  private def selfRankedPrefix(hs: DataFrame, threshold: Double): DataFrame = {
+    val ex = shingleRows(hs)
+    val dfreq = ex.groupBy(col("h")).agg(count(lit(1)).as("dfreq"))
+    // shuffled-hash, never broadcast: both sides are corpus-sized (ex
+    // is O(tokens), dfreq O(vocabulary) — neither fits a driver
+    // broadcast at scale, and the cached-frame size estimate otherwise
+    // tempts the planner into building a driver HashedRelation over
+    // the ENTIRE exploded corpus per action). The build side is the
+    // narrow (h, dfreq) vocabulary slice; its aggregate already leaves
+    // the data hash-partitioned on h, so the join adds one exchange
+    // (ex) instead of one driver broadcast build per evaluation.
+    prefixCut(ex.join(dfreq.hint("shuffle_hash"), Seq("h")), threshold)
+  }
+
+  /** [[prefixCut]] under a FROZEN (h, dfreq) table — the text
+    * snapshot's order; shingles unseen there take df 0 (rarest). */
+  private def frozenRankedPrefix(hs: DataFrame, dfreq: DataFrame,
+      threshold: Double): DataFrame =
+    prefixCut(shingleRows(hs).join(dfreq, Seq("h"), "left")
+      .withColumn("dfreq", coalesce(col("dfreq"), lit(0L))), threshold)
+
+  /** (doc_id, sz, h): one posting per prefix element. */
+  private def prefixPostings(prefixes: DataFrame): DataFrame =
+    prefixes.select(col("doc_id"), col("sz"), explode(col("prefix")).as("h"))
+
+  /** PPJoin length filter: J ≥ t forces t·|A| ≤ |B| ≤ |A|/t — prunes
+    * size-mismatched collisions before the distinct/verify. */
+  private def lengthFilter(szA: Column, szB: Column, threshold: Double): Column =
+    szB >= ceil(szA * threshold - lit(1e-9)) && szB <= szA / threshold + lit(1e-9)
+
+  /** Within-side candidates (id_a, id_b) from prefix postings: every
+    * (id_a < id_b) pair sharing a prefix hash, length-filtered,
+    * distinct.
+    *
+    * Pair enumeration is a single h-keyed bucket collapse + a
+    * partition-local double explode (the q_item_cf collapse), NOT a
+    * self-join: a join would evaluate the whole prefix subtree once
+    * per side (ReusedExchange shares only the exchange, not the
+    * collect/sort/explode above it) and broadcast one side per action.
+    * Pair volume is identical, so the distinct output EQUALS the
+    * self-join's row-for-row. Bucket sizes are bounded by the
+    * rare-first ranking (a hash of document frequency k yields at most
+    * k prefix rows, and common shingles never enter prefixes). */
+  private def bucketPairs(postings: DataFrame, threshold: Double): DataFrame =
+    postings.groupBy(col("h"))
+      .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ds"))
+      .filter(size(col("ds")) > 1)
+      .select(explode(col("ds")).as("a"), col("ds"))
+      .select(col("a"), explode(col("ds")).as("b"))
+      .filter(col("a.doc_id") < col("b.doc_id") &&
+        lengthFilter(col("a.sz"), col("b.sz"), threshold))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b")).distinct()
+
+  /** Cross-side candidates (inc_id, idx_id): increment postings
+    * equi-joined with index postings on h, length-filtered, distinct. */
+  private def crossPairs(inc: DataFrame, idx: DataFrame, threshold: Double): DataFrame =
+    inc.select(col("doc_id").as("inc_id"), col("sz").as("sz_a"), col("h"))
+      .join(idx.select(col("doc_id").as("idx_id"), col("sz").as("sz_b"), col("h")), Seq("h"))
+      .filter(lengthFilter(col("sz_a"), col("sz_b"), threshold))
+      .select(col("inc_id"), col("idx_id")).distinct()
+
+  /** Adds `inter` = |h_a ∩ h_b| over two sorted hash arrays (the
+    * allocation-free native merge intersection, SortedOverlap, instead
+    * of an array_intersect hash set per pair) and `name` =
+    * inter / `denom`, rounded to 6 places like the oracle. */
+  private def withOverlap(pairs: DataFrame, name: String, denom: Column): DataFrame =
+    pairs.withColumn("inter", expr("graft_sorted_overlap(h_a, h_b)").cast("double"))
+      .withColumn(name, round(col("inter") / denom + lit(1e-9), 6))
+
+  private def jaccardDenom: Column = size(col("h_a")) + size(col("h_b")) - col("inter")
+
+  /** Candidate pairs `cands` (idA, idB) with each side's sorted hash
+    * set attached as h_a / h_b; `a` and `b` are (doc_id, sh) frames and
+    * `hint` wraps each lookup side ([[verifyHint]]). */
+  private def pairHashes(cands: DataFrame, a: DataFrame, b: DataFrame,
+      hint: DataFrame => DataFrame): DataFrame = {
+    val Array(idA, idB) = cands.columns
+    def side(s: DataFrame, id: String, h: String) =
+      hint(s.select(col("doc_id").as(id), col("sh").as(h)))
+    cands.join(side(a, idA, "h_a"), Seq(idA)).join(side(b, idB, "h_b"), Seq(idB))
+  }
+
+  /** Exact-Jaccard verify of candidate pairs `cands` (idA, idB):
+    * (idA, idB, jaccard) for the pairs at or above `threshold`. */
+  private def verifyJaccard(cands: DataFrame, a: DataFrame, b: DataFrame,
+      threshold: Double, hint: DataFrame => DataFrame = identity): DataFrame = {
+    val Array(idA, idB) = cands.columns
+    withOverlap(pairHashes(cands, a, b, hint), "jaccard", jaccardDenom)
+      .filter(col("jaccard") >= threshold)
+      .select(col(idA), col(idB), col("jaccard"))
+  }
+
+  /** The candidate-bounded verify of [[jaccardPairs]] and
+    * [[containmentPairs]]: only the hash sets of CANDIDATE docs reach
+    * the verify (semi-join first; the candidate set is bounded by
+    * actual near-dups + prefix collisions, while the full hash frame is
+    * O(corpus tokens) and must never reach the driver), pre-sorted as
+    * (doc_id, sh) for the merge intersection. Broadcast guard: a
+    * boilerplate-heavy corpus can push the candidate union past the
+    * executor broadcast limit, so [[verifyHint]] drops the broadcast
+    * past `budgetBytes` (shuffled keyed joins instead). `score` gets
+    * (candidates, candidate hash sets, hint). The result is
+    * O(actual near-dups) — tiny — and materialized eagerly so the
+    * scratch frames can be released instead of staying pinned for the
+    * session lifetime. */
+  private def verifyCandidates(hs: DataFrame, candidates: DataFrame, budgetBytes: Long)(
+      score: (DataFrame, DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val cands = candidates.persist()
+    try {
+      val candIds = cands.select(col("id_a").as("doc_id"))
+        .unionByName(cands.select(col("id_b").as("doc_id"))).distinct()
+      val hsC = hs.join(candIds, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), sort_array(col("hashes")).as("sh")).persist()
+      try {
+        val result = score(cands, hsC, verifyHint(hsC, budgetBytes)).persist()
+        result.count()
+        result
+      } finally hsC.unpersist()
+    } finally cands.unpersist()
+  }
+
+  /** The incremental screens' output: one row per `probes` key (its
+    * only column) — the `verified` (inc_id, idx_id, score) match with
+    * the highest score, tie → lowest idx_id, as best_match /
+    * best_<score>; never-matched probes carry NULLs and is_dup false. */
+  private def bestMatch(probes: DataFrame, verified: DataFrame, score: String): DataFrame = {
+    val key = probes.columns.head
+    val w = Window.partitionBy(col("inc_id")).orderBy(col(score).desc, col("idx_id"))
+    val best = verified.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("inc_id").as(key), col("idx_id").as("best_match"),
+        col(score).as(s"best_$score"))
+    probes.join(best, Seq(key), "left")
+      .withColumn("is_dup", col("best_match").isNotNull)
+      .select(col(key), col("is_dup"), col("best_match"), col(s"best_$score"))
   }
 
   /** Exact dedup on normalized text: canonical doc (min id) + group
@@ -54,22 +220,35 @@ object Dedup {
   private[graft] def withShingles(documents: DataFrame): DataFrame =
     reg(documents).select(col("doc_id"), expr(shingleHashes("text")).as("hashes"))
 
-  /** MinHash-LSH candidate pairs: docs sharing at least one band of
-    * the 32×2 signature. Output: (id_a, id_b, n_bands). */
-  def minhashBands(documents: DataFrame): DataFrame = {
-    val sigs = withShingles(documents)
-      .withColumn("sig", expr(minhashSig("hashes")))
-      .select(col("doc_id"), col("sig"))
-    val bands = sigs.select(col("doc_id"),
+  /** (doc_id, hashes, sig): the shingle set next to its MinHash
+    * signature. */
+  private def minhashSigs(documents: DataFrame): DataFrame =
+    withShingles(documents).withColumn("sig", expr(minhashSig("hashes")))
+
+  /** (doc_id, band, k1, k2): the 32 two-value bands of each `sig`,
+    * null-free. */
+  private def minhashBandRows(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"),
       explode(expr(s"transform(sequence(0, ${NumBands - 1}), b -> " +
         "struct(b AS band, element_at(sig, 2*b + 1) AS k1, element_at(sig, 2*b + 2) AS k2))")).as("bd"))
       .select(col("doc_id"), col("bd.band"), col("bd.k1"), col("bd.k2"))
       .filter(col("k1").isNotNull && col("k2").isNotNull)
-    val a = bands.select(col("doc_id").as("id_a"), col("band"), col("k1"), col("k2"))
-    val b = bands.select(col("doc_id").as("id_b"), col("band"), col("k1"), col("k2"))
-    a.join(b, Seq("band", "k1", "k2")).filter(col("id_a") < col("id_b"))
+
+  /** (id_a, id_b, n_bands): the band self-join, bucketed on
+    * (band, k1, k2). */
+  private def minhashBandPairs(sigs: DataFrame): DataFrame = {
+    val bands = minhashBandRows(sigs)
+    bands.select(col("doc_id").as("id_a"), col("band"), col("k1"), col("k2"))
+      .join(bands.select(col("doc_id").as("id_b"), col("band"), col("k1"), col("k2")),
+        Seq("band", "k1", "k2"))
+      .filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_bands"))
   }
+
+  /** MinHash-LSH candidate pairs: docs sharing at least one band of
+    * the 32×2 signature. Output: (id_a, id_b, n_bands). */
+  def minhashBands(documents: DataFrame): DataFrame =
+    minhashBandPairs(minhashSigs(documents))
 
   /** LSH bucket-skew diagnostics per band — the report that predicts
     * whether the [[minhashBands]] self-join survives at scale: bucket
@@ -81,16 +260,9 @@ object Dedup {
     *
     * Plan: one keyed count to bucket sizes, one keyed rollup per
     * band — strictly cheaper than the join it audits. */
-  def lshBucketStats(documents: DataFrame): DataFrame = {
-    val sigs = withShingles(documents)
-      .withColumn("sig", expr(minhashSig("hashes")))
-      .select(col("doc_id"), col("sig"))
-    val bands = sigs.select(col("doc_id"),
-      explode(expr(s"transform(sequence(0, ${NumBands - 1}), b -> " +
-        "struct(b AS band, element_at(sig, 2*b + 1) AS k1, element_at(sig, 2*b + 2) AS k2))")).as("bd"))
-      .select(col("doc_id"), col("bd.band"), col("bd.k1"), col("bd.k2"))
-      .filter(col("k1").isNotNull && col("k2").isNotNull)
-    bands.groupBy(col("band"), col("k1"), col("k2"))
+  def lshBucketStats(documents: DataFrame): DataFrame =
+    minhashBandRows(minhashSigs(documents))
+      .groupBy(col("band"), col("k1"), col("k2"))
       .agg(count(lit(1)).as("sz"))
       .groupBy(col("band"))
       .agg(count(lit(1)).as("n_buckets"),
@@ -99,7 +271,6 @@ object Dedup {
         round(expr("percentile(sz, 0.99D)") + lit(1e-9), 4).as("p99_bucket"),
         sum(expr("(sz * (sz - 1)) div 2")).as("candidate_pairs"))
       .orderBy(col("band"))
-  }
 
   /** Sketch calibration report: for every MinHash band candidate pair,
     * the signature-estimated Jaccard (matching positions / NumHashes)
@@ -113,30 +284,17 @@ object Dedup {
     * self-join is bucketed on (band, k1, k2); est and exact are
     * per-pair native/codegen array ops over the O(candidates) frame. */
   def minhashCalibration(documents: DataFrame): DataFrame = {
-    val sigs = withShingles(documents)
-      .withColumn("sig", expr(minhashSig("hashes")))
+    val sigs = minhashSigs(documents)
       .select(col("doc_id"), col("sig"), sort_array(col("hashes")).as("sh"))
       .persist()
     try {
-      val bands = sigs.select(col("doc_id"),
-        explode(expr(s"transform(sequence(0, ${NumBands - 1}), b -> " +
-          "struct(b AS band, element_at(sig, 2*b + 1) AS k1, element_at(sig, 2*b + 2) AS k2))")).as("bd"))
-        .select(col("doc_id"), col("bd.band"), col("bd.k1"), col("bd.k2"))
-        .filter(col("k1").isNotNull && col("k2").isNotNull)
-      val cand = bands.select(col("doc_id").as("id_a"), col("band"), col("k1"), col("k2"))
-        .join(bands.select(col("doc_id").as("id_b"), col("band"), col("k1"), col("k2")),
-          Seq("band", "k1", "k2"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_bands"))
-      val result = cand
+      val joined = minhashBandPairs(sigs)
         .join(sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a"), col("sh").as("h_a")), Seq("id_a"))
         .join(sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b"), col("sh").as("h_b")), Seq("id_b"))
         .withColumn("est", round(
           expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))") /
             lit(NumHashes.toDouble) + lit(1e-9), 6))
-        .withColumn("inter", expr("graft_sorted_overlap(h_a, h_b)").cast("double"))
-        .withColumn("exact", round(col("inter") /
-          (size(col("h_a")) + size(col("h_b")) - col("inter")) + lit(1e-9), 6))
+      val result = withOverlap(joined, "exact", jaccardDenom)
         .withColumn("abs_err", round(abs(col("est") - col("exact")) + lit(1e-9), 6))
         .select(col("id_a"), col("id_b"), col("n_bands"),
           col("est"), col("exact"), col("abs_err"))
@@ -153,77 +311,20 @@ object Dedup {
     * the globally hash-ordered element lists. Exploding only prefixes
     * (≈ |X|·(1−t/(1+t)) ≈ half the tokens at t=0.5) keeps the join
     * bucketed and sub-quadratic, and — unlike a probabilistic sketch —
-    * guarantees the verified output EQUALS the exact all-pairs result. */
-  /** Rare-first ranked prefix rows (doc_id, sz, h) — the shared
-    * candidate-generation index of [[prefixCandidates]] (self-join
-    * dedup) and [[incrementalDedup]] (increment-vs-index probe): the
-    * PPJoin prefix theorem needs the SAME global frequency order on
-    * both join sides, so the df ranking always comes from the FULL
-    * frame the two sides are drawn from. */
-  private def rankedPrefix(hashFrame: DataFrame, threshold: Double): DataFrame = {
-    val ex = hashFrame.select(col("doc_id"), size(col("hashes")).as("sz"),
-      explode(col("hashes")).as("h"))
-    val dfreq = ex.groupBy(col("h")).agg(count(lit(1)).as("dfreq"))
-    // shuffled-hash, never broadcast: both sides are corpus-sized (ex
-    // is O(tokens), dfreq O(vocabulary) — neither fits a driver
-    // broadcast at scale, and the cached-frame size estimate otherwise
-    // tempts the planner into building a driver HashedRelation over
-    // the ENTIRE exploded corpus per action). The build side is the
-    // narrow (h, dfreq) vocabulary slice; its aggregate already leaves
-    // the data hash-partitioned on h, so the join adds one exchange
-    // (ex) instead of one driver broadcast build per evaluation.
-    ex.join(dfreq.hint("shuffle_hash"), Seq("h"))
-      .groupBy(col("doc_id"), col("sz"))
-      .agg(collect_list(struct(col("dfreq"), col("h"))).as("ranked"))
-      // native (dfreq, h) sort + cut (graft.functions.PrefixCut): the
-      // composed slice(array_sort(...)) form pays an interpreted
-      // lambda per comparison of every per-doc sort
-      .select(col("doc_id"), col("sz"),
-        explode(expr("graft_prefix_cut(ranked, " +
-          s"cast(sz - ceil($threshold * sz - 1e-9) + 1 AS int))")).as("h"))
-  }
-
-  private[graft] def prefixCandidates(hashFrame: DataFrame, threshold: Double): DataFrame = {
-    // PPJoin orders every doc's shingles by GLOBAL document frequency,
-    // rarest first (ties on hash): the prefix principle is valid for
-    // any total order shared by all docs, but only the rare-first order
-    // keeps corpus-common shingles ("of the and"-style trigrams) out of
-    // every prefix — with a value-ordered prefix each common shingle
-    // forms a near-quadratic candidate clique; at corpus scale a single
-    // boilerplate trigram in prefixes is an O(df²) join group.
-    // The df map is computed from the same frame (one agg + one keyed
-    // join — no broadcast: at corpus scale it is O(vocabulary)).
-    //
-    // the 1e-9 nudge inside ceil (rankedPrefix) keeps the bound
-    // conservative when t*size is inexact in binary (e.g. 0.1*30 =
-    // 3.0000000000000004 would otherwise over-prune an
-    // exact-threshold pair). Per-doc prefix extraction is a hash
-    // aggregate + one local array sort of ≤ |doc| elements (cheaper
-    // than a sort-based window over the exploded frame).
-    //
-    // Pair enumeration is a single h-keyed bucket collapse + a
-    // partition-local double explode (the q_item_cf collapse), NOT a
-    // self-join: a join would evaluate the whole ranked-prefix subtree
-    // once per side (ReusedExchange shares only the exchange, not the
-    // collect/sort/explode above it) and broadcast one side per
-    // action. Pair volume is identical — every (id_a < id_b) pair
-    // sharing a prefix hash, size-filtered — so the distinct output
-    // EQUALS the self-join's row-for-row. Bucket sizes are bounded by
-    // the rare-first ranking (a hash of document frequency k yields at
-    // most k prefix rows, and common shingles never enter prefixes).
-    val p = rankedPrefix(hashFrame, threshold)
-    p.groupBy(col("h"))
-      .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .select(explode(col("ds")).as("a"), col("ds"))
-      .select(col("a"), explode(col("ds")).as("b"))
-      // PPJoin length filter: J >= t forces t*|A| <= |B| <= |A|/t —
-      // prunes size-mismatched collisions before the distinct/verify
-      .filter(col("a.doc_id") < col("b.doc_id") &&
-        col("b.sz") >= ceil(col("a.sz") * threshold - lit(1e-9)) &&
-        col("b.sz") <= col("a.sz") / threshold + lit(1e-9))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b")).distinct()
-  }
+    * guarantees the verified output EQUALS the exact all-pairs result.
+    *
+    * PPJoin orders every doc's shingles by GLOBAL document frequency,
+    * rarest first (ties on hash): the prefix principle is valid for any
+    * total order shared by all docs, but only the rare-first order
+    * keeps corpus-common shingles ("of the and"-style trigrams) out of
+    * every prefix — with a value-ordered prefix each common shingle
+    * forms a near-quadratic candidate clique; at corpus scale a single
+    * boilerplate trigram in prefixes is an O(df²) join group. The df
+    * map is computed from the same frame (one agg + one keyed join —
+    * no broadcast: at corpus scale it is O(vocabulary)); pairs come
+    * from the [[bucketPairs]] collapse. */
+  private[graft] def prefixCandidates(hashFrame: DataFrame, threshold: Double): DataFrame =
+    bucketPairs(prefixPostings(selfRankedPrefix(hashFrame, threshold)), threshold)
 
   /** Near-duplicate pairs with exact word-3-shingle Jaccard ≥ threshold,
     * sketch-accelerated: k-min sketch proposes candidates, exact
@@ -258,47 +359,12 @@ object Dedup {
     * the caller; the returned frame is eagerly persisted like
     * [[jaccardPairs]]'. */
   private[graft] def jaccardPairsFromHashes(hs: DataFrame, threshold: Double,
-      verifyBroadcastBytes: Long = 64L << 20): DataFrame = {
+      verifyBroadcastBytes: Long = 64L << 20): DataFrame =
     // verify on the (distinct) shingle HASH sets: integer intersection
-    // is much cheaper than string-array intersection. Only the hash
-    // sets of CANDIDATE docs are broadcast (semi-join first): the
-    // candidate set is bounded by actual near-dups + sketch collisions,
-    // while the full per-doc hash frame is O(corpus tokens) and must
-    // never reach the driver.
-    val cands = prefixCandidates(hs, threshold).persist()
-    try {
-      val candIds = cands.select(col("id_a").as("doc_id"))
-        .unionByName(cands.select(col("id_b").as("doc_id"))).distinct()
-      // pre-sorted hash arrays let the verify run an allocation-free
-      // native merge intersection (SortedOverlap) instead of building
-      // an array_intersect hash set per candidate pair
-      val hsC = hs.join(candIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), sort_array(col("hashes")).as("hashes")).persist()
-      try {
-        // Broadcast guard (the one scale seam round 7 left open): hsC
-        // is bounded by actual near-dups + prefix collisions — tiny on
-        // a healthy corpus, but a boilerplate-heavy 100 TB corpus can
-        // push the candidate union past the executor broadcast limit.
-        // [[verifyHint]] estimates the payload and drops the broadcast
-        // hints past the budget (shuffled keyed joins instead).
-        val hinted = verifyHint(hsC, verifyBroadcastBytes)
-        // the result is O(actual near-dups) — tiny; materialize it
-        // eagerly so the three scratch frames above can be released
-        // instead of staying pinned for the session lifetime
-        val result = cands
-          .join(hinted(hsC.select(col("doc_id").as("id_a"), col("hashes").as("h_a"))), Seq("id_a"))
-          .join(hinted(hsC.select(col("doc_id").as("id_b"), col("hashes").as("h_b"))), Seq("id_b"))
-          .withColumn("inter", expr("graft_sorted_overlap(h_a, h_b)").cast("double"))
-          .withColumn("jaccard", round(col("inter") /
-            (size(col("h_a")) + size(col("h_b")) - col("inter")) + lit(1e-9), 6))
-          .filter(col("jaccard") >= threshold)
-          .select(col("id_a"), col("id_b"), col("jaccard"))
-          .persist()
-        result.count()
-        result
-      } finally hsC.unpersist()
-    } finally cands.unpersist()
-  }
+    // is much cheaper than string-array intersection
+    verifyCandidates(hs, prefixCandidates(hs, threshold), verifyBroadcastBytes) {
+      (cands, hsC, hint) => verifyJaccard(cands, hsC, hsC, threshold, hint)
+    }
 
   /** Incremental near-dup screening — the production shape a live
     * pipeline actually runs: a NEW shard (the deterministic
@@ -308,7 +374,7 @@ object Dedup {
     * whether it duplicates the index, its best match (max Jaccard, tie
     * → lowest index id) and the score; never-matched docs carry NULLs.
     *
-    * Candidate generation reuses the PPJoin [[rankedPrefix]] with the
+    * Candidate generation reuses the PPJoin [[selfRankedPrefix]] with the
     * GLOBAL df order from the full frame (the prefix theorem needs the
     * same total order on both sides), joined increment-side ×
     * index-side with the usual length filter — complete at the
@@ -330,37 +396,15 @@ object Dedup {
     *       once consumed. */
   def incrementalDedup(documents: DataFrame, threshold: Double = 0.5,
       mod: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val hs = withShingles(documents).select(col("doc_id"), col("hashes")).persist()
     hs.count()
     try {
-      val p = rankedPrefix(hs, threshold)
-      val a = p.filter(col("doc_id") % mod === 0)
-        .select(col("doc_id").as("inc_id"), col("sz").as("sz_a"), col("h"))
-      val b = p.filter(col("doc_id") % mod =!= 0)
-        .select(col("doc_id").as("idx_id"), col("sz").as("sz_b"), col("h"))
-      val cands = a.join(b, Seq("h"))
-        .filter(col("sz_b") >= ceil(col("sz_a") * threshold - lit(1e-9)) &&
-          col("sz_b") <= col("sz_a") / threshold + lit(1e-9))
-        .select(col("inc_id"), col("idx_id")).distinct()
+      val p = prefixPostings(selfRankedPrefix(hs, threshold))
+      val cands = crossPairs(p.filter(col("doc_id") % mod === 0),
+        p.filter(col("doc_id") % mod =!= 0), threshold)
       val sortedH = hs.select(col("doc_id"), sort_array(col("hashes")).as("sh"))
-      val verified = cands
-        .join(sortedH.select(col("doc_id").as("inc_id"), col("sh").as("h_a")), Seq("inc_id"))
-        .join(sortedH.select(col("doc_id").as("idx_id"), col("sh").as("h_b")), Seq("idx_id"))
-        .withColumn("inter", expr("graft_sorted_overlap(h_a, h_b)").cast("double"))
-        .withColumn("jaccard", round(col("inter") /
-          (size(col("h_a")) + size(col("h_b")) - col("inter")) + lit(1e-9), 6))
-        .filter(col("jaccard") >= threshold)
-      val w = Window.partitionBy(col("inc_id")).orderBy(col("jaccard").desc, col("idx_id"))
-      val best = verified.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("inc_id").as("doc_id"), col("idx_id").as("best_match"),
-          col("jaccard").as("best_jaccard"))
-      val out = documents.select(col("doc_id"))
-        .filter(col("doc_id") % mod === 0)
-        .join(best, Seq("doc_id"), "left")
-        .withColumn("is_dup", col("best_match").isNotNull)
-        .select(col("doc_id"), col("is_dup"), col("best_match"), col("best_jaccard"))
+      val out = bestMatch(documents.select(col("doc_id")).filter(col("doc_id") % mod === 0),
+        verifyJaccard(cands, sortedH, sortedH, threshold), "jaccard")
         .persist()
       out.count()
       out
@@ -417,20 +461,10 @@ object Dedup {
     * whether to persist it — it is read twice here (prefix aggregate +
     * sorted-hashes join). */
   private def indexRows(hs: DataFrame, dfreq: DataFrame,
-      threshold: Double): DataFrame = {
-    val ex = hs.select(col("doc_id"), size(col("hashes")).as("sz"),
-      explode(col("hashes")).as("h"))
-    val prefix = ex.join(dfreq, Seq("h"), "left")
-      .withColumn("dfreq", coalesce(col("dfreq"), lit(0L)))
-      .groupBy(col("doc_id"), col("sz"))
-      .agg(collect_list(struct(col("dfreq"), col("h"))).as("ranked"))
-      .select(col("doc_id"), col("sz"),
-        expr("graft_prefix_cut(ranked, " +
-          s"cast(sz - ceil($threshold * sz - 1e-9) + 1 AS int))").as("prefix"))
+      threshold: Double): DataFrame =
     hs.select(col("doc_id"), sort_array(col("hashes")).as("sh"))
-      .join(prefix, Seq("doc_id"))
+      .join(frozenRankedPrefix(hs, dfreq, threshold), Seq("doc_id"))
       .select(col("doc_id"), col("sz"), col("sh"), col("prefix"))
-  }
 
   /** Build the [[TextIndexSnapshot]] for an index corpus — ONE
     * shingle pass over the 100 TB side (shingle, df-rank, prefix-cut,
@@ -519,24 +553,9 @@ object Dedup {
     * the increment under the SNAPSHOT's df order (unseen shingles take
     * df 0 → rarest); length-filtered, distinct. */
   private[graft] def snapshotPrefixCandidates(hsInc: DataFrame,
-      snapshot: TextIndexSnapshot): DataFrame = {
-    val threshold = snapshot.threshold
-    val exI = hsInc.select(col("doc_id"), size(col("hashes")).as("sz"),
-      explode(col("hashes")).as("h"))
-    val a = exI.join(snapshot.dfreq, Seq("h"), "left")
-      .withColumn("dfreq", coalesce(col("dfreq"), lit(0L)))
-      .groupBy(col("doc_id"), col("sz"))
-      .agg(collect_list(struct(col("dfreq"), col("h"))).as("ranked"))
-      .select(col("doc_id").as("inc_id"), col("sz").as("sz_a"),
-        explode(expr("graft_prefix_cut(ranked, " +
-          s"cast(sz - ceil($threshold * sz - 1e-9) + 1 AS int))")).as("h"))
-    val b = snapshot.index.select(col("doc_id").as("idx_id"),
-      col("sz").as("sz_b"), explode(col("prefix")).as("h"))
-    a.join(b, Seq("h"))
-      .filter(col("sz_b") >= ceil(col("sz_a") * threshold - lit(1e-9)) &&
-        col("sz_b") <= col("sz_a") / threshold + lit(1e-9))
-      .select(col("inc_id"), col("idx_id")).distinct()
-  }
+      snapshot: TextIndexSnapshot): DataFrame =
+    crossPairs(prefixPostings(frozenRankedPrefix(hsInc, snapshot.dfreq, snapshot.threshold)),
+      prefixPostings(snapshot.index), snapshot.threshold)
 
   /** ALL exact-verified (inc_id, idx_id, jaccard) cross-side pairs of
     * an increment's shingle frame against a snapshot — the complete
@@ -545,16 +564,9 @@ object Dedup {
     * maintenance, [[mergeComponents]]) rather than the best match. */
   private[graft] def snapshotVerifiedPairs(hsInc: DataFrame,
       snapshot: TextIndexSnapshot): DataFrame =
-    snapshotPrefixCandidates(hsInc, snapshot)
-      .join(hsInc.select(col("doc_id").as("inc_id"),
-        sort_array(col("hashes")).as("h_a")), Seq("inc_id"))
-      .join(snapshot.index.select(col("doc_id").as("idx_id"),
-        col("sh").as("h_b")), Seq("idx_id"))
-      .withColumn("inter", expr("graft_sorted_overlap(h_a, h_b)").cast("double"))
-      .withColumn("jaccard", round(col("inter") /
-        (size(col("h_a")) + size(col("h_b")) - col("inter")) + lit(1e-9), 6))
-      .filter(col("jaccard") >= snapshot.threshold)
-      .select(col("inc_id"), col("idx_id"), col("jaccard"))
+    verifyJaccard(snapshotPrefixCandidates(hsInc, snapshot),
+      hsInc.select(col("doc_id"), sort_array(col("hashes")).as("sh")),
+      snapshot.index, snapshot.threshold)
 
   /** EXACT within-index near-dup pairs derived from the snapshot
     * artifact alone — [[jaccardPairs]] over the index corpus WITHOUT
@@ -569,33 +581,9 @@ object Dedup {
     *
     * This is what lets a day-0 replay (build snapshot + batch labels)
     * pay the 100 TB shingle/df/prefix pass ONCE instead of twice. */
-  private[graft] def selfPairsFromSnapshot(snapshot: TextIndexSnapshot): DataFrame = {
-    val threshold = snapshot.threshold
-    // same h-keyed bucket collapse as [[prefixCandidates]] (one
-    // evaluation of the exploded-prefix frame + one exchange, vs a
-    // self-join that scans the artifact once per side); pair set
-    // identical: every (id_a < id_b) pair sharing a prefix hash,
-    // size-filtered
-    val p = snapshot.index.select(col("doc_id"), col("sz"),
-      explode(col("prefix")).as("h"))
-    val cands = p.groupBy(col("h"))
-      .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .select(explode(col("ds")).as("a"), col("ds"))
-      .select(col("a"), explode(col("ds")).as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id") &&
-        col("b.sz") >= ceil(col("a.sz") * threshold - lit(1e-9)) &&
-        col("b.sz") <= col("a.sz") / threshold + lit(1e-9))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b")).distinct()
-    cands
-      .join(snapshot.index.select(col("doc_id").as("id_a"), col("sh").as("h_a")), Seq("id_a"))
-      .join(snapshot.index.select(col("doc_id").as("id_b"), col("sh").as("h_b")), Seq("id_b"))
-      .withColumn("inter", expr("graft_sorted_overlap(h_a, h_b)").cast("double"))
-      .withColumn("jaccard", round(col("inter") /
-        (size(col("h_a")) + size(col("h_b")) - col("inter")) + lit(1e-9), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+  private[graft] def selfPairsFromSnapshot(snapshot: TextIndexSnapshot): DataFrame =
+    verifyJaccard(bucketPairs(prefixPostings(snapshot.index), snapshot.threshold),
+      snapshot.index, snapshot.index, snapshot.threshold)
 
   /** [[components]] of the INDEX corpus computed off its snapshot
     * artifact — identical labels (the pair set equals
@@ -621,22 +609,12 @@ object Dedup {
     * index side is the 100 TB one); per-increment argmax window. */
   def incrementalDedupWithSnapshot(incrementDocs: DataFrame,
       snapshot: TextIndexSnapshot): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val threshold = snapshot.threshold
     val hsInc = withShingles(incrementDocs)
       .select(col("doc_id"), col("hashes")).persist()
     hsInc.count()
     try {
-      val verified = snapshotVerifiedPairs(hsInc, snapshot)
-      val w = Window.partitionBy(col("inc_id")).orderBy(col("jaccard").desc, col("idx_id"))
-      val best = verified.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("inc_id").as("doc_id"), col("idx_id").as("best_match"),
-          col("jaccard").as("best_jaccard"))
-      val out = incrementDocs.select(col("doc_id"))
-        .join(best, Seq("doc_id"), "left")
-        .withColumn("is_dup", col("best_match").isNotNull)
-        .select(col("doc_id"), col("is_dup"), col("best_match"), col("best_jaccard"))
+      val out = bestMatch(incrementDocs.select(col("doc_id")),
+        snapshotVerifiedPairs(hsInc, snapshot), "jaccard")
         .persist()
       out.count()
       out
@@ -693,50 +671,29 @@ object Dedup {
       verifyBroadcastBytes: Long = 64L << 20): DataFrame = {
     val hs = withShingles(documents).select(col("doc_id"), col("hashes")).persist()
     hs.count()
-    val ex = hs.select(col("doc_id"), size(col("hashes")).as("sz"),
-      explode(col("hashes")).as("h"))
-    val dfreq = ex.groupBy(col("h")).agg(count(lit(1)).as("dfreq"))
-    // probe prefixes: rare-first, length |X| − ⌈t·|X|⌉ + 1
-    val prefix = ex.join(dfreq, Seq("h"))
-      .groupBy(col("doc_id"), col("sz"))
-      .agg(collect_list(struct(col("dfreq"), col("h"))).as("ranked"))
-      .select(col("doc_id"), col("sz"),
-        explode(expr("graft_prefix_cut(ranked, " +
-          s"cast(sz - ceil($threshold * sz - 1e-9) + 1 AS int))")).as("h"))
-    // full postings on the other side: the probe is valid whenever the
-    // probing doc is the smaller of the pair, so keep sz_a <= sz_b and
-    // canonicalize ids afterwards
-    val full = ex.select(col("doc_id").as("id_b"), col("sz").as("sz_b"), col("h"))
-    val cands = prefix
-      .select(col("doc_id").as("id_a"), col("sz").as("sz_a"), col("h"))
-      .join(full, Seq("h"))
-      .filter(col("id_a") =!= col("id_b") &&
-        (col("sz_a") < col("sz_b") ||
-          (col("sz_a") === col("sz_b") && col("id_a") < col("id_b"))))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-      .distinct().persist()
     try {
-      val candIds = cands.select(col("id_a").as("doc_id"))
-        .unionByName(cands.select(col("id_b").as("doc_id"))).distinct()
-      val hsC = hs.join(candIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), sort_array(col("hashes")).as("hashes")).persist()
-      try {
-        val hinted = verifyHint(hsC, verifyBroadcastBytes)
-        val result = cands
-          .join(hinted(hsC.select(col("doc_id").as("id_a"), col("hashes").as("h_a"))), Seq("id_a"))
-          .join(hinted(hsC.select(col("doc_id").as("id_b"), col("hashes").as("h_b"))), Seq("id_b"))
-          .withColumn("inter", expr("graft_sorted_overlap(h_a, h_b)").cast("double"))
-          .withColumn("containment", round(col("inter") /
-            least(size(col("h_a")), size(col("h_b"))) + lit(1e-9), 6))
+      // probe prefixes: rare-first, length |X| − ⌈t·|X|⌉ + 1; full
+      // postings on the other side: the probe is valid whenever the
+      // probing doc is the smaller of the pair, so keep sz_a <= sz_b and
+      // canonicalize ids afterwards
+      val full = shingleRows(hs).select(col("doc_id").as("id_b"), col("sz").as("sz_b"), col("h"))
+      val cands = prefixPostings(selfRankedPrefix(hs, threshold))
+        .select(col("doc_id").as("id_a"), col("sz").as("sz_a"), col("h"))
+        .join(full, Seq("h"))
+        .filter(col("id_a") =!= col("id_b") &&
+          (col("sz_a") < col("sz_b") ||
+            (col("sz_a") === col("sz_b") && col("id_a") < col("id_b"))))
+        .select(least(col("id_a"), col("id_b")).as("id_a"),
+          greatest(col("id_a"), col("id_b")).as("id_b"))
+        .distinct()
+      verifyCandidates(hs, cands, verifyBroadcastBytes) { (c, hsC, hint) =>
+        withOverlap(pairHashes(c, hsC, hsC, hint), "containment",
+          least(size(col("h_a")), size(col("h_b"))))
           .filter(col("containment") >= threshold)
           .select(col("id_a"), col("id_b"), size(col("h_a")).as("sz_a"),
             size(col("h_b")).as("sz_b"), col("containment"))
-          .persist()
-        result.count()
-        result
-      } finally hsC.unpersist()
-    } finally { cands.unpersist(); hs.unpersist() }
+      }
+    } finally hs.unpersist()
   }
 
   /** Duplicate-cluster canonicalization — the final step of a dedup
@@ -937,22 +894,33 @@ object Dedup {
     // composed HOF form (TextFns.simhash) re-walks the token array 60
     // times per doc interpreted — LlmSpec proves both bit-identical
     val sigs = reg(documents)
-      .withColumn("sim", expr("graft_simhash_text(text)"))
-      .select(col("doc_id"), col("sim"))
-    val m = (1 << SimHashBandBits) - 1 // 15-bit band mask
-    val keyed = sigs.select(col("doc_id"), col("sim"),
-        posexplode(array(
-          expr(s"sim & $m"),
-          expr(s"shiftright(sim, ${SimHashBandBits}) & $m"),
-          expr(s"shiftright(sim, ${2 * SimHashBandBits}) & $m"),
-          expr(s"shiftright(sim, ${3 * SimHashBandBits}) & $m"))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    val a = keyed.select(col("doc_id").as("id_a"), col("sim").as("sim_a"), col("band"), col("bucket"))
-    val b = keyed.select(col("doc_id").as("id_b"), col("sim").as("sim_b"), col("band"), col("bucket"))
-    a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        expr("bit_count(sim_a ^ sim_b)").as("hamming")).distinct()
+      .select(col("doc_id"), expr("graft_simhash_text(text)").as("sig"))
+    bandedHammingCandidates(sigs, 4, SimHashBandBits)
       .filter(col("hamming") <= maxHamming)
+  }
+
+  /** Pigeonhole banded-Hamming candidates over (doc_id, sig) 64-bit
+    * signatures, shared by [[simhashPairs]] and
+    * graft.multimodal.Multimodal.imagePhash: the `bands` low
+    * `bandBits`-bit slices of `sig` are the (band, bucket) keys of ONE
+    * keyed self-equi-join; output (id_a, id_b, hamming), distinct,
+    * before the caller's radius filter. A pair within Hamming
+    * < `bands` differs in at most bands − 1 slices, so it shares a
+    * bucket: recall is exactly 1 and the output equals the all-pairs
+    * result. The mask also strips the arithmetic-shift sign extension
+    * when bit 63 is set. */
+  private[graft] def bandedHammingCandidates(sigs: DataFrame, bands: Int,
+      bandBits: Int): DataFrame = {
+    val mask = (1L << bandBits) - 1
+    val keyed = sigs.select(col("doc_id"), col("sig"),
+        posexplode(expr(s"transform(sequence(0, ${bands - 1}), " +
+          s"b -> shiftright(sig, b * $bandBits) & $mask)")))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+    val a = keyed.select(col("doc_id").as("id_a"), col("sig").as("sig_a"), col("band"), col("bucket"))
+    val b = keyed.select(col("doc_id").as("id_b"), col("sig").as("sig_b"), col("band"), col("bucket"))
+    a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), expr("bit_count(sig_a ^ sig_b)").as("hamming"))
+      .distinct()
   }
 
   /** Embedding near-duplicates: EXACT cosine ≥ threshold pairs, block
@@ -979,12 +947,7 @@ object Dedup {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val B = nBlocks
-    val vecs = reg(embeddings).select(
-      col("vec_id").cast("long").as("id"),
-      expr("transform(embedding, x -> cast(x AS double))").as("emb"),
-      expr("sqrt(graft_dot(embedding, embedding))").as("nrm"))
-      .as[(Long, Array[Double], Double)]
-    val replicated = vecs.flatMap { case (id, emb, nrm) =>
+    val replicated = prepVecs(embeddings).flatMap { case (id, emb, nrm) =>
       // floorMod: a negative id must land in [0, B) like everyone else —
       // (id % B) would put it in a phantom negative block that only ever
       // appears as the 'lo' side of non-diagonal groups, so two
@@ -1036,24 +999,9 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
 
-  /** CROSS-SIDE exact cosine pairs for the incremental screen: the
-    * increment side (vec_id % mod == 0) scored against the index side
-    * only — [[embeddingPairs]]' block decomposition restricted to
-    * inc-block × idx-block groups, so not one index×index (or
-    * increment×increment) dot product is ever computed. Each side
-    * blocks independently on floorMod(id, B); an increment vector
-    * replicates to its B (incBlk, ·) groups, an index vector to its B
-    * (·, idxBlk) groups — shuffle stays O(n·B) vector rows, per-task
-    * memory O(d·n/B) per side, compute exactly |inc|·|idx|·d (the
-    * cross-side share; the previous shape scored the full corpus and
-    * discarded ~81% of the work at a 10% increment). Same in-order
-    * dot product and rounding as [[embeddingPairs]], so the verified
-    * frame is bit-identical to filtering its output cross-side.
-    *
-    * `scored` (spec instrumentation only) counts dot products. */
   /** Normalized (id, double-vector, norm) rows for the exact-cosine
     * operators — also the [[buildEmbeddingIndexSnapshot]] payload. */
-  private def prepVecs(embeddings: DataFrame) = {
+  private def prepVecs(embeddings: DataFrame): Dataset[(Long, Array[Double], Double)] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     reg(embeddings).select(
@@ -1063,12 +1011,31 @@ object Dedup {
       .as[(Long, Array[Double], Double)]
   }
 
+  /** Fans each (id, emb, nrm) vector out to the B cross-score groups
+    * it belongs to, keyed incBlk * B + idxBlk with blocks
+    * floorMod(id, B): an increment vector (`isInc`) across the idx
+    * dimension, an index vector across the inc one — the
+    * (groupKey, isIncrement, id, emb, norm) rows [[crossScore]] takes. */
+  private def crossReplicate(vecs: Dataset[(Long, Array[Double], Double)], nBlocks: Int)(
+      isInc: Long => Boolean): Dataset[(Int, Boolean, Long, Array[Double], Double)] = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val B = nBlocks
+    vecs.flatMap { case (id, emb, nrm) =>
+      val inc = isInc(id)
+      val blk = java.lang.Math.floorMod(id, B.toLong).toInt
+      (0 until B).iterator.map { other =>
+        (if (inc) blk * B + other else other * B + blk, inc, id, emb, nrm)
+      }
+    }
+  }
+
   /** The grouped cross-side scorer behind both incremental embedding
     * screens: `replicated` carries (groupKey, isIncrement, id, emb,
     * norm) rows fanned out so every (incBlk, idxBlk) group holds both
     * sides; each group scores inc×idx only. */
   private def crossScore(
-      replicated: org.apache.spark.sql.Dataset[(Int, Boolean, Long, Array[Double], Double)],
+      replicated: Dataset[(Int, Boolean, Long, Array[Double], Double)],
       threshold: Double,
       scored: Option[org.apache.spark.util.LongAccumulator]): DataFrame = {
     val spark = replicated.sparkSession
@@ -1104,24 +1071,26 @@ object Dedup {
       .select(col("inc_id"), col("idx_id"), col("cosine"))
   }
 
+  /** CROSS-SIDE exact cosine pairs for the incremental screen: the
+    * increment side (vec_id % mod == 0) scored against the index side
+    * only — [[embeddingPairs]]' block decomposition restricted to
+    * inc-block × idx-block groups, so not one index×index (or
+    * increment×increment) dot product is ever computed. Each side
+    * blocks independently on floorMod(id, B); an increment vector
+    * replicates to its B (incBlk, ·) groups, an index vector to its B
+    * (·, idxBlk) groups — shuffle stays O(n·B) vector rows, per-task
+    * memory O(d·n/B) per side, compute exactly |inc|·|idx|·d (the
+    * cross-side share; the previous shape scored the full corpus and
+    * discarded ~81% of the work at a 10% increment). Same in-order
+    * dot product and rounding as [[embeddingPairs]], so the verified
+    * frame is bit-identical to filtering its output cross-side.
+    *
+    * `scored` (spec instrumentation only) counts dot products. */
   private[graft] def embeddingCrossPairs(embeddings: DataFrame, threshold: Double,
       mod: Int, nBlocks: Int = 16,
-      scored: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val B = nBlocks
-    val replicated = prepVecs(embeddings).flatMap { case (id, emb, nrm) =>
-      val isInc = java.lang.Math.floorMod(id, mod.toLong) == 0L
-      val blk = java.lang.Math.floorMod(id, B.toLong).toInt
-      // group key = incBlk * B + idxBlk: an increment vector fans out
-      // across the idx dimension, an index vector across the inc one
-      (0 until B).iterator.map { other =>
-        val key = if (isInc) blk * B + other else other * B + blk
-        (key, isInc, id, emb, nrm)
-      }
-    }
-    crossScore(replicated, threshold, scored)
-  }
+      scored: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
+    crossScore(crossReplicate(prepVecs(embeddings), nBlocks)(
+      id => java.lang.Math.floorMod(id, mod.toLong) == 0L), threshold, scored)
 
   /** Incremental embedding near-dup screening — [[incrementalDedup]]'s
     * vector twin: the NEW embedding shard (vec_id % mod == 0) probes
@@ -1138,19 +1107,9 @@ object Dedup {
     * block join is the shape that stays valid even when a backfill
     * makes the "increment" corpus-sized. */
   def embeddingIncremental(embeddings: DataFrame, threshold: Double = 0.4,
-      mod: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val crossSide = embeddingCrossPairs(embeddings, threshold, mod)
-    val w = Window.partitionBy(col("inc_id")).orderBy(col("cosine").desc, col("idx_id"))
-    val best = crossSide.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("inc_id").as("vec_id"), col("idx_id").as("best_match"),
-        col("cosine").as("best_cosine"))
-    embeddings.select(col("vec_id")).filter(col("vec_id") % mod === 0)
-      .join(best, Seq("vec_id"), "left")
-      .withColumn("is_dup", col("best_match").isNotNull)
-      .select(col("vec_id"), col("is_dup"), col("best_match"), col("best_cosine"))
-  }
+      mod: Int = 10): DataFrame =
+    bestMatch(embeddings.select(col("vec_id")).filter(col("vec_id") % mod === 0),
+      embeddingCrossPairs(embeddings, threshold, mod), "cosine")
 
   /** Persisted embedding-index artifact — [[TextIndexSnapshot]]'s
     * vector twin: the index side's double vectors and L2 norms,
@@ -1173,27 +1132,10 @@ object Dedup {
       nBlocks: Int = 16): DataFrame = {
     val spark = incrementEmbeddings.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val B = nBlocks
-    val incRep = prepVecs(incrementEmbeddings).flatMap { case (id, emb, nrm) =>
-      val blk = java.lang.Math.floorMod(id, B.toLong).toInt
-      (0 until B).iterator.map(other => (blk * B + other, true, id, emb, nrm))
-    }
-    val idxRep = snapshot.as[(Long, Array[Double], Double)].flatMap {
-      case (id, emb, nrm) =>
-        val blk = java.lang.Math.floorMod(id, B.toLong).toInt
-        (0 until B).iterator.map(other => (other * B + blk, false, id, emb, nrm))
-    }
-    val crossSide = crossScore(incRep.union(idxRep), threshold, None)
-    val w = Window.partitionBy(col("inc_id")).orderBy(col("cosine").desc, col("idx_id"))
-    val best = crossSide.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("inc_id").as("vec_id"), col("idx_id").as("best_match"),
-        col("cosine").as("best_cosine"))
-    incrementEmbeddings.select(col("vec_id"))
-      .join(best, Seq("vec_id"), "left")
-      .withColumn("is_dup", col("best_match").isNotNull)
-      .select(col("vec_id"), col("is_dup"), col("best_match"), col("best_cosine"))
+    val incRep = crossReplicate(prepVecs(incrementEmbeddings), nBlocks)(_ => true)
+    val idxRep = crossReplicate(snapshot.as[(Long, Array[Double], Double)], nBlocks)(_ => false)
+    bestMatch(incrementEmbeddings.select(col("vec_id")),
+      crossScore(incRep.union(idxRep), threshold, None), "cosine")
   }
 
   /** Persisted LSH embedding-index artifact — the SUB-QUADRATIC twin
@@ -1229,11 +1171,15 @@ object Dedup {
     }
   }
 
-  /** (id, band, sig) hyperplane band signatures for one corpus side. */
+  /** (id, extra…, band, sig) hyperplane band signatures for one
+    * corpus side: `bands`×`rowsPerBand` sign bits of the
+    * splitmix64-hashed hyperplane family — component(pj, i)
+    * deterministic in plane index pj and dimension i, native
+    * single-loop signatures (graft.functions.HyperplaneBands). */
   private def lshSigRows(embeddings: DataFrame, bands: Int,
-      rowsPerBand: Int): DataFrame =
-    reg(embeddings).select(col("vec_id").cast("long").as("id"),
-        posexplode(expr(s"graft_hyperplane_bands(embedding, $bands, $rowsPerBand)")))
+      rowsPerBand: Int, extra: Column*): DataFrame =
+    reg(embeddings).select((col("vec_id").cast("long").as("id") +: extra) :+
+        posexplode(expr(s"graft_hyperplane_bands(embedding, $bands, $rowsPerBand)")): _*)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "sig")
 
   /** Build the [[EmbeddingLshSnapshot]] for an index corpus — one pass
@@ -1288,7 +1234,6 @@ object Dedup {
     * exchange-free). */
   def embeddingIncrementalWithLshSnapshot(incrementEmbeddings: DataFrame,
       snapshot: EmbeddingLshSnapshot, threshold: Double = 0.4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cand = embeddingLshSnapshotCandidates(incrementEmbeddings, snapshot)
     val incVecs = prepVecs(incrementEmbeddings).toDF("id", "emb", "nrm")
     val scored = cand
@@ -1300,15 +1245,7 @@ object Dedup {
         round(expr("graft_dot(ea, eb)") / (col("na") * col("nb")) + lit(1e-9), 6))
       .filter(col("cosine") >= threshold)
       .select(col("inc_id"), col("idx_id"), col("cosine"))
-    val w = Window.partitionBy(col("inc_id")).orderBy(col("cosine").desc, col("idx_id"))
-    val best = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("inc_id").as("vec_id"), col("idx_id").as("best_match"),
-        col("cosine").as("best_cosine"))
-    incrementEmbeddings.select(col("vec_id"))
-      .join(best, Seq("vec_id"), "left")
-      .withColumn("is_dup", col("best_match").isNotNull)
-      .select(col("vec_id"), col("is_dup"), col("best_match"), col("best_cosine"))
+    bestMatch(incrementEmbeddings.select(col("vec_id")), scored, "cosine")
   }
 
   /** Banded hyperplane-LSH embedding near-dups — the sub-quadratic
@@ -1323,16 +1260,11 @@ object Dedup {
     * q_ann_lsh. */
   def embeddingPairsLsh(embeddings: DataFrame, threshold: Double = 0.4,
       bands: Int = 20, rowsPerBand: Int = 5): DataFrame = {
-    // splitmix64-hashed hyperplane family (graft_hyperplane_bands):
-    // component(pj, i) deterministic in plane index pj and dimension i —
-    // native single-loop signatures (graft.functions.HyperplaneBands)
-    val sigs = reg(embeddings).select(col("vec_id"), col("embedding"),
-        expr("sqrt(graft_dot(embedding, embedding))").as("nrm"),
-        posexplode(expr(s"graft_hyperplane_bands(embedding, $bands, $rowsPerBand)")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "sig")
-    val a = sigs.select(col("vec_id").as("id_a"), col("embedding").as("va"),
+    val sigs = lshSigRows(embeddings, bands, rowsPerBand, col("embedding"),
+      expr("sqrt(graft_dot(embedding, embedding))").as("nrm"))
+    val a = sigs.select(col("id").as("id_a"), col("embedding").as("va"),
       col("nrm").as("na"), col("band"), col("sig"))
-    val b = sigs.select(col("vec_id").as("id_b"), col("embedding").as("vb"),
+    val b = sigs.select(col("id").as("id_b"), col("embedding").as("vb"),
       col("nrm").as("nb"), col("band"), col("sig"))
     val dot = "graft_dot(va, vb)"
     // score at the collision site, THEN dedup multi-band collisions as
@@ -1353,11 +1285,9 @@ object Dedup {
     * exposed for the recall audit's candidate-share metric. */
   private[graft] def embeddingLshCandidates(embeddings: DataFrame,
       bands: Int = 20, rowsPerBand: Int = 5): DataFrame = {
-    val sigs = reg(embeddings).select(col("vec_id"),
-        posexplode(expr(s"graft_hyperplane_bands(embedding, $bands, $rowsPerBand)")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "sig")
-    sigs.select(col("vec_id").as("id_a"), col("band"), col("sig"))
-      .join(sigs.select(col("vec_id").as("id_b"), col("band"), col("sig")),
+    val sigs = lshSigRows(embeddings, bands, rowsPerBand)
+    sigs.select(col("id").as("id_a"), col("band"), col("sig"))
+      .join(sigs.select(col("id").as("id_b"), col("band"), col("sig")),
         Seq("band", "sig"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
@@ -1398,7 +1328,6 @@ object Dedup {
       .groupBy(col("h")).agg(count(lit(1)).as("df"))
     val dup = pos.join(dfreq.filter(col("df") >= 2), Seq("h"))
     // maximal runs of consecutive duplicate positions → word intervals
-    import org.apache.spark.sql.expressions.Window
     val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val runs = dup
       .withColumn("grp", col("pos") - row_number().over(wDoc))

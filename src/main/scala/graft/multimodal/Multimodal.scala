@@ -2959,18 +2959,8 @@ object Multimodal {
   def imagePhash(spark: SparkSession, documents: DataFrame,
       maxHamming: Int = 3): DataFrame = {
     val hashes = phashFrame(spark, documents)
-    // 16-bit bands: & 65535 also strips the arithmetic-shift sign
-    // extension when the MSB cell (bit 63) is set
-    val banded = hashes.select(col("doc_id"), col("phash"),
-      posexplode(expr("transform(sequence(0, 3), b -> shiftright(phash, b * 16) & 65535)")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    val a = banded.select(col("doc_id").as("id_a"), col("phash").as("h_a"),
-      col("band"), col("bucket"))
-    val b = banded.select(col("doc_id").as("id_b"), col("phash").as("h_b"),
-      col("band"), col("bucket"))
-    val pairs = a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        expr("bit_count(h_a ^ h_b)").as("hamming")).distinct()
+    val pairs = graft.dedup.Dedup.bandedHammingCandidates(
+      hashes.select(col("doc_id"), col("phash").as("sig")), 4, 16)
       .filter(col("hamming") <= maxHamming)
     countNearDups(hashes, pairs)
   }
@@ -3040,6 +3030,13 @@ object Multimodal {
   private[graft] def phashMihPairs(hashes: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming <= 3,
       s"2x32-bit MIH with 1-bit probes is complete only to hamming 3, got $maxHamming")
+    phashMihCandidates(hashes).filter(col("hamming") <= maxHamming)
+  }
+
+  /** [[phashMihPairs]]' candidates before the hamming filter:
+    * (id_a, id_b, hamming), distinct — the probe join the scale canary
+    * measures. */
+  private[graft] def phashMihCandidates(hashes: DataFrame): DataFrame = {
     val banded = hashes.select(col("doc_id"), col("phash"),
       posexplode(expr("transform(sequence(0, 1), b -> shiftright(phash, b * 32) & 4294967295)")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "v")
@@ -3052,7 +3049,6 @@ object Multimodal {
     exact.join(probes, Seq("band", "key")).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         expr("bit_count(h_a ^ h_b)").as("hamming")).distinct()
-      .filter(col("hamming") <= maxHamming)
   }
 
   /** [[imagePhash]]'s multi-index-hashing variant (Norouzi et al.,

@@ -52,6 +52,28 @@ object Streaming extends Serializable {
   def nearDupScreen(streamDocs: DataFrame, corpus: DataFrame): DataFrame =
     graft.dedup.Bloom.probe(streamDocs, graft.dedup.Bloom.build(corpus))
 
+  /** The at-least-once `foreachBatch` sink every maintained streaming
+    * pipeline below shares: [[attach]] runs [[update]] once per
+    * micro-batch, serialized on the instance, and skips a batchId at
+    * or below the last one processed — a batch redelivered after a
+    * restart must not be double-applied. */
+  trait AtLeastOnce {
+    @volatile private var lastBatchId: Long = -1L
+
+    /** Apply one micro-batch. */
+    def update(batch: DataFrame): Unit
+
+    def attach(stream: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
+      stream.writeStream
+        .outputMode("append")
+        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+          synchronized {
+            if (batchId > lastBatchId) { update(batch.toDF()); lastBatchId = batchId }
+          }
+        }
+        .start()
+  }
+
   /** Streaming twin of the incremental text screen — the Bloom band
     * screen's EXACT sibling: [[nearDupScreen]] answers "maybe dup"
     * per row from an 8 KiB sketch; this one runs the full PPJoin
@@ -67,23 +89,12 @@ object Streaming extends Serializable {
     * state (the index lives in the artifact, the maintained result is
     * O(screened docs)). foreachBatch is at-least-once, so a redelivered
     * batchId is skipped rather than double-screened. */
-  class IncrementalScreen(snapshot: graft.dedup.Dedup.TextIndexSnapshot) {
+  class IncrementalScreen(snapshot: graft.dedup.Dedup.TextIndexSnapshot) extends AtLeastOnce {
     @volatile private var resultFrame: Option[DataFrame] = None
-    @volatile private var lastBatchId: Long = -1L
 
     /** All screened rows so far (doc_id, is_dup, best_match,
       * best_jaccard) — one per arrived doc. */
     def results: Option[DataFrame] = resultFrame
-
-    def attach(streamDocs: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-      streamDocs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          synchronized {
-            if (batchId > lastBatchId) { update(batch.toDF()); lastBatchId = batchId }
-          }
-        }
-        .start()
 
     /** Screen one batch and fold it into the maintained result frame.
       * localCheckpoint (eager) truncates the per-batch union lineage,
@@ -121,25 +132,14 @@ object Streaming extends Serializable {
     * continuous ingest loses nothing vs the nightly batch job.
     * foreachBatch at-least-once: redelivered batchIds are skipped. */
   class ClusterMaintenance(initial: graft.dedup.Dedup.TextIndexSnapshot,
-      initialLabels: DataFrame) {
+      initialLabels: DataFrame) extends AtLeastOnce {
     @volatile private var snapshot = initial
     @volatile private var labelFrame: DataFrame = initialLabels.localCheckpoint(true)
-    @volatile private var lastBatchId: Long = -1L
 
     /** Current (doc_id, comp, comp_size) labels over every doc seen. */
     def labels: DataFrame = labelFrame
     /** The maintained index artifact (day-0 build + all appends). */
     def index: graft.dedup.Dedup.TextIndexSnapshot = snapshot
-
-    def attach(streamDocs: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-      streamDocs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          synchronized {
-            if (batchId > lastBatchId) { update(batch.toDF()); lastBatchId = batchId }
-          }
-        }
-        .start()
 
     def update(batch: DataFrame): Unit = synchronized {
       val b = batch.persist()
@@ -180,23 +180,12 @@ object Streaming extends Serializable {
     * O(screened vectors) with localCheckpoint-truncated lineage.
     * foreachBatch is at-least-once, so a redelivered batchId is
     * skipped rather than double-screened. */
-  class EmbeddingLshScreen(snapshot: graft.dedup.Dedup.EmbeddingLshSnapshot) {
+  class EmbeddingLshScreen(snapshot: graft.dedup.Dedup.EmbeddingLshSnapshot) extends AtLeastOnce {
     @volatile private var resultFrame: Option[DataFrame] = None
-    @volatile private var lastBatchId: Long = -1L
 
     /** All screened rows so far (vec_id, is_dup, best_match,
       * best_cosine) — one per arrived vector. */
     def results: Option[DataFrame] = resultFrame
-
-    def attach(streamVecs: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-      streamVecs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          synchronized {
-            if (batchId > lastBatchId) { update(batch.toDF()); lastBatchId = batchId }
-          }
-        }
-        .start()
 
     def update(batch: DataFrame): Unit = synchronized {
       val b = batch.persist()
@@ -263,28 +252,13 @@ object Streaming extends Serializable {
     * held as persisted DataFrames so MemoryStream tests can drive the
     * cycle deterministically. New stations require a one-time full
     * init, exactly like the reference's first-time station import. */
-  class ContinuousQc(spark: SparkSession) {
+  class ContinuousQc(spark: SparkSession) extends AtLeastOnce {
     import graft.tsdb.{Incremental, QualityCheck, Series}
     @volatile private var store: Option[DataFrame] = None
     @volatile private var qcFrame: Option[DataFrame] = None
-    @volatile private var lastBatchId: Long = -1L
 
     /** The maintained qc frame after all processed batches. */
     def qc: Option[DataFrame] = qcFrame
-
-    /** Attach to a streaming events frame (same schema as the batch
-      * events table); one incremental update per micro-batch.
-      * foreachBatch is at-least-once: a batch redelivered after a
-      * restart (same batchId) must not be double-counted. */
-    def attach(streamEvents: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-      streamEvents.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          synchronized {
-            if (batchId > lastBatchId) { update(batch.toDF()); lastBatchId = batchId }
-          }
-        }
-        .start()
 
     /** One import: append the batch, recompute only its day window.
       *
@@ -356,25 +330,14 @@ object Streaming extends Serializable {
     * rebuilt per batch (O(#virtual-station holes), tiny next to the
     * series). Same at-least-once batchId guard and localCheckpoint
     * lineage discipline as [[ContinuousQc]]. */
-  class ContinuousCycle(spark: SparkSession) {
+  class ContinuousCycle(spark: SparkSession) extends AtLeastOnce {
     import graft.tsdb.{Fillup, Incremental, QualityCheck, Richter, Series}
     @volatile private var store: Option[DataFrame] = None
     @volatile private var frames: Option[(DataFrame, DataFrame, DataFrame)] = None
-    @volatile private var lastBatchId: Long = -1L
 
     def qc: Option[DataFrame] = frames.map(_._1)
     def filled: Option[DataFrame] = frames.map(_._2)
     def corr: Option[DataFrame] = frames.map(_._3)
-
-    def attach(streamEvents: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-      streamEvents.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          synchronized {
-            if (batchId > lastBatchId) { update(batch.toDF()); lastBatchId = batchId }
-          }
-        }
-        .start()
 
     def update(batch: DataFrame): Unit = synchronized {
       val b = batch.persist()
@@ -435,30 +398,18 @@ object Streaming extends Serializable {
     * streaming history never moves, which is what makes the shape
     * viable on a 100 TB table. */
   class UpsertSink(path: String, keyCols: Seq[String],
-      partitionCol: String = "day") {
-    @volatile private var lastBatchId: Long = -1L
-
-    def attach(stream: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-      stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          synchronized {
-            if (batchId > lastBatchId) {
-              if (!batch.isEmpty) {
-                val spark = batch.sparkSession
-                val fs = new org.apache.hadoop.fs.Path(path)
-                  .getFileSystem(spark.sparkContext.hadoopConfiguration)
-                if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-                  graft.sources.Sources.mergeUpsert(
-                    spark, path, batch.toDF(), keyCols, partitionCol)
-                else
-                  batch.toDF().write.partitionBy(partitionCol).parquet(path)
-              }
-              lastBatchId = batchId
-            }
-          }
-        }
-        .start()
+      partitionCol: String = "day") extends AtLeastOnce {
+    def update(batch: DataFrame): Unit = synchronized {
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val fs = new org.apache.hadoop.fs.Path(path)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(new org.apache.hadoop.fs.Path(path)))
+          graft.sources.Sources.mergeUpsert(spark, path, batch, keyCols, partitionCol)
+        else
+          batch.write.partitionBy(partitionCol).parquet(path)
+      }
+    }
   }
 
   /** Streaming ingest dedup — the streaming twin of q_ingest_dedup's

@@ -119,49 +119,31 @@ object ScaleCanary {
     spark.stop()
   }
 
-  /** Image-phash banding canary (round 9): the actual 4×16-bit band
-    * self-join plan from Multimodal.imagePhash, run over a DIVERSE
-    * 64-bit hash corpus (xxhash64 of the id — the synthetic image
-    * closed form repeats hashes exactly, which is planted-dup
-    * structure, not collision noise). Candidate mass must grow
-    * ~4·n²/2¹⁷ — effectively near-linear at these sizes — where the
-    * round-8 4-bit bands (16 buckets per band) gave ~n²/8. */
+  /** Image-phash banding canary (round 9): the 4×16-bit band
+    * self-join Multimodal.imagePhash runs
+    * (Dedup.bandedHammingCandidates), over a DIVERSE 64-bit hash
+    * corpus (xxhash64 of the id — the synthetic image closed form
+    * repeats hashes exactly, which is planted-dup structure, not
+    * collision noise). Candidate mass must grow ~4·n²/2¹⁷ —
+    * effectively near-linear at these sizes — where the round-8 4-bit
+    * bands (16 buckets per band) gave ~n²/8. */
   private def phashCanary(spark: SparkSession): String = {
-    def leg(n: Long): (Long, Double) = {
-      val hashes = spark.range(n).select(col("id").as("doc_id"),
-        expr("xxhash64(id)").as("phash"))
-      val banded = hashes.select(col("doc_id"),
-        posexplode(expr("transform(sequence(0, 3), b -> shiftright(phash, b * 16) & 65535)")))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      val a = banded.select(col("doc_id").as("id_a"), col("band"), col("bucket"))
-      val b = banded.select(col("doc_id").as("id_b"), col("band"), col("bucket"))
+    def hashes(n: Long) = spark.range(n).select(col("id").as("doc_id"),
+      expr("xxhash64(id)").as("phash"))
+    // candidate mass BEFORE the hamming filter — the verify cost
+    def timedCount(cand: DataFrame): (Long, Double) = {
       val t0 = System.nanoTime()
-      val cand = a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b")).distinct().count()
-      (cand, (System.nanoTime() - t0) / 1e9)
+      val c = cand.count()
+      (c, (System.nanoTime() - t0) / 1e9)
     }
-    // the MIH refinement's actual candidate plan (phashMihPairs before
-    // the hamming filter): 2x32-bit bands, 1-bit probe fan-out — the
-    // floor drops to 66*n^2/2^32, sub-birthday well past the 16-bit
-    // banding's ~10^7-image wall
-    def mihLeg(n: Long): (Long, Double) = {
-      val hashes = spark.range(n).select(col("id").as("doc_id"),
-        expr("xxhash64(id)").as("phash"))
-      val banded = hashes.select(col("doc_id"), col("phash"),
-        posexplode(expr("transform(sequence(0, 1), b -> shiftright(phash, b * 32) & 4294967295)")))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "v")
-      val exact = banded.select(col("doc_id").as("id_a"), col("band"), col("v").as("key"))
-      val probes = banded.select(col("doc_id").as("id_b"), col("band"),
-        explode(expr("transform(sequence(-1, 31), i -> CASE WHEN i = -1 THEN v " +
-          "ELSE v ^ shiftleft(1L, i) END)")).as("key"))
-      val t0 = System.nanoTime()
-      // candidate mass BEFORE the hamming filter — the verify cost,
-      // comparable to the 16-bit legs above
-      val cand = exact.join(probes, Seq("band", "key"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b")).distinct().count()
-      (cand, (System.nanoTime() - t0) / 1e9)
-    }
+    def leg(n: Long): (Long, Double) = timedCount(graft.dedup.Dedup.bandedHammingCandidates(
+      hashes(n).select(col("doc_id"), col("phash").as("sig")), 4, 16))
+    // the MIH refinement's candidate plan (Multimodal.phashMihCandidates):
+    // 2x32-bit bands, 1-bit probe fan-out — the floor drops to
+    // 66*n^2/2^32, sub-birthday well past the 16-bit banding's
+    // ~10^7-image wall
+    def mihLeg(n: Long): (Long, Double) =
+      timedCount(graft.multimodal.Multimodal.phashMihCandidates(hashes(n)))
     val (c25, t25) = leg(25000L)
     val (c50, t50) = leg(50000L)
     val growth = c50.toDouble / math.max(c25, 1L)

@@ -50,10 +50,7 @@ class ContractSpec extends SparkSpec {
   }
 
   test("every query runs and returns a non-empty result at sf0.001") {
-    val empty = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val n = fn(spark, "/root/testdata/sf0.001").count()
-      if (n == 0) Some(name) else None
-    }
+    val empty = RegistrySweep(spark).collect { case q if q.rows == 0 => q.name }
     // pair-finding queries may legitimately be empty at tiny scale —
     // document which, so a regression to empty elsewhere is caught
     assert(empty.forall(_.startsWith("q_dedup_")) && empty.size <= 2,

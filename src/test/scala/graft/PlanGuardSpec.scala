@@ -52,10 +52,9 @@ class PlanGuardSpec extends SparkSpec {
     j.children.exists(_.output.exists(_.name.startsWith("rescue_")))
 
   test("no cartesian product / unbounded nested-loop join in any query plan") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => exempt(name) }
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, "/root/testdata/sf0.001").queryExecution.sparkPlan
+    val offenders = RegistrySweep(spark)
+      .filterNot(q => exempt(q.name))
+      .flatMap { case RegistrySweep.Swept(name, plan, _) =>
         allNodes(plan).collect {
           case _: CartesianProductExec => s"$name: CartesianProduct"
           case j: BroadcastNestedLoopJoinExec if !allowedBnlj(j) =>

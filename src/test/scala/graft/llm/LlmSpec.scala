@@ -120,6 +120,20 @@ class LlmSpec extends SparkSpec {
     assert(fromSnap === recomputed)
   }
 
+  test("within-index pairs off the text snapshot equal jaccardPairs row for row") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
+    val corpus = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    for (d <- Seq(corpus, docs); t <- Seq(0.5, 0.8)) {
+      val snap = Dedup.buildTextIndexSnapshot(d, t)
+      val direct = Dedup.jaccardPairs(d, t)
+      val viaSnapshot = rows(Dedup.selfPairsFromSnapshot(snap))
+      try assert(viaSnapshot === rows(direct), s"t=$t")
+      finally { direct.unpersist(); snap.index.unpersist(); snap.dfreq.unpersist() }
+      if (d eq docs) assert(viaSnapshot.contains((0L, 4L, 1.0)), s"t=$t")
+    }
+  }
+
   test("snapshot append: screening an appended index equals a fresh rebuild and sees the new docs") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getAs[Boolean]("is_dup"),
@@ -845,8 +859,11 @@ class LlmSpec extends SparkSpec {
   test("gzip JSONL round-trip really compresses (part files are .json.gz)") {
     val out = graft.sources.Sources.jsonlGzRoundtrip(spark, "/root/testdata/sf0.001")
     assert(out.count() > 0)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir")).listFiles()
-      .filter(f => f.getName.startsWith("graft_jsonlgz_")).maxBy(_.lastModified)
+    // the round-trip writes under the scratch root, keyed by this
+    // session's applicationId — directories of older runs never match
+    val prefix = s"graft_jsonlgz_${spark.sparkContext.applicationId}_"
+    val tmp = new java.io.File(graft.core.Scratch.root).listFiles()
+      .filter(f => f.getName.startsWith(prefix)).maxBy(_.lastModified)
     val parts = tmp.listFiles().filter(_.getName.startsWith("part-"))
     assert(parts.nonEmpty && parts.forall(_.getName.endsWith(".json.gz")),
       s"expected gzip parts, got ${parts.map(_.getName).take(3).mkString(",")}")
