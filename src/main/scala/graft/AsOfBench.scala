@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: head-to-head of the two as-of join routes (composed
@@ -11,14 +11,7 @@ object AsOfBench {
   def main(args: Array[String]): Unit = {
     val nL = if (args.length > 0) args(0).toLong else 5000000L
     val nR = if (args.length > 1) args(1).toLong else 2000000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.contract()
     val keys = 10000L
     val payload = if (args.length > 2) args(2).toInt else 6
     // events: (event_id, user_id, ts); orders: (o_orderkey, o_custkey, o_orderdate)

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{Json, Session}
 
 /** Benchmark main: runs the headline queries (one per operator family)
   * on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -17,153 +18,128 @@ import org.apache.spark.sql.SparkSession
   *    volume — compile time is a constant, not a ×1000 term.
   */
 object Bench {
-  /** Representative query per family — relational, timeseries QC/fill/
-    * correction/aggregation, dedup, ANN, text, streaming-twin. */
-  val headline: Seq[String] = Seq(
-    "q1_agg", "q3_join", "q5_region_revenue", "q_asof_join", "q_asof_native", "q_topk_window",
-    "q_expand_grid", "q_qc_all", "q_fill_neighbor", "q_richter_correct",
-    "q_richter_correct_hourly", "q_agg_month", "q_knn_elev",
-    "q_dedup_jaccard", "q_dedup_embedding", "q_dedup_embedding_lsh",
-    "q_ann_topk", "q_text_fingerprint", "q_stream_window",
-    "q_funnel", "q_distinct_hll", "q_range_join_time", "q_window_sliding")
+  /** The bench tiers in report order. Tier 1 reports as `value` /
+    * `queries` / `cold_value` / `cold_queries`, tier i as `value<i>` /
+    * `queries<i>` / `cold_value<i>` / `cold_queries<i>`. Compositions are
+    * frozen for cross-round comparability (tier boundaries are
+    * versioned in PERF.md): a new query opens a new tier. */
+  val tiers: Seq[Seq[String]] = Seq(
+    // 1: representative query per family — relational, timeseries QC/
+    // fill/correction/aggregation, dedup, ANN, text, streaming-twin
+    // (the composition of BENCH_r01..r06)
+    Seq("q1_agg", "q3_join", "q5_region_revenue", "q_asof_join", "q_asof_native", "q_topk_window",
+      "q_expand_grid", "q_qc_all", "q_fill_neighbor", "q_richter_correct",
+      "q_richter_correct_hourly", "q_agg_month", "q_knn_elev",
+      "q_dedup_jaccard", "q_dedup_embedding", "q_dedup_embedding_lsh",
+      "q_ann_topk", "q_text_fingerprint", "q_stream_window",
+      "q_funnel", "q_distinct_hll", "q_range_join_time", "q_window_sliding"),
+    // 2: the round-6 graph / statistics / climate / corpus surface, so
+    // the long tail of the board is benched round-over-round too
+    Seq("q_pagerank", "q_dedup_components", "q_markov_attribution",
+      "q_em_mixture", "q_trend_mk", "q_dtw", "q_corpus_clean",
+      "q_semdedup", "q_bm25", "q_scd2", "q_snht", "q_item_cf"),
+    // 3: the round-7 additions (geometry chain, stationarity family,
+    // the three real decoders, hydrology and supply-chain closers) plus
+    // round 8's PNG and JPEG decodes — fixed from round 8 on
+    Seq("q_geom_wkt", "q_geom_wgs84", "q_kpss", "q_adf", "q_coint_eg",
+      "q_gev_lmoments", "q_lowess", "q_msprt", "q_text_charclass",
+      "q_snowpack", "q_scs_runoff", "q_cdc_chunks", "q_croston",
+      "q_solar_ra", "q_inventory_policy", "q_quantile_mapping",
+      "q_esd_outliers", "q_periodogram_daily", "q_weibull_fit",
+      "q_poisson_ratio", "q_flood_seasonality", "q_budyko", "q_rbo",
+      "q_image_decode_png", "q_image_decode_jpeg"),
+    // 4: the remaining round-8 additions (bucketed ingest, windowed
+    // HLL, audio spectrum, video scenes, phash, the two incremental
+    // screens) plus round 9's snapshot screens and GIF decode — fixed
+    // from round 9 on
+    Seq("q_ingest_bucketed", "q_window_hll", "q_audio_spectrum",
+      "q_video_scenes", "q_image_phash", "q_dedup_incremental",
+      "q_embed_incremental", "q_dedup_snapshot", "q_embed_snapshot",
+      "q_image_decode_gif", "q_gif_frames", "q_gif_composite",
+      "q_dedup_snapshot_cycle", "q_dedup_url", "q_url_domains"),
+    // 5: the round-10 additions (LSH-screened embedding snapshot,
+    // multi-index-hashing phash) — fixed from round 10 on
+    Seq("q_embed_snapshot_lsh", "q_image_phash_mih", "q_ann_ivfpq_snapshot",
+      "q_dedup_components_incr"),
+    // 6: the late round-10 additions (BMP/TIFF/ICO image decode, the
+    // G.711 pair + big-endian AIFF + stateful IMA ADPCM audio decode,
+    // gzip JSONL ingest, NFC normalization, hashing-trick features) —
+    // fixed from round 10 on
+    Seq("q_image_decode_bmp", "q_image_decode_tiff", "q_image_decode_ico",
+      "q_audio_mulaw", "q_audio_alaw", "q_audio_aiff", "q_audio_adpcm",
+      "q_ingest_gzip", "q_ingest_warc", "q_ingest_zip",
+      "q_ingest_tar", "q_ingest_sitemap", "q_ingest_pdf",
+      "q_image_exif", "q_image_cross_format", "q_robots_filter",
+      "q_text_normalize", "q_feature_hash", "q_html_metrics"))
 
-  /** Second bench tier: the round-6 graph / statistics / climate /
-    * corpus surface, so the long tail of the board is benched
-    * round-over-round too (tier 1 keeps its composition for
-    * comparability with BENCH_r01..r06). Reported as `value2` /
-    * `queries2` / `cold_queries2` next to the tier-1 fields. */
-  val headline2: Seq[String] = Seq(
-    "q_pagerank", "q_dedup_components", "q_markov_attribution",
-    "q_em_mixture", "q_trend_mk", "q_dtw", "q_corpus_clean",
-    "q_semdedup", "q_bm25", "q_scd2", "q_snht", "q_item_cf")
+  /** One pass of one query: wall seconds, and the error if it threw. */
+  type Timing = (Double, Option[String])
 
-  /** Third bench tier: the round-7 additions (geometry chain,
-    * stationarity family, the three real decoders, hydrology and
-    * supply-chain closers) plus round 8's PNG and JPEG decodes —
-    * fixed from round 8 on, reported as `value3` / `queries3` /
-    * `cold_queries3` (tiers 1-2 keep their composition for
-    * cross-round comparability). */
-  val headline3: Seq[String] = Seq(
-    "q_geom_wkt", "q_geom_wgs84", "q_kpss", "q_adf", "q_coint_eg",
-    "q_gev_lmoments", "q_lowess", "q_msprt", "q_text_charclass",
-    "q_snowpack", "q_scs_runoff", "q_cdc_chunks", "q_croston",
-    "q_solar_ra", "q_inventory_policy", "q_quantile_mapping",
-    "q_esd_outliers", "q_periodogram_daily", "q_weibull_fit",
-    "q_poisson_ratio", "q_flood_seasonality", "q_budyko", "q_rbo",
-    "q_image_decode_png", "q_image_decode_jpeg")
+  /** Builds `query` (a registered query, or a frame built and planned
+    * before the pass) and runs it into the noop sink.
+    *
+    * Noop sink, not count(): under count() Catalyst prunes every column
+    * the count doesn't need — including whole Window nodes (an as-of
+    * join's matched column, and with it the entire window, vanishes
+    * from the counted plan). The noop write materializes every output
+    * column through the full plan with zero sink cost.
+    *
+    * Failure-honest: a query that throws must NOT be reported as a
+    * (fast-looking) time — the error is returned, [[render]] excludes
+    * it from the totals and surfaces it in the JSON, so a correctness
+    * regression can never masquerade as a speedup. */
+  def timed(query: => DataFrame): Timing = {
+    val t0 = System.nanoTime()
+    val err = try {
+      query.write.format("noop").mode("overwrite").save()
+      None
+    } catch { case t: Throwable =>
+      // first non-blank line: a message STARTING with a newline (some
+      // ParseExceptions) must not truncate to an empty string
+      val msg = Option(t.getMessage).getOrElse(t.getClass.getName)
+      Some(msg.linesIterator.find(_.trim.nonEmpty)
+        .getOrElse(t.getClass.getName).take(200))
+    }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
 
-  /** Fourth bench tier: the remaining round-8 additions (bucketed
-    * ingest, windowed HLL, audio spectrum, video scenes, phash, the
-    * two incremental screens) plus round 9's snapshot screens and GIF
-    * decode — fixed from round 9 on, reported as `value4` / `queries4`
-    * / `cold_queries4` (tiers 1-3 keep their compositions for
-    * cross-round comparability; tier boundaries are versioned in
-    * PERF.md). */
-  val headline4: Seq[String] = Seq(
-    "q_ingest_bucketed", "q_window_hll", "q_audio_spectrum",
-    "q_video_scenes", "q_image_phash", "q_dedup_incremental",
-    "q_embed_incremental", "q_dedup_snapshot", "q_embed_snapshot",
-    "q_image_decode_gif", "q_gif_frames", "q_gif_composite",
-    "q_dedup_snapshot_cycle", "q_dedup_url", "q_url_domains")
+  /** The bench line: per tier the warm total and times, then the cold
+    * ones; then every error of the warm and of the cold pass. */
+  def render(tiers: Seq[Seq[String]], cold: Map[String, Timing],
+      warm: Map[String, Timing], sf: String): String = {
+    val all = tiers.flatten
+    def js(names: Seq[String], rs: Map[String, Timing]): String =
+      names.map(n => "\"" + n + "\":" + rs(n)._1).mkString("{", ",", "}")
+    // totals cover ONLY queries that ran to completion in that pass
+    def total(names: Seq[String], rs: Map[String, Timing]): Double =
+      names.map(rs).collect { case (v, None) => v }.sum
+    def errJs(rs: Map[String, Timing]): String =
+      all.flatMap(n => rs(n)._2.map(e => "\"" + n + "\":" + Json.str(e)))
+        .mkString("{", ",", "}")
+    val perTier = tiers.zipWithIndex.map { case (names, i) =>
+      val s = if (i == 0) "" else (i + 1).toString
+      val mode = if (i == 0) "\"unit\":\"sec\",\"mode\":\"warm-jvm-recomputed\",\"sink\":\"noop\"," else ""
+      s"\"value$s\":${total(names, warm)},$mode\"queries$s\":${js(names, warm)}," +
+        s"\"cold_value$s\":${total(names, cold)},\"cold_queries$s\":${js(names, cold)}"
+    }
+    val nErrors = all.count(n => warm(n)._2.isDefined) + all.count(n => cold(n)._2.isDefined)
+    s"""{"metric":"total",${perTier.mkString(",")},"errors":${errJs(warm)},""" +
+      s""""cold_errors":${errJs(cold)},"n_errors":$nErrors,"sf":"$sf"}"""
+  }
 
-  /** Fifth bench tier: the round-10 additions (LSH-screened embedding
-    * snapshot, multi-index-hashing phash) — fixed from round 10 on,
-    * reported as `value5` / `queries5` / `cold_queries5` (tiers 1-4
-    * keep their compositions for cross-round comparability; tier
-    * boundaries are versioned in PERF.md). */
-  val headline5: Seq[String] = Seq(
-    "q_embed_snapshot_lsh", "q_image_phash_mih", "q_ann_ivfpq_snapshot",
-    "q_dedup_components_incr")
-
-  /** Sixth bench tier: the late round-10 additions (BMP/TIFF/ICO
-    * image decode, the G.711 pair + big-endian AIFF + stateful IMA
-    * ADPCM audio decode, gzip JSONL ingest, NFC normalization,
-    * hashing-trick features) — fixed at ten queries before their
-    * first driver run, reported as `value6` / `queries6` /
-    * `cold_queries6` (tiers 1-5 keep their compositions for
-    * cross-round comparability; tier boundaries are versioned in
-    * PERF.md). */
-  val headline6: Seq[String] = Seq(
-    "q_image_decode_bmp", "q_image_decode_tiff", "q_image_decode_ico",
-    "q_audio_mulaw", "q_audio_alaw", "q_audio_aiff", "q_audio_adpcm",
-    "q_ingest_gzip", "q_ingest_warc", "q_ingest_zip",
-    "q_ingest_tar", "q_ingest_sitemap", "q_ingest_pdf",
-    "q_image_exif", "q_image_cross_format", "q_robots_filter",
-    "q_text_normalize", "q_feature_hash", "q_html_metrics")
+  /** Session warm-up: FS + parquet footer reads, not attributed to
+    * any timed query. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    SparkEntry.queries("q1_agg")(spark, sfDir).count()
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Session tuning for BENCH scale: with ≤ sf0.1 inputs and a fixed
-      // 32-partition layout, AQE's per-stage re-optimization is pure
-      // scheduling overhead (~20% of total here) and its benefits —
-      // partition coalescing, skew-join splitting — only materialize on
-      // large shuffles. A cluster deployment at real scale runs with
-      // AQE on (the library itself sets no session config).
-      .config("spark.sql.adaptive.enabled", "false")
-      // Sort-based shuffle writer at every reducer count: the default
-      // bypass-merge writer opens one file PER REDUCE PARTITION per map
-      // task — M×R tiny shuffle files per exchange — which on this
-      // box's disk serializes every stage on file creation (thread
-      // dumps show most task threads inside FileOutputStream.open0,
-      // and per-task time inflates ~10× at local[32] vs local[8]). A
-      // real cluster never takes the bypass path (it requires ≤200
-      // reduce partitions), so forcing the sort writer also makes the
-      // measured shuffle path the at-scale one: one data+index file
-      // pair per map task instead of R files.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // allow co-partitioned joins on a SUBSET of the join keys: the
-      // engine's frames are all hash-partitioned by station_id, and its
-      // (station_id, day) joins are correct under that partitioning —
-      // with this flag EnsureRequirements recognizes it and the QC/fill
-      // pipeline runs with a single big-frame shuffle end-to-end
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    // Shuffle/spill scratch on the RAM-backed tmpfs when one exists:
-    // thread dumps show map tasks serializing on the per-shuffle
-    // commit (index write + data-file rename under a key lock) —
-    // metadata ops a real cluster spreads over many executors' local
-    // disks land on ONE slow device here. Guarded: absent or
-    // read-only /dev/shm falls back to the default local dir.
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite)
-      builder.config("spark.local.dir", "/dev/shm/graft_spark_local")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // noop sink, not count(): under count() Catalyst prunes every column
-    // the count doesn't need — including whole Window nodes (an as-of
-    // join's matched column, and with it the entire window, vanishes
-    // from the counted plan). The noop write materializes every output
-    // column through the full plan with zero sink cost.
-    // Failure-honest timing: a query that throws must NOT be reported
-    // as a (fast-looking) time — record the error, exclude it from the
-    // totals, and surface it in the JSON so a correctness regression
-    // can never masquerade as a speedup.
-    def timed(name: String): (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err = try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        None
-      } catch { case t: Throwable =>
-        // first non-blank line: a message STARTING with a newline (some
-        // ParseExceptions) must not truncate to an empty string
-        val msg = Option(t.getMessage).getOrElse(t.getClass.getName)
-        Some(msg.linesIterator.find(_.trim.nonEmpty)
-          .getOrElse(t.getClass.getName).take(200))
-      }
-      ((System.nanoTime() - t0) / 1e9, err)
-    }
-    // session warmup: FS + parquet footer reads, not attributed to queries
-    SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    val both = headline ++ headline2 ++ headline3 ++ headline4 ++
-      headline5 ++ headline6
-    val coldAll = both.map(n => n -> timed(n))
+    val spark = Session.contract()
+    warmUp(spark, sfDir)
+    val all = tiers.flatten
+    def pass(): Map[String, Timing] =
+      all.map(n => n -> timed(SparkEntry.queries(n)(spark, sfDir))).toMap
+    val cold = pass()
     // drop memoized kind frames: each warm pass must redo ALL of the
     // distributed work, with only the JVM (codegen/JIT) staying warm.
     // Two independent recompute passes, per-query minimum: single-shot
@@ -174,54 +150,13 @@ object Bench {
     // other pass).
     val warmPasses = (1 to 2).map { _ =>
       graft.tsdb.TsQueries.clearMemo(spark)
-      both.map(n => n -> timed(n)).toMap
+      pass()
     }
-    val warmAll = both.map { n =>
+    val warm = all.map { n =>
       val runs = warmPasses.map(_(n))
       n -> runs.find(_._2.isDefined).getOrElse(runs.minBy(_._1))
-    }
-    val (warm, warmRest) = warmAll.partition(kv => headline.contains(kv._1))
-    val (cold, coldRest) = coldAll.partition(kv => headline.contains(kv._1))
-    val (warm2, warmRest3) = warmRest.partition(kv => headline2.contains(kv._1))
-    val (cold2, coldRest3) = coldRest.partition(kv => headline2.contains(kv._1))
-    val (warm3, warmRest4) = warmRest3.partition(kv => headline3.contains(kv._1))
-    val (cold3, coldRest4) = coldRest3.partition(kv => headline3.contains(kv._1))
-    val (warm4, warmRest5) = warmRest4.partition(kv => headline4.contains(kv._1))
-    val (cold4, coldRest5) = coldRest4.partition(kv => headline4.contains(kv._1))
-    val (warm5, warm6) = warmRest5.partition(kv => headline5.contains(kv._1))
-    val (cold5, cold6) = coldRest5.partition(kv => headline5.contains(kv._1))
-    // same escaper contract as Verify's: backslash, quote, and ALL
-    // control chars — a tab or CR inside an exception message must not
-    // make the driver's json.load reject the whole bench line
-    def jsStr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    def js(rs: Seq[(String, (Double, Option[String]))]): String =
-      rs.map { case (k, (v, _)) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def errJs(rs: Seq[(String, (Double, Option[String]))]): String =
-      rs.collect { case (k, (_, Some(e))) => "\"" + k + "\":" + jsStr(e) }
-        .mkString("{", ",", "}")
-    // totals cover ONLY queries that ran to completion in that pass
-    val total = warm.collect { case (_, (v, None)) => v }.sum
-    val coldTotal = cold.collect { case (_, (v, None)) => v }.sum
-    val total2 = warm2.collect { case (_, (v, None)) => v }.sum
-    val coldTotal2 = cold2.collect { case (_, (v, None)) => v }.sum
-    val total3 = warm3.collect { case (_, (v, None)) => v }.sum
-    val coldTotal3 = cold3.collect { case (_, (v, None)) => v }.sum
-    val total4 = warm4.collect { case (_, (v, None)) => v }.sum
-    val coldTotal4 = cold4.collect { case (_, (v, None)) => v }.sum
-    val total5 = warm5.collect { case (_, (v, None)) => v }.sum
-    val coldTotal5 = cold5.collect { case (_, (v, None)) => v }.sum
-    val total6 = warm6.collect { case (_, (v, None)) => v }.sum
-    val coldTotal6 = cold6.collect { case (_, (v, None)) => v }.sum
-    val allErrs = (warmAll ++ coldAll).collect { case (k, (_, Some(e))) => (k, e) }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","mode":"warm-jvm-recomputed","sink":"noop","queries":${js(warm)},"cold_value":$coldTotal,"cold_queries":${js(cold)},"value2":$total2,"queries2":${js(warm2)},"cold_value2":$coldTotal2,"cold_queries2":${js(cold2)},"value3":$total3,"queries3":${js(warm3)},"cold_value3":$coldTotal3,"cold_queries3":${js(cold3)},"value4":$total4,"queries4":${js(warm4)},"cold_value4":$coldTotal4,"cold_queries4":${js(cold4)},"value5":$total5,"queries5":${js(warm5)},"cold_value5":$coldTotal5,"cold_queries5":${js(cold5)},"value6":$total6,"queries6":${js(warm6)},"cold_value6":$coldTotal6,"cold_queries6":${js(cold6)},"errors":${errJs(warmAll)},"cold_errors":${errJs(coldAll)},"n_errors":${allErrs.size},"sf":"$sfDir"}""")
+    }.toMap
+    println(render(tiers, cold, warm, sfDir))
     spark.stop()
   }
 }

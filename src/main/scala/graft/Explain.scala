@@ -1,21 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of selected queries. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // match the Bench session so the audited plan is the benched plan
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.contract()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"========== $name ==========")

@@ -76,6 +76,37 @@ object Sources {
       .option("path", s"$basePath/$table")
       .saveAsTable(table)
 
+  /** Bucketed-table ingest round-trip — the storage-side co-location
+    * contract: events write as a bucketed+sorted parquet table (8
+    * buckets on user_id) through [[writeBucketed]], read back via the
+    * catalog, and the user_id-keyed aggregates + join consume the
+    * bucketing so NO exchange appears in the plan (SourcesSpec pins
+    * the shuffle-free plan on the registered query): bucketing
+    * pre-pays the shuffle once at write time, and at 100 TB every
+    * downstream keyed join/agg on the bucket column reuses it.
+    * Output checksums are integer-exact (counts, id sums, truncated
+    * value cents — order-independent), so the oracle computes them
+    * straight off the parquet the table was written from. */
+  def bucketedRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
+    val ev = graft.core.Tables.events(spark, sfDir)
+      .select(col("event_id"), col("user_id"), col("value"))
+    val wh = graft.core.Scratch.runDir(spark, "bucket", sfDir)
+    val sfx = Integer.toHexString(sfDir.hashCode)
+    val ta = s"graft_ev_bucket_a_$sfx"; val tb = s"graft_ev_bucket_b_$sfx"
+    writeBucketed(ev, ta, "user_id", nBuckets = 8, basePath = wh)
+    writeBucketed(ev.filter(col("event_id") % 2 === 0), tb, "user_id",
+      nBuckets = 8, basePath = wh)
+    val a = spark.table(ta).groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("event_id")).as("sum_ids"),
+        sum((col("value") * 100).cast("long")).as("value_cents"))
+    val b = spark.table(tb).groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_even_events"))
+    a.join(b, Seq("user_id"))
+      .select(col("user_id"), col("n_events"), col("sum_ids"),
+        col("value_cents"), col("n_even_events"))
+  }
+
   /** JSONL round-trip fidelity check over the documents table — JSONL
     * is THE corpus interchange format of LLM training pipelines, and
     * the property that matters is losslessness: every code point,
@@ -93,47 +124,6 @@ object Sources {
     * scans (one task per split, no driver involvement); the checksum
     * is a keyed aggregation with map-side combine down to #sources
     * rows. */
-  /** Per-run scratch dir for the format-roundtrip queries: keyed by
-    * the dataset AND the Spark applicationId, so two concurrent runs
-    * over the same sfDir never race on one overwrite path (and a
-    * hashCode collision across dirs can't alias paths within a run). */
-  private def roundtripTmp(spark: SparkSession, fmt: String,
-      sfDir: String): String =
-    new java.io.File(graft.core.Scratch.root,
-      s"graft_${fmt}_${spark.sparkContext.applicationId}_" +
-        Integer.toHexString(sfDir.hashCode)).getPath
-
-  /** Bucketed-table ingest round-trip — the storage-side co-location
-    * contract: events write as a bucketed+sorted parquet table (8
-    * buckets on user_id) through [[writeBucketed]], read back via the
-    * catalog, and the user_id-keyed aggregates + join consume the
-    * bucketing so NO exchange appears in the plan (SourcesSpec pins
-    * the shuffle-free plan on the registered query): bucketing
-    * pre-pays the shuffle once at write time, and at 100 TB every
-    * downstream keyed join/agg on the bucket column reuses it.
-    * Output checksums are integer-exact (counts, id sums, truncated
-    * value cents — order-independent), so the oracle computes them
-    * straight off the parquet the table was written from. */
-  def bucketedRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = graft.core.Tables.events(spark, sfDir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val wh = roundtripTmp(spark, "bucket", sfDir)
-    val sfx = Integer.toHexString(sfDir.hashCode)
-    val ta = s"graft_ev_bucket_a_$sfx"; val tb = s"graft_ev_bucket_b_$sfx"
-    writeBucketed(ev, ta, "user_id", nBuckets = 8, basePath = wh)
-    writeBucketed(ev.filter(col("event_id") % 2 === 0), tb, "user_id",
-      nBuckets = 8, basePath = wh)
-    val a = spark.table(ta).groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("event_id")).as("sum_ids"),
-        sum((col("value") * 100).cast("long")).as("value_cents"))
-    val b = spark.table(tb).groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_even_events"))
-    a.join(b, Seq("user_id"))
-      .select(col("user_id"), col("n_events"), col("sum_ids"),
-        col("value_cents"), col("n_even_events"))
-  }
-
   def jsonlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val payload = concat(
@@ -142,7 +132,7 @@ object Sources {
       lit("äπ中"), col("n_chars").cast("string"))
     val docs = graft.core.Tables.documents(spark, sfDir)
       .withColumn("payload", payload)
-    val tmp = roundtripTmp(spark, "jsonl", sfDir)
+    val tmp = graft.core.Scratch.runDir(spark, "jsonl", sfDir)
     docs.write.mode("overwrite").json(tmp)
     val back = spark.read.schema(docs.schema).json(tmp)
     back.groupBy(col("source"))
@@ -176,7 +166,7 @@ object Sources {
       lit("äπ中"), (col("n_chars") * 3).cast("string"))
     val docs = graft.core.Tables.documents(spark, sfDir)
       .withColumn("payload", payload)
-    val tmp = roundtripTmp(spark, "jsonlgz", sfDir)
+    val tmp = graft.core.Scratch.runDir(spark, "jsonlgz", sfDir)
     docs.write.mode("overwrite").option("compression", "gzip").json(tmp)
     val back = spark.read.schema(docs.schema).json(tmp)
     back.groupBy(col("source"))
@@ -208,7 +198,7 @@ object Sources {
       lit("äπ中"), col("n_chars").cast("string"))
     val docs = graft.core.Tables.documents(spark, sfDir)
       .withColumn("payload", payload)
-    val tmp = roundtripTmp(spark, "csv", sfDir)
+    val tmp = graft.core.Scratch.runDir(spark, "csv", sfDir)
     docs.write.mode("overwrite")
       .option("header", "true").option("escape", "\"")
       .csv(tmp)
@@ -382,7 +372,7 @@ object Sources {
       .withColumn("payload", payload)
       .withColumn("h_arr",
         expr("array(graft_polyhash(text), cast(n_chars AS bigint), cast(doc_id AS bigint))"))
-    val tmp = roundtripTmp(spark, "orc", sfDir)
+    val tmp = graft.core.Scratch.runDir(spark, "orc", sfDir)
     docs.write.mode("overwrite").orc(tmp)
     val back = spark.read.orc(tmp)
     back.groupBy(col("source"))

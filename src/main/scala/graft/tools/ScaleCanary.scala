@@ -18,14 +18,7 @@ import graft.tsdb.Climate
 object ScaleCanary {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("CANARY_r08.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.adaptive()
 
     if (args.contains("--dedup-only")) { // dev loop for the dedup legs
       println(dedupCanary(spark)); spark.stop(); return

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print logical-tree node counts for the memoized kind
   * frames and selected queries — the driver-side cost driver (every
   * Dataset transformation re-runs checkAnalysis over the whole tree,
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
 object TreeSize {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.contract()
     spark.sparkContext.setLogLevel("ERROR")
     def sz(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       val plan = df.queryExecution.analyzed

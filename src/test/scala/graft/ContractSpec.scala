@@ -31,18 +31,11 @@ class ContractSpec extends SparkSpec {
   }
 
   test("bench headline queries all exist") {
-    val missing = (Bench.headline.toSet ++ Bench.headline2 ++ Bench.headline3 ++
-      Bench.headline4 ++ Bench.headline5 ++ Bench.headline6) -- SparkEntry.queries.keySet
+    val missing = Bench.tiers.flatten.toSet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"headline names without queries: $missing")
     // a query in two tiers would be double-counted in the totals
-    assert(Bench.headline.intersect(Bench.headline2).isEmpty)
-    assert((Bench.headline ++ Bench.headline2).intersect(Bench.headline3).isEmpty)
-    assert((Bench.headline ++ Bench.headline2 ++ Bench.headline3)
-      .intersect(Bench.headline4).isEmpty)
-    assert((Bench.headline ++ Bench.headline2 ++ Bench.headline3 ++ Bench.headline4)
-      .intersect(Bench.headline5).isEmpty)
-    assert((Bench.headline ++ Bench.headline2 ++ Bench.headline3 ++ Bench.headline4
-      ++ Bench.headline5).intersect(Bench.headline6).isEmpty)
+    for (i <- Bench.tiers.indices; j <- 0 until i)
+      assert(Bench.tiers(i).intersect(Bench.tiers(j)).isEmpty, s"tiers ${j + 1} and ${i + 1} overlap")
   }
 
   test("flagship entry returns rows on the smoke scale factor") {

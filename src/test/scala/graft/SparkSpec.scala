@@ -6,18 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession fixture for operator specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // one shuffle file per map task instead of one per reduce
-    // partition — file creation on this box's disk is the dominant
-    // cost of tiny-stage shuffles (same setting as the Bench session)
-    .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.adaptive(cores = 2)
 
   override def afterAll(): Unit = {
     // session is shared across suites in one JVM; don't stop it here
