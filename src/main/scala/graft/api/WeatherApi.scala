@@ -1,7 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge
 import graft.core.{Tables, TimestampPeriod}
 import graft.tsdb._
 
@@ -11,21 +12,22 @@ import graft.tsdb._
   * station exposing the per-kind series, one grouping object for
   * all-stations actions, a group view joining parameters per location.
   *
-  * All methods are lazy plan builders over the shared engine pipeline —
-  * selecting one station is a partition-pruned filter on the tall
-  * frame, not a separate table as in the reference.
+  * The kind frames are [[TsQueries]]' memoized, persisted ones; the
+  * all-stations methods are lazy plan builders over them. A
+  * single-station read is served from the cache instead of a separate
+  * table as in the reference: the station's rows of the persisted kind
+  * frame, planned over that one in-memory leaf and read in one task
+  * with no shuffle (see [[Station.lookup]]).
   */
 class WeatherDb(val spark: SparkSession, val dir: String) {
   lazy val events: DataFrame = Tables.events(spark, dir)
-  lazy val meta: DataFrame = Series.stationMeta(events)
-  lazy val raw: DataFrame = Series.dailyRaw(events)
+  lazy val meta: DataFrame = TsQueries.meta(spark, dir)
+  lazy val raw: DataFrame = TsQueries.rawDaily(spark, dir)
   lazy val qc: DataFrame = TsQueries.qcAll(spark, dir)
   lazy val filled: DataFrame = TsQueries.filledSeries(spark, dir)
   /** Filled temperature companion — virtual-station cycle, see
     * Fillup.fillTemp. */
-  lazy val tempFilled: DataFrame =
-    Fillup.fillTemp(Series.dailyTemp(events), meta, Series.raster(events))
-      .select(col("station_id"), col("day"), col("t_filled").as("t"))
+  lazy val tempFilled: DataFrame = TsQueries.tempFilled(spark, dir)
   lazy val corr: DataFrame =
     Richter.correct(spark, filled, tempFilled, meta)
 
@@ -64,29 +66,36 @@ class WeatherDb(val spark: SparkSession, val dir: String) {
     filled.createOrReplaceTempView(s"${prefix}filled")
     corr.createOrReplaceTempView(s"${prefix}corr")
   }
+}
 
-  private[api] def inPeriod(df: DataFrame, period: TimestampPeriod): DataFrame = {
-    val s = period.start.map(d => df.col("day") >= lit(java.sql.Date.valueOf(d)))
-    val e = period.end.map(d => df.col("day") <= lit(java.sql.Date.valueOf(d)))
-    (s ++ e).reduceOption(_ && _).map(df.filter).getOrElse(df)
-  }
+object WeatherDb {
+  private[api] def inPeriod(df: DataFrame, period: TimestampPeriod): DataFrame =
+    periodBounds(period).reduceOption(_ && _).map(df.filter).getOrElse(df)
+
+  /** `day` on or after the period's start and on or before its end;
+    * an open end adds no bound. */
+  private[api] def periodBounds(period: TimestampPeriod): Seq[Column] =
+    period.start.map(d => col("day") >= lit(java.sql.Date.valueOf(d))).toSeq ++
+      period.end.map(d => col("day") <= lit(java.sql.Date.valueOf(d)))
 }
 
 /** One station, one parameter — the reference's StationBase surface. */
 class Station(db: WeatherDb, val id: Long) {
-  private def only(df: DataFrame) = df.filter(col("station_id") === id)
+  private def lookup(frame: DataFrame,
+      period: TimestampPeriod = TimestampPeriod.empty): DataFrame =
+    Station.lookup(frame, id, period)
 
   /** get_df: selected kinds over a period (StationBases.py:2463), with
     * the reference's free-form filter (`sql_add_where`,
     * StationBases.py:2463-2530) and `agg_to` granularity. The filter is
     * a SQL boolean expression over the kind columns — it enters the
-    * plan as a Catalyst predicate, so it is pushed into the parquet
+    * plan as a Catalyst predicate, so it is pushed into the in-memory
     * scan like any native filter, not applied post-hoc. */
   def getDf(kinds: Seq[String] = Seq("raw", "qc", "filled"),
       period: TimestampPeriod = TimestampPeriod.empty,
       sqlAddWhere: String = null,
       aggTo: String = null): DataFrame = {
-    val base = db.inPeriod(only(db.filled), period)
+    val base = lookup(db.filled, period)
     val filtered = Option(sqlAddWhere).map(w => base.filter(expr(w))).getOrElse(base)
     Option(aggTo) match {
       case Some(g) =>
@@ -105,9 +114,9 @@ class Station(db: WeatherDb, val id: Long) {
     getDf(Seq("filled", "filled_by"), period)
   /** Richter-corrected series (StationP.get_corr). */
   def getCorr(period: TimestampPeriod = TimestampPeriod.empty): DataFrame =
-    db.inPeriod(only(db.corr), period).select("day", "corr").orderBy("day")
+    lookup(db.corr, period).select("day", "corr").orderBy("day")
 
-  def getMeta: DataFrame = only(db.meta)
+  def getMeta: DataFrame = lookup(db.meta)
 
   /** get_neighboor_stids (StationBases.py:2211): `onlyReal` mirrors
     * the reference's only_real=True default (virtual stations are
@@ -120,14 +129,14 @@ class Station(db: WeatherDb, val id: Long) {
       case Some((p1, p2)) => Neighbors.knnElev(db.meta, n, p1, p2, onlyReal)
       case None => Neighbors.knnDist(db.meta, n, onlyReal)
     }
-    only(knn).orderBy(col("rank")).select(col("nb_id")).collect().map(_.getLong(0)).toSeq
+    lookup(knn).orderBy(col("rank")).select(col("nb_id")).collect().map(_.getLong(0)).toSeq
   }
 
   /** get_max_period (StationBases.py:2133): NAs allowed → the full
     * grid extent; else the inner union of the kinds' filled periods. */
   def getMaxPeriod(kinds: Seq[String] = Seq("raw", "qc", "filled"),
       nasAllowed: Boolean = false): TimestampPeriod =
-    only(Aggregate.maxPeriod(db.filled, kinds)).collect().headOption match {
+    Aggregate.maxPeriod(lookup(db.filled), kinds).collect().headOption match {
       case None => TimestampPeriod.empty // unknown station: no period
       case Some(r) =>
         val (f, u) = if (nasAllowed) (r.getDate(1), r.getDate(2)) else (r.getDate(3), r.getDate(4))
@@ -154,8 +163,7 @@ class Station(db: WeatherDb, val id: Long) {
   def getGeom(crs: String): String = crs match {
     case "grid" => getGeom
     case "wgs84" =>
-      db.stations.getGeomWgs84.filter(col("station_id") === id)
-        .select(col("geometry")).collect().headOption match {
+      lookup(db.stations.getGeomWgs84).select(col("geometry")).collect().headOption match {
         case Some(r) => r.getString(0)
         case None => throw new IllegalArgumentException(
           s"station $id is not in the registry")
@@ -193,7 +201,7 @@ class Station(db: WeatherDb, val id: Long) {
 
   /** get_filled_period for a kind (StationBases.py:2083). */
   def getFilledPeriod(kind: String = "filled"): TimestampPeriod = {
-    val r = only(db.filled).agg(
+    val r = lookup(db.filled).agg(
       min(when(col(kind).isNotNull, col("day"))).as("from"),
       max(when(col(kind).isNotNull, col("day"))).as("until")).collect().head
     TimestampPeriod(
@@ -205,13 +213,13 @@ class Station(db: WeatherDb, val id: Long) {
     * membership — the guards the reference runs before any per-station
     * operation. */
   def isinMeta: Boolean = !getMeta.isEmpty
-  def isinDb: Boolean = !only(db.raw).filter(col("raw").isNotNull).isEmpty
+  def isinDb: Boolean = !lookup(db.raw).filter(col("raw").isNotNull).isEmpty
 
   /** isin_ma (StationBases.py:727): the station carries a
     * multi-annual mean — i.e. its raw series has at least one
     * observation to average. */
   def isinMa: Boolean =
-    !only(Series.maMean(db.raw, "raw")).filter(col("ma").isNotNull).isEmpty
+    !lookup(Series.maMean(db.raw, "raw")).filter(col("ma").isNotNull).isEmpty
 
   /** isin_meta_p (StationBases.py:2887): membership in the
     * precipitation registry. The single-events-table model derives
@@ -251,24 +259,37 @@ class Station(db: WeatherDb, val id: Long) {
   }
 
   /** count_holes (StationBases.py:1925). */
-  def countHoles: DataFrame = only(Aggregate.countHoles(db.qc))
+  def countHoles: DataFrame = lookup(Aggregate.countHoles(db.qc))
 
   /** get_adj (StationBases.py:2763, StationP.py:3094, StationT.py:3136):
     * the filled series adjusted so its multi-annual mean matches the
     * raster climate value — multiplicative scaling for P/ET, additive
-    * shift for T. Same single-station pruned plan as the other kind
-    * accessors. */
+    * shift for T. The adjustment needs the station's whole series (its
+    * MA mean), so the period applies to the adjusted frame. */
   def getAdj(multiplicative: Boolean = true,
       period: TimestampPeriod = TimestampPeriod.empty): DataFrame = {
     val raster = Series.raster(db.events)
     val adj = if (multiplicative) MultiAnnual.adjustMult(db.filled, raster)
       else MultiAnnual.adjustAdd(db.filled, raster)
-    db.inPeriod(only(adj), period).select("day", "filled", "adj").orderBy("day")
+    lookup(adj, period).select("day", "filled", "adj").orderBy("day")
   }
 
   /** get_ma_raster / get_multi_annual_raster (StationBases.py:2298,
     * 2333): the station's multi-annual raster climate values. */
-  def getMaRaster: DataFrame = only(Series.raster(db.events))
+  def getMaRaster: DataFrame = lookup(Series.raster(db.events))
+}
+
+object Station {
+  /** The one single-station read path: `frame` resolved against the
+    * cache now (a persisted frame becomes one in-memory leaf, see
+    * [[GraftSqlBridge.fromCache]]), the station and period predicates
+    * (pushed into the in-memory scan), then one partition: over a
+    * persisted frame a later sort or per-station aggregate needs no
+    * exchange, and the read is one job of one task. */
+  private[api] def lookup(frame: DataFrame, id: Long, period: TimestampPeriod): DataFrame =
+    GraftSqlBridge.fromCache(frame)
+      .filter(((col("station_id") === id) +: WeatherDb.periodBounds(period)).reduce(_ && _))
+      .coalesce(1)
 }
 
 /** All stations of one parameter — the reference's StationsBase. */
@@ -279,7 +300,7 @@ class Stations(db: WeatherDb) {
   def getDf(kinds: Seq[String] = Seq("raw", "qc", "filled"),
       period: TimestampPeriod = TimestampPeriod.empty,
       sqlAddWhere: String = null): DataFrame = {
-    val base = db.inPeriod(db.filled, period)
+    val base = WeatherDb.inPeriod(db.filled, period)
     Option(sqlAddWhere).map(w => base.filter(expr(w))).getOrElse(base)
       .select((col("station_id") +: col("day") +: kinds.map(col)): _*)
   }
@@ -488,8 +509,7 @@ class GroupStation(db: WeatherDb, val id: Long) {
   /** Wide per-day frame of the P/T/ET-like parameters
     * (GroupStation.get_df / create_ts). */
   def getDf(period: TimestampPeriod = TimestampPeriod.empty): DataFrame =
-    db.inPeriod(Aggregate.groupWide(db.events).filter(col("station_id") === id), period)
-      .orderBy(col("day"))
+    Station.lookup(Aggregate.groupWide(db.events), id, period).orderBy(col("day"))
 
   /** create_ts: write the model-input export in the reference's text
     * layout — per-parameter tab-separated files with the 2-line meta
@@ -499,7 +519,7 @@ class GroupStation(db: WeatherDb, val id: Long) {
   def createTs(outDir: String, period: TimestampPeriod = TimestampPeriod.empty,
       splitDate: Boolean = true, addMeta: Boolean = true): Unit =
     ModelExport.writeTs(
-      db.inPeriod(Aggregate.groupWide(db.events), period)
+      WeatherDb.inPeriod(Aggregate.groupWide(db.events), period)
         .filter(col("station_id") === id),
       db.meta, outDir, ModelExport.defaultParas, splitDate = splitDate,
       roger = false, addMeta = addMeta)
@@ -510,7 +530,7 @@ class GroupStation(db: WeatherDb, val id: Long) {
   def createRogerTs(outDir: String, period: TimestampPeriod = TimestampPeriod.empty,
       rR0: Double = 1.0): Unit =
     ModelExport.writeTs(
-      db.inPeriod(Aggregate.groupWide(db.events), period)
+      WeatherDb.inPeriod(Aggregate.groupWide(db.events), period)
         .filter(col("station_id") === id),
       db.meta, outDir, ModelExport.rogerParas, splitDate = true,
       roger = true, addMeta = false, rR0 = Some(rR0))
@@ -532,7 +552,7 @@ class GroupStations(db: WeatherDb) {
   def createTs(outDir: String, period: TimestampPeriod = TimestampPeriod.empty,
       splitDate: Boolean = true, addMeta: Boolean = true): Unit =
     ModelExport.writeTs(
-      db.inPeriod(Aggregate.groupWide(db.events), period),
+      WeatherDb.inPeriod(Aggregate.groupWide(db.events), period),
       db.meta, outDir, ModelExport.defaultParas, splitDate = splitDate,
       roger = false, addMeta = addMeta)
 
@@ -542,7 +562,7 @@ class GroupStations(db: WeatherDb) {
   def createRogerTs(outDir: String, period: TimestampPeriod = TimestampPeriod.empty,
       rR0: Double = 1.0): Unit =
     ModelExport.writeTs(
-      db.inPeriod(Aggregate.groupWide(db.events), period),
+      WeatherDb.inPeriod(Aggregate.groupWide(db.events), period),
       db.meta, outDir, ModelExport.rogerParas, splitDate = true,
       roger = true, addMeta = false, rR0 = Some(rR0))
 }

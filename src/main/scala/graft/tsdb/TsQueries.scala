@@ -201,7 +201,7 @@ object TsQueries {
   /** Filled temperature companion (virtual-station cycle): the Richter
     * typing joins the T station's FILLED series, as the reference does
     * (StationP.py:604 joins tst."filled" after forcing stat_t.fillup). */
-  private def tempFilled(s: SparkSession, d: String): DataFrame =
+  private[graft] def tempFilled(s: SparkSession, d: String): DataFrame =
     memo.getOrElseUpdate((s, d, "tfill"), {
       val events = ev(s, d)
       Fillup.fillTemp(Series.dailyTemp(events), meta(s, d),

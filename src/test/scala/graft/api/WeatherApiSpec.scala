@@ -1,9 +1,20 @@
 package graft.api
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.SpanSugar._
 import graft.SparkSpec
-import graft.core.TimestampPeriod
+import graft.core.{Tables, TimestampPeriod}
+import graft.tsdb._
 
-class WeatherApiSpec extends SparkSpec {
+class WeatherApiSpec extends SparkSpec with AdaptiveSparkPlanHelper with Eventually {
 
   private lazy val db = new WeatherDb(spark, "/root/testdata/sf0.001")
 
@@ -270,5 +281,174 @@ class WeatherApiSpec extends SparkSpec {
     // explorer frame exposes the documented columns in catalog order
     assert(db.stations.getMetaExplorer.columns.toSeq ===
       Stations.metaExplanation.map(_._1))
+  }
+
+  // The specs below drop the session's memoized kind frames, so they
+  // come last and each builds its own WeatherDb.
+
+  /** The kinds' plain lineage — what TsQueries memoizes, built here
+    * without its persist — computed once and held as local rows. Built
+    * after the memo is dropped and before the served side exists, it
+    * reads no kind cache (only what a derivation persists for itself,
+    * such as the neighbor ranking). */
+  private class Lineage(dir: String) {
+    private val ev = Tables.events(spark, dir)
+    private val meta = Series.stationMeta(ev)
+    private val filledPlan =
+      Fillup.fillNeighbor(QualityCheck.all(Series.dailyRaw(ev), Series.dailyRef(ev), meta), meta)
+    private val corrPlan = Richter.correct(spark, filledPlan,
+      Fillup.fillTemp(Series.dailyTemp(ev), meta, Series.raster(ev))
+        .select(col("station_id"), col("day"), col("t_filled").as("t")), meta)
+    private def local(plan: DataFrame): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(plan.collect(): _*), plan.schema)
+    val filled: DataFrame = local(filledPlan)
+    val corr: DataFrame = local(corrPlan)
+
+    /** The station's rows of `frame` in `period`: a plain filter on
+      * the whole frame. */
+    def select(frame: DataFrame, id: Long, period: TimestampPeriod): DataFrame =
+      WeatherDb.inPeriod(frame.filter(col("station_id") === id), period)
+  }
+
+  private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  test("served lookups equal the uncached lineage row for row") {
+    import org.apache.spark.sql.functions.expr
+    // the suite's sf0.001 data and its sf0.01 sibling
+    val sf0_01 = new java.io.File(new java.io.File(db.dir).getParentFile, "sf0.01").getPath
+    for (dir <- Seq(db.dir, sf0_01)) {
+      TsQueries.clearMemo(spark)
+      val lin = new Lineage(dir)
+      val dbs = new WeatherDb(spark, dir)
+      val periods = Seq(
+        TimestampPeriod.empty,
+        TimestampPeriod.of("2024-01-05", "2024-01-19"),
+        TimestampPeriod(Some(java.time.LocalDate.parse("2024-01-20")), None),
+        TimestampPeriod(None, Some(java.time.LocalDate.parse("2024-01-03"))),
+        TimestampPeriod.of("2025-01-01", "2025-01-31")) // no day of the data
+      val cases = periods.map(7L -> _) ++ periods.take(2).map(99999L -> _) // unknown station
+      for ((id, p) <- cases) {
+        val st = dbs.station(id)
+        val f = lin.select(lin.filled, id, p)
+        def check(served: DataFrame, lineage: DataFrame, what: String): Unit = {
+          assert(served.schema === lineage.schema, s"$what schema")
+          assert(rows(served) === rows(lineage), s"$what rows ($dir, station $id, $p)")
+        }
+        def kinds(ks: String*) = f.select((col("day") +: ks.map(col)): _*).orderBy(col("day"))
+        check(st.getDf(period = p), kinds("raw", "qc", "filled"), "getDf")
+        check(st.getRaw(p), kinds("raw"), "getRaw")
+        check(st.getQc(p), kinds("qc"), "getQc")
+        check(st.getFilled(p), kinds("filled", "filled_by"), "getFilled")
+        check(st.getCorr(p),
+          lin.select(lin.corr, id, p).select("day", "corr").orderBy("day"), "getCorr")
+        for (g <- Seq("month", "year"))
+          check(st.getDf(Seq("filled", "raw"), p, aggTo = g),
+            Aggregate.aggTo(f, "day", "day", g, mean = false, Seq("filled", "raw"))
+              .drop("station_id").orderBy(col(g)), s"aggTo $g")
+        check(st.getDf(Seq("raw", "filled"), p, sqlAddWhere = "filled > 100"),
+          f.filter(expr("filled > 100")).select("day", "raw", "filled").orderBy("day"),
+          "sqlAddWhere")
+        if (id == 99999L) assert(st.getDf(period = p).isEmpty)
+      }
+      assert(rows(dbs.station(7L).getDf()).nonEmpty)
+    }
+    TsQueries.clearMemo(spark)
+  }
+
+  /** Runs `action` and returns the query executions it ran and the
+    * number of jobs they started. */
+  private def observe(action: => Any): (Seq[QueryExecution], Int) = {
+    val sc = spark.sparkContext
+    val group = s"lookup-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = qes.add(qe)
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    sc.setJobGroup(group, group)
+    try {
+      action
+      // both listeners sit on the shared event queue, so once the
+      // action's end has arrived its job starts have too
+      eventually(timeout(30.seconds))(assert(!qes.isEmpty))
+    } finally {
+      sc.clearJobGroup()
+      spark.listenerManager.unregister(qeListener)
+      sc.removeSparkListener(jobListener)
+    }
+    (scala.jdk.CollectionConverters.CollectionHasAsScala(qes).asScala.toSeq, jobs.get)
+  }
+
+  test("plan-shape guard: a lookup over persisted kinds is one cache leaf, one job, no exchange") {
+    TsQueries.clearMemo(spark)
+    val dbp = new WeatherDb(spark, db.dir)
+    val raster = Series.raster(dbp.events)
+    // what each reader reads, persisted the way a serving deployment
+    // holds it (the memo persists raw, meta, qc and filled itself)
+    val held = Seq(dbp.corr, MultiAnnual.adjustMult(dbp.filled, raster),
+      Aggregate.countHoles(dbp.qc), Aggregate.groupWide(dbp.events)).map(_.persist())
+    try {
+      (Seq(dbp.raw, dbp.meta, dbp.qc, dbp.filled) ++ held).foreach(_.count())
+      val st = dbp.station(3L)
+      val p = TimestampPeriod.of("2024-01-04", "2024-01-21")
+      val readers: Seq[(String, () => Any)] = Seq(
+        "getDf" -> (() => st.getDf(period = p).collect()),
+        "getRaw" -> (() => st.getRaw(p).collect()),
+        "getQc" -> (() => st.getQc(p).collect()),
+        "getFilled" -> (() => st.getFilled(p).collect()),
+        "getDf aggTo" -> (() => st.getDf(Seq("filled"), p, aggTo = "month").collect()),
+        "getDf sqlAddWhere" -> (() => st.getDf(period = p, sqlAddWhere = "raw > 0").collect()),
+        "getCorr" -> (() => st.getCorr(p).collect()),
+        "getAdj" -> (() => st.getAdj(period = p).collect()),
+        "getFilledPeriod" -> (() => st.getFilledPeriod()),
+        "getMaxPeriod" -> (() => st.getMaxPeriod()),
+        "countHoles" -> (() => st.countHoles.collect()),
+        "isinDb" -> (() => st.isinDb),
+        "GroupStation.getDf" -> (() => dbp.groupStation(3L).getDf(p).collect()))
+      for ((name, read) <- readers) {
+        val (qes, jobs) = observe(read())
+        assert(qes.size === 1, s"$name ran ${qes.size} queries")
+        val qe = qes.head
+        val exchanges = collect(qe.executedPlan) { case e: Exchange => e }
+        assert(exchanges.isEmpty, s"$name plans exchanges:\n${qe.executedPlan}")
+        assert(jobs === 1, s"$name ran $jobs jobs")
+        val leaves = qe.analyzed.collectLeaves()
+        assert(leaves.size === 1 && leaves.head.isInstanceOf[InMemoryRelation],
+          s"$name reads ${leaves.map(_.nodeName).mkString(", ")}")
+      }
+    } finally {
+      held.foreach(_.unpersist())
+      TsQueries.clearMemo(spark)
+    }
+  }
+
+  test("a lookup held across a release recomputes and persists nothing") {
+    val sc = spark.sparkContext
+    def station() = new WeatherDb(spark, db.dir).station(0L)
+    // a first cycle gives the expected rows and leaves only what
+    // outlives the memo (the neighbor ranking's own memo)
+    TsQueries.clearMemo(spark)
+    val (dfRows, corrRows) = (rows(station().getDf()), rows(station().getCorr()))
+    TsQueries.clearMemo(spark)
+    val before = sc.getPersistentRDDs.keySet
+    val st = station()
+    val df = st.getDf()
+    assert(rows(df) === dfRows) // read from the cache before its release
+    val corr = st.getCorr()     // built, never run before the release
+    assert(sc.getPersistentRDDs.keySet.diff(before).nonEmpty) // the memo's kinds
+    TsQueries.clearMemo(spark)
+    assert(sc.getPersistentRDDs.keySet.subsetOf(before))
+    assert(rows(df) === dfRows)
+    assert(rows(corr) === corrRows)
+    val left = sc.getPersistentRDDs.keySet.diff(before)
+    assert(left.isEmpty, s"persisted again after the release: ${left.map(sc.getPersistentRDDs)}")
   }
 }
