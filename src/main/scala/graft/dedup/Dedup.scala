@@ -427,7 +427,17 @@ object Dedup {
     * (rarest; they cannot exist index-side, so ranking them first is
     * also the efficient choice). The candidate set may differ from the
     * full-corpus-df run, but both are supersets of the true pairs, so
-    * the VERIFIED output is identical (spec-pinned). */
+    * the VERIFIED output is identical (spec-pinned).
+    *
+    * Loading: [[TextIndexSnapshot.load]] reads the three parts under
+    * the schemas pinned in [[TextIndexSnapshot.parts]] rather than
+    * inferring them. A daily screen loads the snapshot once per
+    * request, and inference would start one footer-reading job per
+    * part — three of a 20-document screen's eleven jobs, for schemas
+    * that `save` fixes anyway. What is left of a load is the meta-row
+    * job.
+    * A corrupt part still fails loudly (spec-pinned): a column in an
+    * unreadable type fails the screen's scan, a missing one the load. */
   case class TextIndexSnapshot(index: DataFrame, dfreq: DataFrame, threshold: Double) {
     /** Write the artifact (parquet dirs + the threshold the prefix
       * lengths were cut at), then release the builder's cache — once
@@ -446,11 +456,17 @@ object Dedup {
   }
 
   object TextIndexSnapshot {
+    /** The parts `save` writes, in the schemas it writes them in. */
+    private[graft] val parts = new graft.core.Artifact(
+      "index" -> "doc_id BIGINT, sz INT, sh ARRAY<BIGINT>, prefix ARRAY<BIGINT>",
+      "dfreq" -> "h BIGINT, dfreq BIGINT",
+      "meta" -> "threshold DOUBLE")
+
     def load(spark: org.apache.spark.sql.SparkSession, dir: String): TextIndexSnapshot =
       TextIndexSnapshot(
-        spark.read.parquet(s"$dir/index"),
-        spark.read.parquet(s"$dir/dfreq"),
-        spark.read.parquet(s"$dir/meta").head().getDouble(0))
+        parts.read(spark, dir, "index"),
+        parts.read(spark, dir, "dfreq"),
+        parts.read(spark, dir, "meta").head().getDouble(0))
   }
 
   /** Index rows (doc_id, sz, sorted hashes, rare-first prefix) for one
@@ -604,16 +620,26 @@ object Dedup {
     * differ) but both candidate sets are complete, and verification is
     * exact.
     *
-    * Plan: increment-only shingle scan; prefix equi-join on h with the
-    * PPJoin length filter; two keyed verify joins (no broadcast — the
-    * index side is the 100 TB one); per-increment argmax window. */
+    * Plan: increment-only shingle scan, persisted hash-partitioned on
+    * doc_id; prefix equi-join on h with the PPJoin length filter; two
+    * keyed verify joins; per-increment argmax window; the probe ids
+    * come from the same persisted frame. Every increment-side operator
+    * keys on the increment's doc_id (renamed inc_id): the prefix cut's
+    * (doc_id, sz) aggregate, the candidate (inc_id, idx_id) distinct,
+    * the verify join on inc_id, the argmax window and the probe join.
+    * Once the increment is partitioned on it, none of them shuffles.
+    * Under the broadcast threshold the planner broadcasts the df table,
+    * the index postings and both verify sides' hash sets: four
+    * broadcasts and no shuffle (spec-pinned). An index past the
+    * threshold is joined on h and idx_id by shuffled keyed joins
+    * instead — the 100 TB shape. */
   def incrementalDedupWithSnapshot(incrementDocs: DataFrame,
       snapshot: TextIndexSnapshot): DataFrame = {
     val hsInc = withShingles(incrementDocs)
-      .select(col("doc_id"), col("hashes")).persist()
+      .select(col("doc_id"), col("hashes")).repartition(col("doc_id")).persist()
     hsInc.count()
     try {
-      val out = bestMatch(incrementDocs.select(col("doc_id")),
+      val out = bestMatch(hsInc.select(col("doc_id")),
         snapshotVerifiedPairs(hsInc, snapshot), "jaccard")
         .persist()
       out.count()
@@ -1164,10 +1190,17 @@ object Dedup {
   }
 
   object EmbeddingLshSnapshot {
+    /** The parts `save` writes, in the schemas it writes them in (a
+      * load reads under them, as [[TextIndexSnapshot.load]] does). */
+    private[graft] val parts = new graft.core.Artifact(
+      "vectors" -> "id BIGINT, emb ARRAY<DOUBLE>, nrm DOUBLE",
+      "sigs" -> "id BIGINT, band INT, sig BIGINT",
+      "meta" -> "bands INT, rows_per_band INT")
+
     def load(spark: org.apache.spark.sql.SparkSession, dir: String): EmbeddingLshSnapshot = {
-      val meta = spark.read.parquet(s"$dir/meta").head()
-      EmbeddingLshSnapshot(spark.read.parquet(s"$dir/vectors"),
-        spark.read.parquet(s"$dir/sigs"), meta.getInt(0), meta.getInt(1))
+      val meta = parts.read(spark, dir, "meta").head()
+      EmbeddingLshSnapshot(parts.read(spark, dir, "vectors"),
+        parts.read(spark, dir, "sigs"), meta.getInt(0), meta.getInt(1))
     }
   }
 

@@ -382,11 +382,19 @@ object Ann {
   }
 
   object PqIndex {
+    /** The parts `save` writes, in the schemas it writes them in (a
+      * load reads under them — no schema-inference job per part). */
+    private[graft] val parts = new graft.core.Artifact(
+      "codes" -> "nb_id BIGINT, codes ARRAY<INT>, cell BIGINT",
+      "centroids" -> "cell BIGINT, vb ARRAY<FLOAT>, nb DOUBLE",
+      "codebook" -> "cb ARRAY<ARRAY<ARRAY<DOUBLE>>>",
+      "meta" -> "m INT, ks INT, n_cells INT")
+
     def load(spark: org.apache.spark.sql.SparkSession, dir: String): PqIndex = {
-      val meta = spark.read.parquet(s"$dir/meta").head()
-      PqIndex(spark.read.parquet(s"$dir/codes"),
-        spark.read.parquet(s"$dir/centroids"),
-        spark.read.parquet(s"$dir/codebook"),
+      val meta = parts.read(spark, dir, "meta").head()
+      PqIndex(parts.read(spark, dir, "codes"),
+        parts.read(spark, dir, "centroids"),
+        parts.read(spark, dir, "codebook"),
         meta.getInt(0), meta.getInt(1), meta.getInt(2))
     }
   }

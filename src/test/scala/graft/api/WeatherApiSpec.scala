@@ -1,20 +1,15 @@
 package graft.api
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.concurrent.Eventually
-import org.scalatest.time.SpanSugar._
-import graft.SparkSpec
+import graft.{Observe, SparkSpec}
 import graft.core.{Tables, TimestampPeriod}
 import graft.tsdb._
 
-class WeatherApiSpec extends SparkSpec with AdaptiveSparkPlanHelper with Eventually {
+class WeatherApiSpec extends SparkSpec with AdaptiveSparkPlanHelper with Observe {
 
   private lazy val db = new WeatherDb(spark, "/root/testdata/sf0.001")
 
@@ -353,38 +348,6 @@ class WeatherApiSpec extends SparkSpec with AdaptiveSparkPlanHelper with Eventua
       assert(rows(dbs.station(7L).getDf()).nonEmpty)
     }
     TsQueries.clearMemo(spark)
-  }
-
-  /** Runs `action` and returns the query executions it ran and the
-    * number of jobs they started. */
-  private def observe(action: => Any): (Seq[QueryExecution], Int) = {
-    val sc = spark.sparkContext
-    val group = s"lookup-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    val qeListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = qes.add(qe)
-    }
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(qeListener)
-    sc.setJobGroup(group, group)
-    try {
-      action
-      // both listeners sit on the shared event queue, so once the
-      // action's end has arrived its job starts have too
-      eventually(timeout(30.seconds))(assert(!qes.isEmpty))
-    } finally {
-      sc.clearJobGroup()
-      spark.listenerManager.unregister(qeListener)
-      sc.removeSparkListener(jobListener)
-    }
-    (scala.jdk.CollectionConverters.CollectionHasAsScala(qes).asScala.toSeq, jobs.get)
   }
 
   test("plan-shape guard: a lookup over persisted kinds is one cache leaf, one job, no exchange") {
