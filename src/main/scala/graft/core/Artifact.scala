@@ -1,14 +1,15 @@
 package graft.core
 
+import scala.collection.mutable
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** The parts of a persisted parquet artifact (one directory each under
-  * the artifact's root) and the schema its `save` writes each part in,
-  * declared once beside that `save`.
+/** The parts of a persisted parquet artifact (one directory or file
+  * each under the artifact's root) and the schema its writer stores
+  * each part in, declared once beside that writer.
   *
   * A load reads every part under its pinned schema instead of letting
   * Spark infer it: inference starts one footer-reading job per part,
@@ -36,4 +37,54 @@ final class Artifact(parts: (String, String)*) {
     }
     df
   }
+
+  private val memo = mutable.Map.empty[String, Artifact.Loaded]
+
+  /** The version of the artifact at `dir`: every file of every part
+    * (part/name, length, modification time), listed on the driver.
+    * None when a part is missing, which leaves the failure to `load`. */
+  private def version(spark: SparkSession, root: Path): Option[Seq[(String, Long, Long)]] = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed = parts.map { case (part, _) => new Path(root, part) }
+      .map(p => if (fs.exists(p)) Some(p -> fs.listStatus(p)) else None)
+    if (listed.contains(None)) None
+    else Some(listed.flatten.flatMap { case (p, files) =>
+      files.map(f => (s"${p.getName}/${f.getPath.getName}", f.getLen, f.getModificationTime))
+    }.sortBy(_._1))
+  }
+
+  /** `load` of the artifact at `dir`, memoized per directory and
+    * session: while the listing of the artifact's files (name, length,
+    * modification time) is unchanged, the value `load` returned for
+    * this session is returned again, and nothing is read. Any write to
+    * the artifact changes that listing, so the next call loads again
+    * and re-checks the parts; a missing part leaves the call to `load`
+    * and its failure. The memo holds the loaded value (plans, never
+    * storage), one entry per directory; a load from another session
+    * replaces the entry, so no two sessions share one. Entries of
+    * stopped sessions are dropped on the next call. */
+  def memoized[T](spark: SparkSession, dir: String)(load: => T): T = {
+    val root = new Path(dir)
+    val key = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(root).toString
+    val current = version(spark, root)
+    val hit = memo.synchronized {
+      memo.filterInPlace { case (_, e) => !e.spark.sparkContext.isStopped }
+      memo.get(key).filter(e => e.spark.eq(spark) && current.contains(e.version))
+    }
+    hit match {
+      case Some(e) => e.value.asInstanceOf[T]
+      case None =>
+        memo.synchronized(memo.remove(key))
+        val value = load
+        current.foreach(v => memo.synchronized(memo(key) = Artifact.Loaded(spark, v, value)))
+        value
+    }
+  }
+}
+
+private object Artifact {
+  /** One memo entry: the session that loaded it, the version it was
+    * loaded at and the loaded value. */
+  final case class Loaded(spark: SparkSession, version: Seq[(String, Long, Long)], value: Any)
 }

@@ -7,9 +7,10 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 /** Loaders for the driver-provided parquet tables.
   *
   * Mirrors the reference's per-table access layer
-  * (weatherdb/db/connections.py) but as plain Spark reads: schema
-  * discovery, predicate pushdown and column pruning are left to the
-  * parquet datasource.
+  * (weatherdb/db/connections.py) but as plain Spark reads: predicate
+  * pushdown and column pruning are left to the parquet datasource, and
+  * so is schema discovery, except for the corpus tables, whose schemas
+  * are pinned.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -81,8 +82,15 @@ object Tables {
     }
   }
 
+  /** The corpus tables, read under the schemas the test data stores
+    * them in (no schema-inference job per call); a missing column fails
+    * the call, a column stored in another type the first scan. */
+  private val corpus = new Artifact(
+    "documents.parquet" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings.parquet" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+
   def documents(s: SparkSession, d: String): DataFrame =
-    ensureParallelism(s, load(s, d, "documents"))
+    ensureParallelism(s, corpus.read(s, d, "documents.parquet"))
   def embeddings(s: SparkSession, d: String): DataFrame =
-    ensureParallelism(s, load(s, d, "embeddings"))
+    ensureParallelism(s, corpus.read(s, d, "embeddings.parquet"))
 }

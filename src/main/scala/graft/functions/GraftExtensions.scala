@@ -12,6 +12,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // whole-operator extension: the native streaming-merge as-of join
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    // the optimizer fence shared frames are planned behind
+    ext.injectPlannerStrategy(_ => graft.plans.FenceStrategy)
     // optimizer extensions: predicate pushdown + column pruning
     // through the as-of plan (opaque to the built-in rules)
     ext.injectOptimizerRule(_ => graft.plans.AsOfFilterPushdown)

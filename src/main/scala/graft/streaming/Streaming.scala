@@ -103,14 +103,13 @@ object Streaming extends Serializable {
     def update(batch: DataFrame): Unit = synchronized {
       val b = batch.persist()
       if (b.isEmpty) { b.unpersist(); return }
-      // returns eagerly persisted — materialized before b is released
+      // the screen is lazy: the eager checkpoint runs it before b is released
       val screened = graft.dedup.Dedup.incrementalDedupWithSnapshot(b, snapshot)
       val next = resultFrame.map(_.unionByName(screened)).getOrElse(screened.toDF())
         .localCheckpoint(true)
       val old = resultFrame
       resultFrame = Some(next)
       old.foreach(graft.core.Checkpoints.release)
-      screened.unpersist()
       b.unpersist()
     }
   }

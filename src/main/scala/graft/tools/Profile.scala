@@ -2,7 +2,9 @@ package graft.tools
 
 import scala.collection.mutable
 import scala.util.Try
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import graft.{Bench, SparkEntry}
 import graft.core.{Json, Session}
 import graft.tsdb.TsQueries
@@ -23,7 +25,12 @@ import graft.tsdb.TsQueries
   *    stays warm). `cold` executes the frame the split built and
   *    planned, so the split plus `cold.s` is the query's cold time in
   *    Bench; `warm` builds the query again. Each has `s`, `error`
-  *    (null, or the first line of what the query threw) and `jobs` —
+  *    (null, or the first line of what the query threw),
+  *    `codegen_compiles` and `codegen_compile_ms` — the Janino compiles
+  *    the pass started (generated classes the codegen cache did not
+  *    hold) and their compile time, from Spark's `CodegenMetrics` and
+  *    `CodeGenerator.compileTime`; the cold pass's include the build's
+  *    and the planning split's — and `jobs` —
   *    the pass's 12 longest jobs (`job`, `wall_s`, `desc`; the cold
   *    pass's include any job the build ran), each with its 4 longest
   *    stages (`stage`, `wall_s`, `tasks`, `task_ms`, `gc_ms`, `name`):
@@ -46,15 +53,22 @@ object Profile {
     Bench.warmUp(spark, sfDir)
     val table = new StageTable
     spark.sparkContext.addSparkListener(table)
-    def pass(label: String, timing: Bench.Timing): String = {
+    // Janino compiles so far in this JVM and their total time in ms
+    def codegen(): (Long, Double) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
+    def pass(label: String, since: (Long, Double))(timing: Bench.Timing): String = {
       Thread.sleep(300) // let listener events drain
       val (s, err) = timing
-      s""""$label":{"s":$s,"error":${err.fold("null")(Json.str)},"jobs":${table.json()}}"""
+      val (n, ms) = codegen()
+      s""""$label":{"s":$s,"error":${err.fold("null")(Json.str)},""" +
+        s""""codegen_compiles":${n - since._1},"codegen_compile_ms":${ms - since._2},""" +
+        s""""jobs":${table.json()}}"""
     }
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       TsQueries.clearMemo(spark)
       table.reset()
+      val compiled = codegen()
       val marks = mutable.ArrayBuffer(System.nanoTime())
       def mark(): Unit = marks += System.nanoTime()
       // a phase that throws ends the split; the cold pass reports the error
@@ -67,10 +81,10 @@ object Profile {
       }
       val split = Seq("build_s", "analyze_s", "optimize_s", "physical_s")
         .zip(marks.zip(marks.tail)).map { case (k, (a, b)) => s""""$k":${(b - a) / 1e9}""" }
-      val cold = pass("cold", Bench.timed(built.get))
+      val cold = pass("cold", compiled)(Bench.timed(built.get))
       TsQueries.clearMemo(spark)
       table.reset()
-      val warm = pass("warm", Bench.timed(SparkEntry.queries(name)(spark, sfDir)))
+      val warm = pass("warm", codegen())(Bench.timed(SparkEntry.queries(name)(spark, sfDir)))
       println((s""""query":${Json.str(name)}""" +: (split :+ cold :+ warm)).mkString("{", ",", "}"))
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.SparkSpec
+import graft.{Observe, SparkSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.TimestampType
   * must hand operators a plain UTC TimestampType — and must fail
   * loudly (require) rather than pass an unknown encoding through.
   */
-class TablesSpec extends SparkSpec {
+class TablesSpec extends SparkSpec with Observe {
 
   private val sfDirs =
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
@@ -64,5 +64,48 @@ class TablesSpec extends SparkSpec {
     assert(!row.isNullAt(0) && !row.isNullAt(1))
     assert(row.getLong(0) / 1000000L == row.getLong(1),
       "unix_micros and bigint-cast must agree on the same instant")
+  }
+
+  test("the corpus tables load under pinned schemas without a job") {
+    for (dir <- sfDirs) {
+      val (_, jobs) = observe {
+        Tables.documents(spark, dir); Tables.embeddings(spark, dir)
+        spark.emptyDataFrame.collect()
+      }
+      assert(jobs === 0, s"$dir: loading the corpus tables ran $jobs jobs")
+    }
+  }
+
+  private val dirs = scala.collection.mutable.ListBuffer.empty[java.io.File]
+
+  override def afterAll(): Unit = {
+    dirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    super.afterAll()
+  }
+
+  /** A tmp directory holding `df` as `name`.parquet. */
+  private def written(name: String, df: org.apache.spark.sql.DataFrame): String = {
+    dirs += java.nio.file.Files.createTempDirectory("graft-tables").toFile
+    df.write.parquet(s"${dirs.last}/$name.parquet")
+    dirs.last.getPath
+  }
+
+  test("a corpus table missing a column fails the load") {
+    val sf = sfDirs.head
+    val docs = written("documents", Tables.documents(spark, sf).drop("n_chars"))
+    val e = intercept[IllegalArgumentException](Tables.documents(spark, docs))
+    assert(e.getMessage.contains("n_chars"), e.toString)
+    val embs = written("embeddings", Tables.embeddings(spark, sf).drop("label"))
+    val f = intercept[IllegalArgumentException](Tables.embeddings(spark, embs))
+    assert(f.getMessage.contains("label"), f.toString)
+  }
+
+  test("a corpus table column stored in another type fails the scan") {
+    val sf = sfDirs.head
+    val docs = written("documents",
+      Tables.documents(spark, sf).withColumn("doc_id", col("doc_id").cast("string")))
+    val e = intercept[Exception](Tables.documents(spark, docs).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("doc_id")), e.toString)
   }
 }
