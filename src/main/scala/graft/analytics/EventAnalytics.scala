@@ -1774,9 +1774,8 @@ object EventAnalytics {
     *
     * Plan: the BIG-data part is one lag/lead window over (user ORDER
     * BY ts, id) + one keyed count — the chain itself is an
-    * O(states²·channels) frame, so the iteration is broadcast-joined
-    * work the driver never collects; rounds localCheckpoint like the
-    * pageRank/components loops. */
+    * ≤64-state frame, collected once; the value iteration runs
+    * driver-side over it as a pure fold. */
   def markovAttribution(events: DataFrame, iterations: Int = 16): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val seq0 = events
@@ -2189,8 +2188,7 @@ object EventAnalytics {
           lit(0.5).as("pi2"), (col("m") + col("s")).as("mu2"),
           greatest(round(col("s") * col("s") / lit(2.0) + lit(1e-9), 4),
             lit(0.0001)).as("var2"))
-      var params = init.localCheckpoint(true)
-      (1 to rounds).foreach { _ =>
+      val params = graft.core.Fixpoint.rounds(init, rounds) { (params, _) =>
         val resp = vals.join(broadcast(params), Seq("event_type"))
           .withColumn("w1", col("pi1") / sqrt(col("var1"))
             * exp((col("v") - col("mu1")) * (col("v") - col("mu1"))
@@ -2203,7 +2201,7 @@ object EventAnalytics {
               col("w2") / (col("w1") + col("w2"))).otherwise(lit(0.5))
               + lit(1e-9), 6))
           .withColumn("r1", lit(1.0) - col("r2"))
-        val next = resp.groupBy(col("event_type"))
+        resp.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(col("r1")).as("n1"), sum(col("r2")).as("n2"),
             sum(col("r1") * col("v")).as("s1"), sum(col("r2") * col("v")).as("s2"),
@@ -2220,9 +2218,6 @@ object EventAnalytics {
             greatest(round(col("q2") / col("n2")
               - (col("s2") / col("n2")) * (col("s2") / col("n2"))
               + lit(1e-9), 4), lit(0.0001)).as("var2"))
-          .localCheckpoint(true)
-        graft.core.Checkpoints.release(params)
-        params = next
       }
       params.select(col("event_type"), col("n"), col("pi1"), col("mu1"),
         col("var1"), col("pi2"), col("mu2"), col("var2"))

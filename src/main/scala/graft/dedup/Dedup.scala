@@ -744,8 +744,8 @@ object Dedup {
     * (one keyed self-join), halving the remaining distance to the
     * component minimum: O(log diameter) rounds even for adversarial
     * chain-shaped duplicate graphs, where plain propagation needs
-    * O(diameter) and would trip the round bound. Labels are
-    * localCheckpoint'ed per round so lineage stays flat. All data
+    * O(diameter) and would trip the round bound. The rounds run
+    * through [[graft.core.Fixpoint.converge]]. All data
     * movement is keyed shuffles of the (id, label) frame; nothing
     * all-pairs, nothing driver-side except the per-round convergence
     * aggregate — the textbook 100 TB connected-components shape. */
@@ -784,21 +784,19 @@ object Dedup {
       // it IS the fixpoint, making the loop one confirmation round.
       // Both edge directions are present, so src covers all touched
       // nodes and min(dst) over the group is the full neighbor min.
-      var labels = edges.groupBy(col("src").as("doc_id"))
+      val seed = edges.groupBy(col("src").as("doc_id"))
         .agg(least(min(col("dst")), col("src")).as("comp"))
-        .localCheckpoint(false) // materialized by the labelSum below
       // fixpoint detection without a join: labels only ever DECREASE
       // under min-propagation, so the exact (decimal, overflow-free)
       // label sum is strictly monotone until convergence — one cheap
-      // aggregate per round over the just-checkpointed frame
-      def labelSum(df: DataFrame): java.math.BigDecimal =
-        Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0))
-          .getOrElse(java.math.BigDecimal.ZERO) // empty ids frame
-      var prevSum = labelSum(labels)
-      var converged = false
-      var rounds = 0
-      val maxRounds = 50
-      while (!converged && rounds < maxRounds) {
+      // aggregate per round (Scala's BigDecimal compares by value)
+      def labelSum(df: DataFrame): BigDecimal =
+        BigDecimal(Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0))
+          .getOrElse(java.math.BigDecimal.ZERO)) // empty ids frame
+      // past 50 rounds fail loudly: a truncated propagation splits a
+      // component and keeps duplicates (a huge diameter needs a
+      // large-star/small-star step, not a higher bound)
+      val labels = graft.core.Fixpoint.converge(seed, 50)(labelSum) { labels =>
         val propagated = edges
           .join(labels.select(col("doc_id").as("dst"), col("comp")), Seq("dst"))
           .select(col("src").as("doc_id"), col("comp"))
@@ -809,30 +807,12 @@ object Dedup {
         // re-keyed on doc_id — unique after the groupBy); labels only
         // decrease, so the fixpoint is unchanged but the distance to
         // the component minimum halves per round
-        val next = stepped
+        stepped
           .join(stepped.select(col("doc_id").as("comp"), col("comp").as("jumped")),
             Seq("comp"), "left")
           .select(col("doc_id"),
             least(col("comp"), coalesce(col("jumped"), col("comp"))).as("comp"))
-          // LAZY checkpoint: the labelSum aggregate right below is the
-          // round's one action — it materializes the checkpoint blocks
-          // and truncates lineage in the same job (the eager form paid
-          // a separate materialization job per round)
-          .localCheckpoint(false)
-        val nextSum = labelSum(next)
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-        // superseded checkpoint: release its backing RDD blocks now
-        // (Dataset.unpersist would be a CacheManager no-op here)
-        graft.core.Checkpoints.release(labels)
-        labels = next
-        rounds += 1
       }
-      // silent truncation would return a component split in two and the
-      // caller would keep duplicate documents — fail loudly instead
-      if (!converged) throw new IllegalStateException(
-        s"component propagation did not converge in $maxRounds rounds " +
-          "(component diameter too large — switch the step to large-star/small-star)")
       val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("comp_size"))
       val clustered = labels.join(sizes, Seq("comp"))
         .select(col("doc_id"), col("comp"), col("comp_size"))

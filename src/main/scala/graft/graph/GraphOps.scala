@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Fixpoint
 
 /** Graph analytics over edge frames (the kNN station graph, the
   * near-dup document graph): PageRank and triangle counting — the two
@@ -38,10 +39,8 @@ object GraphOps {
     // the rank frame is referenced TWICE per iteration (contribution
     // join + dangling-node left join): carried as a plain plan the
     // tree would double per round (2^10 subtree copies — exponential
-    // analysis cost). Checkpoint each round instead, exactly like the
-    // connected-components loop: the rank frame is O(#nodes), the
-    // cheap side of the graph, and superseded rounds release their
-    // blocks eagerly.
+    // analysis cost). Fixpoint checkpoints each round instead: the
+    // rank frame is O(#nodes), the cheap side of the graph.
     val e = edges.select(col("src"), col("dst")).persist()
     try {
       val nodes = e.select(col("src").as("id"))
@@ -61,21 +60,17 @@ object GraphOps {
       val grid = nodes.crossJoin(broadcast(nN))
         .select(col("id"), col("n_nodes")).persist()
       try {
-        var ranks = grid
+        val init = grid
           .select(col("id"), round(lit(1.0) / col("n_nodes"), 10).as("pr"))
-          .localCheckpoint(true)
-        (1 to iterations).foreach { _ =>
+        val ranks = Fixpoint.rounds(init, iterations) { (ranks, _) =>
           val contrib = e2.join(ranks.select(col("id").as("src"), col("pr")), Seq("src"))
             .groupBy(col("dst").as("id"))
             .agg(sum(col("pr") / col("outdeg")).as("in_sum"))
-          val next = grid
+          grid
             .join(contrib, Seq("id"), "left")
             .select(col("id"),
               round((lit(1.0) - lit(damping)) / col("n_nodes")
                 + lit(damping) * coalesce(col("in_sum"), lit(0.0)), 10).as("pr"))
-            .localCheckpoint(true)
-          graft.core.Checkpoints.release(ranks)
-          ranks = next
         }
         ranks.select(col("id"), round(col("pr") + lit(1e-9), 6).as("pagerank"))
       } finally { e2.unpersist(); grid.unpersist() }
@@ -93,9 +88,7 @@ object GraphOps {
     * code benefits from AQE skew splitting on the wedge join.
     */
   def triangles(edges: DataFrame): DataFrame = {
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
-      .unionByName(edges.select(col("dst").as("u"), col("src").as("v")))
-      .filter(col("u") =!= col("v")).distinct()
+    val und = undirected(edges)
     val canon = und.filter(col("u") < col("v"))
     val deg = und.groupBy(col("u").as("id")).agg(count(lit(1)).as("degree"))
     // wedges a<b<c with edges (a,b) and (b,c); close with (a,c)
@@ -125,26 +118,19 @@ object GraphOps {
     * float hazard.
     *
     * Plan: each round = one keyed degree aggregate + two semi-joins
-    * of the edge frame against the O(#survivors) keep list;
-    * per-round localCheckpoint with eager release, exactly the
-    * pageRank/components loop shape. */
+    * of the edge frame against the O(#survivors) keep list, driven
+    * by [[graft.core.Fixpoint.rounds]]. */
   def kCore(edges: DataFrame, k: Int = 4, rounds: Int = 8): DataFrame = {
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
-      .unionByName(edges.select(col("dst").as("u"), col("src").as("v")))
-      .filter(col("u") =!= col("v")).distinct()
+    val und = undirected(edges)
     val allDeg = und.groupBy(col("u").as("station_id"))
       .agg(count(lit(1)).as("degree"))
-    var alive = und.localCheckpoint(true)
-    (1 to rounds).foreach { _ =>
+    val alive = Fixpoint.rounds(und, rounds) { (alive, _) =>
       val keep = alive.groupBy(col("u")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("u"))
-      val next = alive
+      alive
         .join(keep, Seq("u"), "left_semi")
         .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(alive)
-      alive = next
     }
     val coreDeg = alive.groupBy(col("u").as("station_id"))
       .agg(count(lit(1)).as("core_degree"))
@@ -163,9 +149,7 @@ object GraphOps {
     * endpoints), one keyed community rollup, one scalar fold — all
     * integer counts, so Q is engine-exact before its final rounding. */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
-      .unionByName(edges.select(col("dst").as("u"), col("src").as("v")))
-      .filter(col("u") =!= col("v")).distinct()
+    val und = undirected(edges)
     val lab = labels.select(col("station_id"), col("community"))
     val tagged = und
       .join(broadcast(lab.select(col("station_id").as("u"), col("community").as("cu"))), Seq("u"))
@@ -198,9 +182,7 @@ object GraphOps {
     * list (the degree frame is O(#nodes) — broadcastable), one global
     * moment rollup to a single row. */
   def assortativity(edges: DataFrame): DataFrame = {
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
-      .unionByName(edges.select(col("dst").as("u"), col("src").as("v")))
-      .filter(col("u") =!= col("v")).distinct()
+    val und = undirected(edges)
     val deg = und.groupBy(col("u").as("id")).agg(count(lit(1)).as("d"))
     und
       .join(broadcast(deg.select(col("id").as("u"), col("d").as("du"))), Seq("u"))
@@ -227,8 +209,8 @@ object GraphOps {
     * pageRank determinism discipline).
     *
     * Plan: per round two edges⋈scores joins on the edge keys + two
-    * keyed sums + two 1-row L1 broadcasts; per-round localCheckpoint
-    * with eager release. O(#edges) shuffle per half-round. */
+    * keyed sums + two 1-row L1 broadcasts, driven by
+    * [[graft.core.Fixpoint.rounds]]. O(#edges) shuffle per half-round. */
   def hits(edges: DataFrame, rounds: Int = 8): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct().persist()
@@ -240,9 +222,8 @@ object GraphOps {
         df.crossJoin(broadcast(s))
           .select(col("id"), round(col(c) / col("l1"), 10).as(c))
       }
-      var scores = nodes.select(col("id"), lit(1.0).as("auth"), lit(1.0).as("hub"))
-        .localCheckpoint(true)
-      (1 to rounds).foreach { _ =>
+      val init = nodes.select(col("id"), lit(1.0).as("auth"), lit(1.0).as("hub"))
+      val scores = Fixpoint.rounds(init, rounds) { (scores, _) =>
         val aRaw = e.join(scores.select(col("id").as("src"), col("hub")), Seq("src"))
           .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("a_raw"))
         val auth = normalize(
@@ -253,9 +234,7 @@ object GraphOps {
         val hub = normalize(
           nodes.join(hRaw, Seq("id"), "left")
             .select(col("id"), coalesce(col("h_raw"), lit(0.0)).as("hub")), "hub")
-        val next = auth.join(hub, Seq("id")).localCheckpoint(true)
-        graft.core.Checkpoints.release(scores)
-        scores = next
+        auth.join(hub, Seq("id"))
       }
       scores.select(col("id"),
         round(col("auth") + lit(1e-9), 8).as("authority"),
@@ -273,28 +252,22 @@ object GraphOps {
     *
     * Plan: each round = one edges⋈frontier join (only nodes with a
     * finite distance propagate) + one keyed min + a left join onto the
-    * node grid; per-round localCheckpoint with eager release — the
-    * pageRank/components loop shape, one O(#edges) shuffle per round. */
+    * node grid, driven by [[graft.core.Fixpoint.rounds]]; one
+    * O(#edges) shuffle per round. */
   def bfsLayers(edges: DataFrame, rounds: Int = 16): DataFrame = {
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
-      .unionByName(edges.select(col("dst").as("u"), col("src").as("v")))
-      .filter(col("u") =!= col("v")).distinct().persist()
+    val und = undirected(edges).persist()
     try {
       val nodes = und.select(col("u").as("id")).distinct()
       val src = nodes.agg(min(col("id")).as("id"))
-      var dist = nodes.join(broadcast(src.withColumn("d0", lit(0L))), Seq("id"), "left")
+      val init = nodes.join(broadcast(src.withColumn("d0", lit(0L))), Seq("id"), "left")
         .select(col("id"), col("d0").as("dist"))
-        .localCheckpoint(true)
-      (1 to rounds).foreach { _ =>
+      val dist = Fixpoint.rounds(init, rounds) { (dist, _) =>
         val prop = und
           .join(dist.filter(col("dist").isNotNull)
             .select(col("id").as("u"), col("dist").as("du")), Seq("u"))
           .groupBy(col("v").as("id")).agg(min(col("du") + 1).as("in_min"))
-        val next = dist.join(prop, Seq("id"), "left")
+        dist.join(prop, Seq("id"), "left")
           .select(col("id"), least(col("dist"), col("in_min")).as("dist"))
-          .localCheckpoint(true)
-        graft.core.Checkpoints.release(dist)
-        dist = next
       }
       dist.select(col("id"), col("dist"), col("dist").isNotNull.as("reached"))
     } finally und.unpersist()
@@ -310,26 +283,20 @@ object GraphOps {
     * Plan: each round = one edges⋈labels join on the neighbor key +
     * one (node, label) count + a per-node arg-max as `max(struct(cnt,
     * -label))` — a plain keyed aggregate, NOT a window sort, so the
-    * vote never materializes an ordering; per-round localCheckpoint
-    * with eager release. At scale each round is one shuffle of
-    * O(#edges) votes. */
+    * vote never materializes an ordering; driven by
+    * [[graft.core.Fixpoint.rounds]]. At scale each round is one
+    * shuffle of O(#edges) votes. */
   def labelPropagation(edges: DataFrame, rounds: Int = 5): DataFrame = {
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
-      .unionByName(edges.select(col("dst").as("u"), col("src").as("v")))
-      .filter(col("u") =!= col("v")).distinct().persist()
+    val und = undirected(edges).persist()
     try {
-      var labels = und.select(col("u").as("id")).distinct()
-        .withColumn("label", col("id")).localCheckpoint(true)
-      (1 to rounds).foreach { _ =>
-        val next = und
+      val init = und.select(col("u").as("id")).distinct().withColumn("label", col("id"))
+      val labels = Fixpoint.rounds(init, rounds) { (labels, _) =>
+        und
           .join(labels.select(col("id").as("v"), col("label")), Seq("v"))
           .groupBy(col("u"), col("label")).agg(count(lit(1)).as("cnt"))
           .groupBy(col("u").as("id"))
           .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("best"))
           .select(col("id"), (-col("best.neg")).as("label"))
-          .localCheckpoint(true)
-        graft.core.Checkpoints.release(labels)
-        labels = next
       }
       val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("community_size"))
       labels.join(broadcast(sizes), Seq("label"))
@@ -381,9 +348,7 @@ object GraphOps {
     * all-pairs), existing edges leave by anti-join, degrees arrive by
     * broadcast, and the per-node top-K is a WindowGroupLimit. */
   def linkPrediction(edges: DataFrame, topK: Int = 5): DataFrame = {
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
-      .unionByName(edges.select(col("dst").as("u"), col("src").as("v")))
-      .filter(col("u") =!= col("v")).distinct()
+    val und = undirected(edges)
     val deg = und.groupBy(col("u").as("id")).agg(count(lit(1)).as("degree"))
     val wedges = und
       .join(und.select(col("u").as("w"), col("v")), Seq("v"))
@@ -408,4 +373,11 @@ object GraphOps {
       .select(col("u").as("station_id"), col("rank"), col("w").as("cand_id"),
         col("common"), col("adamic_adar"), col("jaccard"))
   }
+
+  /** The undirected closure of `(src, dst)` as distinct `(u, v)` rows,
+    * both orientations, self-loops dropped. */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("u"), col("dst").as("v"))
+      .unionByName(edges.select(col("dst").as("u"), col("src").as("v")))
+      .filter(col("u") =!= col("v")).distinct()
 }

@@ -82,8 +82,9 @@ object Ann {
     * Plan: candidate generation is the only data-scale pass (a 1-row
     * broadcast query against the corpus, TakeOrdered topN); the
     * topN×topN pairwise-sim frame and the greedy rounds (orderBy +
-    * LIMIT 1 winner per round, localCheckpoint per round — the BPE
-    * merge-winner discipline) never touch the big frame again. */
+    * LIMIT 1 winner per round, through [[graft.core.Fixpoint.rounds]])
+    * never touch the big frame again; only the final selection stays
+    * checkpointed. */
   def mmrRerank(embeddings: DataFrame, topN: Int = 20, select: Int = 10,
       lambda: Double = 0.7): DataFrame = {
     val n = withNorm(embeddings)
@@ -107,10 +108,10 @@ object Ann {
       .select(col("a"), col("b"), col("sim"))
       .localCheckpoint(true)
     val cand = cand0.select(col("nb_id"), col("rel")).localCheckpoint(true)
-    var selected = cand.orderBy(col("rel").desc, col("nb_id")).limit(1)
+    val first = cand.orderBy(col("rel").desc, col("nb_id")).limit(1)
       .select(col("nb_id"), lit(1).as("step"), col("rel"))
-      .localCheckpoint(true)
-    (2 to select).foreach { i =>
+    // round r picks the (r + 1)-th item
+    val selected = graft.core.Fixpoint.rounds(first, select - 1) { (selected, r) =>
       val simToSel = pair
         .join(selected.select(col("nb_id").as("b")), Seq("b"), "left_semi")
         .groupBy(col("a").as("nb_id")).agg(max(col("sim")).as("max_sim"))
@@ -120,9 +121,10 @@ object Ann {
         .withColumn("mmr", round(lit(lambda) * col("rel")
           - (lit(1.0) - lit(lambda)) * col("max_sim") + lit(1e-9), 10))
         .orderBy(col("mmr").desc, col("nb_id")).limit(1)
-        .select(col("nb_id"), lit(i).as("step"), col("rel"))
-      selected = selected.unionByName(next).localCheckpoint(true)
+        .select(col("nb_id"), lit(r + 1).as("step"), col("rel"))
+      selected.unionByName(next)
     }
+    Seq(pair, cand).foreach(graft.core.Checkpoints.release)
     selected.select(col("step"), col("nb_id").as("vec_id"), col("rel"))
       .orderBy(col("step"))
   }
@@ -149,7 +151,16 @@ object Ann {
     * the scanned share alongside recall. */
   private[graft] def ivfCandidates(embeddings: DataFrame, nQueries: Int = 10,
       nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    val n = withNorm(embeddings)
+    val (assigned, probes) = ivfRoute(withNorm(embeddings), nQueries, nCells, nProbe)
+    probes.join(assigned, Seq("cell")).filter(col("query_id") =!= col("nb_id"))
+      .select(col("query_id"), col("nb_id"))
+  }
+
+  /** IVF routing over a [[withNorm]] frame: (nb_id, cell) for every
+    * vector's nearest cell and (query_id, cell) for each query's
+    * `nProbe` nearest, the cells being the first `nCells` vectors. */
+  private def ivfRoute(n: DataFrame, nQueries: Int, nCells: Int,
+      nProbe: Int): (DataFrame, DataFrame) = {
     val cents = n.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cell"), col("embedding").as("vb"), col("nrm").as("nb"))
     def nearestCells(df: DataFrame, take: Int, idCol: String): DataFrame = {
@@ -161,10 +172,8 @@ object Ann {
       scored.withColumn("crank", row_number().over(w)).filter(col("crank") <= take)
         .select(col(idCol), col("cell"))
     }
-    val assigned = nearestCells(n, 1, "nb_id")
-    val probes = nearestCells(n.filter(col("vec_id") < nQueries), nProbe, "query_id")
-    probes.join(assigned, Seq("cell")).filter(col("query_id") =!= col("nb_id"))
-      .select(col("query_id"), col("nb_id"))
+    (nearestCells(n, 1, "nb_id"),
+      nearestCells(n.filter(col("vec_id") < nQueries), nProbe, "query_id"))
   }
 
   def ivfTopK(embeddings: DataFrame, k: Int = 5, nQueries: Int = 10,
@@ -222,22 +231,9 @@ object Ann {
     * rows-only; recall vs exact L2 asserted in the spec. */
   def ivfpqTopK(embeddings: DataFrame, k: Int = 5, nQueries: Int = 10,
       nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 16, ks: Int = 16, refine: Int = 12): DataFrame = {
-    val n = withNorm(embeddings)
-    val cents = n.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("embedding").as("vb"), col("nrm").as("nb"))
-    def nearestCells(df: DataFrame, take: Int, idCol: String): DataFrame = {
-      val scored = df.select(col("vec_id").as(idCol), col("embedding").as("va"), col("nrm").as("na"))
-        .crossJoin(broadcast(cents))
-        .withColumn("csim", expr(dot) / (col("na") * col("nb")))
-      val w = Window.partitionBy(col(idCol)).orderBy(col("csim").desc, col("cell"))
-      scored.withColumn("crank", row_number().over(w)).filter(col("crank") <= take)
-        .select(col(idCol), col("cell"))
-    }
+      m: Int = 16, ks: Int = 16, refine: Int = 12): DataFrame =
     pqCore(embeddings, k, nQueries, m, ks, refine,
-      route = Some((nearestCells(n, 1, "nb_id"),
-        nearestCells(n.filter(col("vec_id") < nQueries), nProbe, "query_id"))))
-  }
+      route = Some(ivfRoute(withNorm(embeddings), nQueries, nCells, nProbe)))
 
   /** Shared PQ encode + ADC + refine pipeline; `route`, when present,
     * is the (nb_id → cell, query_id → probed cells) pair that bounds
@@ -252,8 +248,9 @@ object Ann {
     * the seed). Determinism: per (mi, cell) the member subvectors are
     * collected SORTED by vec_id and folded in that order, so the means
     * replay bit-for-bit; empty cells keep their previous centroid.
-    * Each round's state is ks·m centroid rows — localCheckpoint keeps
-    * the loop's plan flat (the BPE-merge discipline). Returns the
+    * Each round's state is ks·m centroid rows, checkpointed by
+    * [[graft.core.Fixpoint.rounds]] so the loop's plan stays flat; the
+    * training rows are released once the rounds are done. Returns the
     * one-row broadcastable codebook: cb[mi][cell] = centroid. */
   private def trainCodebook(embeddings: DataFrame, m: Int, ks: Int,
       iters: Int = 5, trainN: Int = 4096): DataFrame = {
@@ -271,10 +268,9 @@ object Ann {
       .select(expr(
         s"""transform(sequence(0, $m - 1), mi ->
               transform(filter(s, x -> x.mi = mi), x -> x.cent))""").as("cb"))
-    var cbRows = train.filter(col("vec_id") < ks)
+    val init = train.filter(col("vec_id") < ks)
       .select(col("mi"), col("vec_id").cast("int").as("cell"), col("sub").as("cent"))
-      .localCheckpoint(true)
-    (1 to iters).foreach { _ =>
+    val cbRows = graft.core.Fixpoint.rounds(init, iters) { (cbRows, _) =>
       // native Lloyd assignment (graft.functions.PqArgmin) — identical
       // first-argmin semantics and per-distance fold order as the
       // composed array_position(array_min(transform(...))) form, one
@@ -290,12 +286,12 @@ object Ann {
                aggregate(subs, array_repeat(cast(0.0 as double), size(subs[0].sub)),
                  (acc, x) -> zip_with(acc, x.sub, (a, b) -> a + b)),
                s -> s / size(subs))""").as("cent"))
-      cbRows = cbRows.as("old")
+      cbRows.as("old")
         .join(means.as("upd"), Seq("mi", "cell"), "left")
         .select(col("mi"), col("cell"),
           coalesce(col("upd.cent"), col("old.cent")).as("cent"))
-        .localCheckpoint(true)
     }
+    graft.core.Checkpoints.release(train)
     asArray(cbRows)
   }
 

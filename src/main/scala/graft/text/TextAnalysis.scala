@@ -428,8 +428,8 @@ object TextAnalysis {
     * Plan: the edge build is ONE bigram explode + keyed count (the
     * [[topBigrams]] shape — the only pass that scales with corpus
     * size); each round is one edges⋈ranks join on the shared word key
-    * + one keyed weighted sum, checkpointed per round exactly like
-    * [[graft.graph.GraphOps.pageRank]]. */
+    * + one keyed weighted sum, driven by
+    * [[graft.core.Fixpoint.rounds]] like [[graft.graph.GraphOps.pageRank]]. */
   def textrankKeywords(documents: DataFrame, k: Int = 20,
       iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     val w = tokens("text")
@@ -445,24 +445,20 @@ object TextAnalysis {
     val wdeg = edges.groupBy(col("w1")).agg(sum(col("wt")).as("wdeg"))
     val nodes = wdeg.select(col("w1").as("word"))
     val nN = nodes.agg(count(lit(1)).as("n_nodes"))
-    var ranks = nodes.crossJoin(broadcast(nN))
+    val init = nodes.crossJoin(broadcast(nN))
       .select(col("word"), col("n_nodes"),
         round(lit(1.0) / col("n_nodes"), 10).as("pr"))
-      .localCheckpoint(true)
-    (1 to iterations).foreach { _ =>
+    val ranks = graft.core.Fixpoint.rounds(init, iterations) { (ranks, _) =>
       val contrib = edges
         .join(ranks.select(col("word").as("w1"), col("pr")), Seq("w1"))
         .join(wdeg, Seq("w1"))
         .groupBy(col("w2").as("word"))
         .agg(sum(col("pr") * col("wt") / col("wdeg")).as("in_sum"))
-      val next = ranks.select(col("word"), col("n_nodes"))
+      ranks.select(col("word"), col("n_nodes"))
         .join(contrib, Seq("word"), "left")
         .select(col("word"), col("n_nodes"),
           round((lit(1.0) - lit(damping)) / col("n_nodes")
             + lit(damping) * coalesce(col("in_sum"), lit(0.0)), 10).as("pr"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(ranks)
-      ranks = next
     }
     ranks.select(col("word"), round(col("pr") + lit(1e-9), 8).as("textrank"))
       .orderBy(col("textrank").desc, col("word")).limit(k)

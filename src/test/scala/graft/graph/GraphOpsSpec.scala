@@ -43,6 +43,34 @@ class GraphOpsSpec extends SparkSpec {
     assert(lp(1L) !== lp(10L))
   }
 
+  test("kCore: a K5 survives k = 4 peeling, its pendant path does not") {
+    // K5 on 1..5, then the path 5-6-7 hanging off node 5
+    val k5 = for (a <- 1L to 5L; b <- (a + 1) to 5L) yield (a, b)
+    val edges = (k5 ++ Seq((5L, 6L), (6L, 7L))).toDF("src", "dst")
+    val c = GraphOps.kCore(edges, k = 4).collect()
+      .map(r => r.getAs[Long]("station_id") -> r).toMap
+    assert(c.keySet === (1L to 7L).toSet)
+    for (id <- 1L to 5L) {
+      assert(c(id).getAs[Boolean]("in_core"), s"$id is in the 4-core")
+      assert(c(id).getAs[Long]("core_degree") === 4L)
+    }
+    assert(c(5L).getAs[Long]("degree") === 5L)
+    for (id <- Seq(6L, 7L)) {
+      assert(!c(id).getAs[Boolean]("in_core"), s"$id is peeled")
+      assert(c(id).getAs[Long]("core_degree") === 0L)
+    }
+    assert(c(6L).getAs[Long]("degree") === 2L && c(7L).getAs[Long]("degree") === 1L)
+  }
+
+  test("hits: a directed star's center is the authority, its leaves the hubs") {
+    val edges = Seq((1L, 9L), (2L, 9L), (3L, 9L), (4L, 9L)).toDF("src", "dst")
+    val h = GraphOps.hits(edges).collect()
+      .map(r => r.getAs[Long]("id") -> (r.getAs[Double]("authority"), r.getAs[Double]("hub")))
+      .toMap
+    assert(h(9L) === (1.0, 0.0))
+    for (id <- 1L to 4L) assert(h(id) === (0.0, 0.25), s"leaf $id")
+  }
+
   test("hubness: directed star center is the hub") {
     // in-degrees [5,1,0,0,0,0]: mean 1, sd √(20/6) ≈ 1.826 → hub cut 4.65
     val edges = Seq((1L, 9L), (2L, 9L), (3L, 9L), (4L, 9L), (5L, 9L), (9L, 1L))

@@ -102,4 +102,39 @@ class ClusterSpec extends SparkSpec {
     assert(picks(1) === 1L, "first pick is pure relevance")
     assert(picks(2) === 3L, "second pick trades relevance for diversity")
   }
+
+  /** The persistent RDDs `action` adds and leaves behind. The context
+    * holds persistent RDDs weakly, so one a GC collects mid-call would
+    * drop out of the count without being released: every persistent
+    * RDD is pinned at each job start until the count is taken. */
+  private def leftPersistent(action: => Any): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val pin = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.values.foreach(pinned.add)
+    }
+    sc.addSparkListener(pin)
+    try action finally sc.removeSparkListener(pin)
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(!pinned.isEmpty)
+    left
+  }
+
+  test("mmrRerank leaves one checkpoint behind: the final selection") {
+    val embs = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    var picks: org.apache.spark.sql.DataFrame = null
+    val left = leftPersistent { picks = Ann.mmrRerank(embs) }
+    assert(left.size === 1, s"pair, candidates and superseded selections must be released: $left")
+    assert(picks.collect().map(_.getAs[Int]("step")).toSeq === (1 to 10))
+  }
+
+  test("building an IVF-PQ index and running its codes leaves one checkpoint: the codebook") {
+    val embs = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val left = leftPersistent {
+      assert(Ann.buildIvfPqIndex(embs).codes.count() === embs.count())
+    }
+    assert(left.size === 1, s"training rows and superseded codebooks must be released: $left")
+  }
 }

@@ -1,8 +1,10 @@
 #!/bin/bash
 # Run a graft main class straight from sbt-compiled classes (no sbt lock).
-# Usage: tools/run.sh graft.Bench [args...]   (env passes through)
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-exec java -Xmx96g --add-opens=java.base/java.lang=ALL-UNNAMED \
+# Usage: tools/run.sh graft.Bench [args...]   (env passes through; the heap
+# is SPARK_DRIVER_MEM, build.sbt's default 8g when unset)
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+exec java "-Xmx${SPARK_DRIVER_MEM:-8g}" --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
   --add-opens=java.base/java.io=ALL-UNNAMED \
