@@ -422,18 +422,6 @@ class Broker(db: WeatherDb) {
     * final corrected frame (each stage persists via the db fields). */
   def updateDb: DataFrame = db.corr
 
-  /** A last-imp merge is only valid when the previous frame already
-    * covers every current station: a first-time station import has no
-    * history rows in `prev`, so a window-scoped merge would silently
-    * leave its out-of-window history missing and its neighbors'
-    * knn-dependent stages stale. The reference likewise routes new
-    * stations through the full first-time import before last-imp runs
-    * (broker.py update_db vs last_imp_* cycle). */
-  private def coversAllStations(prev: DataFrame): Boolean =
-    db.meta.select(col("station_id"))
-      .join(prev.select(col("station_id")).distinct(), Seq("station_id"), "left_anti")
-      .isEmpty
-
   /** _mark_last_imp_done twin — fired AFTER the stage's frame is
     * built, and only when the processed [lo,hi] window actually covers
     * the pending last-import period (the reference marks fillup done
@@ -470,7 +458,7 @@ class Broker(db: WeatherDb) {
     * merged into the persisted qc frame. Falls back to a full QC run
     * when the import introduced stations absent from `prevQc`. */
   def lastImpQualityCheck(prevQc: DataFrame, lo: Date, hi: Date): DataFrame = {
-    val incremental = coversAllStations(prevQc)
+    val incremental = Incremental.coversAllStations(prevQc, db.meta)
     val out =
       if (incremental)
         Incremental.updateQc(prevQc, db.raw, Series.dailyRef(db.events), db.meta, lo, hi)
@@ -482,7 +470,7 @@ class Broker(db: WeatherDb) {
   /** last_imp_fillup: fill-up only for the last-import window; full
     * recompute when `prevFilled` misses a (new) station. */
   def lastImpFillup(prevFilled: DataFrame, qc: DataFrame, lo: Date, hi: Date): DataFrame = {
-    val incremental = coversAllStations(prevFilled)
+    val incremental = Incremental.coversAllStations(prevFilled, db.meta)
     val out =
       if (incremental) Incremental.updateFilled(prevFilled, qc, db.meta, lo, hi)
       else Fillup.fillNeighbor(qc, db.meta)
@@ -493,7 +481,7 @@ class Broker(db: WeatherDb) {
   /** last_imp_corr: Richter correction only for the last-import window;
     * full recompute when `prevCorr` misses a (new) station. */
   def lastImpCorr(prevCorr: DataFrame, filled: DataFrame, lo: Date, hi: Date): DataFrame = {
-    val incremental = coversAllStations(prevCorr)
+    val incremental = Incremental.coversAllStations(prevCorr, db.meta)
     val out =
       if (incremental)
         Incremental.updateCorr(prevCorr, filled, db.tempFilled, db.meta, lo, hi)

@@ -898,50 +898,35 @@ object AdcSum {
 }
 
 object GraftFunctions {
+  private def int(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+
+  /** Every graft SQL function as (name, builder): the one list that
+    * [[register]] and [[GraftExtensions]] both install. */
+  private[functions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_polyhash" -> (a => PolyHash(a.head)),
+    "graft_minhash_sig" -> (a => MinHashSig(a.head, int(a(1)))),
+    "graft_shingle_hashes" -> (a => ShingleHashes(a.head)),
+    "graft_simhash_text" -> (a => SimHashText(a.head)),
+    "graft_sorted_overlap" -> (a => SortedOverlap(a.head, a(1))),
+    "graft_prefix_cut" -> (a => PrefixCut(a.head, a(1))),
+    "graft_dot" -> (a => DotProduct(a.head, a(1))),
+    "graft_char_entropy" -> (a => CharEntropy(a.head)),
+    "graft_interleave_bits" -> (a => InterleaveBits(a.head, a(1))),
+    "graft_hyperplane_bands" -> (a => HyperplaneBands(a.head, int(a(1)), int(a(2)))),
+    "graft_cdc_chunks" -> (a => CdcChunksText(a.head, int(a(1)))),
+    "graft_nfc" -> (a => NfcNormalize(a.head)),
+    "graft_pq_dists" -> (a => PqDists(a.head, a(1))),
+    "graft_pq_encode" -> (a => PqEncode(a.head, a(1))),
+    "graft_pq_argmin" -> (a => PqArgmin(a.head, a(1))),
+    "graft_adc" -> (a => AdcSum(a.head, a(1))),
+    "graft_dtw_band" -> (a => DtwBand(a.head, a(1), int(a(2)))))
+
   /** Register the graft SQL functions on a session (idempotent), so
     * expression strings can call graft_polyhash / graft_minhash_sig /
-    * graft_shingle_hashes. */
+    * graft_shingle_hashes and the rest of [[builders]]. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_polyhash",
-      (args: Seq[Expression]) => PolyHash(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      (args: Seq[Expression]) => MinHashSig(args.head,
-        args(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      (args: Seq[Expression]) => ShingleHashes(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash_text",
-      (args: Seq[Expression]) => SimHashText(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_overlap",
-      (args: Seq[Expression]) => SortedOverlap(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_prefix_cut",
-      (args: Seq[Expression]) => PrefixCut(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot",
-      (args: Seq[Expression]) => DotProduct(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_char_entropy",
-      (args: Seq[Expression]) => CharEntropy(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_interleave_bits",
-      (args: Seq[Expression]) => InterleaveBits(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hyperplane_bands",
-      (args: Seq[Expression]) => HyperplaneBands(args.head,
-        args(1).eval().asInstanceOf[Number].intValue(),
-        args(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("graft_cdc_chunks",
-      (args: Seq[Expression]) => CdcChunksText(args.head,
-        args(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      (args: Seq[Expression]) => NfcNormalize(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_dists",
-      (args: Seq[Expression]) => PqDists(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_encode",
-      (args: Seq[Expression]) => PqEncode(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_argmin",
-      (args: Seq[Expression]) => PqArgmin(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_adc",
-      (args: Seq[Expression]) => AdcSum(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dtw_band",
-      (args: Seq[Expression]) => DtwBand(args.head, args(1),
-        args(2).eval().asInstanceOf[Number].intValue()), "built-in")
+    builders.foreach { case (name, b) => reg.createOrReplaceTempFunction(name, b, "built-in") }
   }
 }
 

@@ -278,7 +278,7 @@ object Streaming extends Serializable {
       val ref = Series.dailyRef(evts)
       val meta = Series.stationMeta(evts)
       val next = (qcFrame match {
-        case Some(prev) if sameStations(prev, meta) =>
+        case Some(prev) if Incremental.coversAllStations(prev, meta) =>
           Incremental.updateQc(prev, raw, ref, meta, loW, hiW)
         case _ => QualityCheck.all(raw, ref, meta) // first import / new station init
       }).localCheckpoint(true) // eager: materialized before replacing prev
@@ -293,11 +293,6 @@ object Streaming extends Serializable {
       oldQc.foreach(graft.core.Checkpoints.release)
       b.unpersist() // evts is checkpointed — independent of b's blocks
     }
-
-    private def sameStations(prev: DataFrame, meta: DataFrame): Boolean =
-      meta.select("station_id")
-        .join(prev.select("station_id").distinct(), Seq("station_id"), "left_anti")
-        .isEmpty
   }
 
   /** Recompute-window bounds for an incoming batch given the previous
@@ -346,10 +341,9 @@ object Streaming extends Serializable {
       val raw = Series.dailyRaw(evts)
       val ref = Series.dailyRef(evts)
       val meta = Series.stationMeta(evts)
-      val temp = Fillup.fillTemp(Series.dailyTemp(evts), meta, Series.raster(evts))
-        .select(col("station_id"), col("day"), col("t_filled").as("t"))
+      val temp = Fillup.tempCompanion(evts, meta)
       val next = frames match {
-        case Some((prevQc, prevFilled, prevCorr)) if sameStations(prevQc, meta) =>
+        case Some((prevQc, prevFilled, prevCorr)) if Incremental.coversAllStations(prevQc, meta) =>
           val nQc = Incremental.updateQc(prevQc, raw, ref, meta, loW, hiW).localCheckpoint(true)
           val nFill = Incremental.updateFilled(prevFilled, nQc, meta, loW, hiW).localCheckpoint(true)
           val nCorr = Incremental.updateCorr(prevCorr, nFill, temp, meta, loW, hiW).localCheckpoint(true)
@@ -371,11 +365,6 @@ object Streaming extends Serializable {
       }
       b.unpersist()
     }
-
-    private def sameStations(prev: DataFrame, meta: DataFrame): Boolean =
-      meta.select("station_id")
-        .join(prev.select("station_id").distinct(), Seq("station_id"), "left_anti")
-        .isEmpty
   }
 
   /** Streaming keyed-upsert sink: every micro-batch MERGEs into a

@@ -30,8 +30,9 @@ import graft.tsdb.TsQueries
   *    the pass started (generated classes the codegen cache did not
   *    hold) and their compile time, from Spark's `CodegenMetrics` and
   *    `CodeGenerator.compileTime`; the cold pass's include the build's
-  *    and the planning split's — and `jobs` —
-  *    the pass's 12 longest jobs (`job`, `wall_s`, `desc`; the cold
+  *    and the planning split's — `n_jobs`, the number of jobs the
+  *    pass started (the cold pass's include any job the build ran),
+  *    and `jobs` — the pass's 12 longest jobs (`job`, `wall_s`, `desc`; the cold
   *    pass's include any job the build ran), each with its 4 longest
   *    stages (`stage`, `wall_s`, `tasks`, `task_ms`, `gc_ms`, `name`):
   *    the local-mode substitute for the Spark UI's stage table. A wall
@@ -62,7 +63,7 @@ object Profile {
       val (n, ms) = codegen()
       s""""$label":{"s":$s,"error":${err.fold("null")(Json.str)},""" +
         s""""codegen_compiles":${n - since._1},"codegen_compile_ms":${ms - since._2},""" +
-        s""""jobs":${table.json()}}"""
+        s""""n_jobs":${table.jobCount},"jobs":${table.json()}}"""
     }
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
@@ -124,6 +125,8 @@ object Profile {
     }
 
     def reset(): Unit = synchronized { stages.clear(); jobs.clear() }
+
+    def jobCount: Int = synchronized(jobs.size)
 
     def json(): String = synchronized {
       def wall(from: Long, to: Long): Double = if (to > 0) (to - from) / 1e9 else -1.0

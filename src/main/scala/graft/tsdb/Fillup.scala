@@ -1,6 +1,6 @@
 package graft.tsdb
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import Constants._
@@ -15,6 +15,20 @@ import Constants._
   * neighbor distance per (station, day), keep the best — one pass,
   * no iteration, same result as the reference's first-non-null-neighbor
   * semantics.
+  *
+  * The reference runs every station type through that one routine and
+  * lets the type choose only its regionalization; here every
+  * neighbor-fill variant is likewise a composition of four shared
+  * operators:
+  *  - [[coefTable]]: the (station_id, nb_id, rank, coef) table, a
+  *    ratio or difference of per-station values (MA of qc, MA of raw
+  *    for QualityCheck.nbMedian, or raster_t), rounded to 6 places;
+  *  - [[donorCandidates]]: NULL slots × broadcast neighbor table ×
+  *    non-NULL donor values on (nb_id, day), plus the caller's
+  *    candidate columns;
+  *  - [[firstDonor]]: the lowest-rank candidate per (station, day);
+  *  - [[fillFrom]]: the picks joined back onto the series as the
+  *    caller's fill columns (`filled` / `filled_by`, `t_filled`, …).
   *
   * Scale: neighbor map + MA coefficients are O(#stations) → broadcast
   * (the neighbor map itself comes from the grid-bucketed knn — the
@@ -33,42 +47,45 @@ object Fillup {
   private def maQc(qcSeries: DataFrame): DataFrame =
     Series.maMean(qcSeries, "qc")
 
-  private def coefJoin(knn: DataFrame, ma: DataFrame, multiplicative: Boolean): DataFrame = {
+  /** The regionalization coefficient of every (station, neighbor) pair
+    * of `knn`, as (station_id, nb_id, rank, coef): coef is
+    * v(station) / v(neighbor) when `multiplicative`, else
+    * v(station) − v(neighbor), rounded to 6 places, where v is the
+    * per-station column `v` of `values`. A pair with either station
+    * missing from `values` has no row. */
+  private[tsdb] def coefTable(knn: DataFrame, values: DataFrame, v: String,
+      multiplicative: Boolean): DataFrame = {
     val c = knn
-      .join(ma.select(col("station_id"), col("ma").as("ma_stat")), Seq("station_id"))
-      .join(ma.select(col("station_id").as("nb_id"), col("ma").as("ma_other")), Seq("nb_id"))
-    val coef = if (multiplicative) round(col("ma_stat") / col("ma_other") + lit(1e-9), 6)
-      else round(col("ma_stat") - col("ma_other") + lit(1e-9), 6)
-    c.withColumn("coef", coef).select(col("station_id"), col("nb_id"), col("rank"), col("coef"))
+      .join(values.select(col("station_id"), col(v).as("ma_stat")), Seq("station_id"))
+      .join(values.select(col("station_id").as("nb_id"), col(v).as("ma_other")), Seq("nb_id"))
+    val coef = if (multiplicative) col("ma_stat") / col("ma_other")
+      else col("ma_stat") - col("ma_other")
+    c.withColumn("coef", round(coef + lit(1e-9), 6))
+      .select(col("station_id"), col("nb_id"), col("rank"), col("coef"))
   }
 
-  /** The (station, day) slots that actually need filling. */
-  private def nullSlots(qcSeries: DataFrame): DataFrame =
-    qcSeries.filter(col("qc").isNull).select(col("station_id"), col("day"))
+  /** The non-NULL values of `v` as donor values (nb_id, day, nb_<v>). */
+  private def donors(series: DataFrame, v: String): DataFrame =
+    series.filter(col(v).isNotNull)
+      .select(col("station_id").as("nb_id"), col("day"), col(v).as(s"nb_$v"))
 
-  /** Candidate fill values: for each unfilled (station, day), every
-    * neighbor with a non-NULL qc value, regionalized. Generated only
-    * for NULL slots (hole × k-neighbors join, then one equi-join of
-    * the non-NULL series on (nb_id, day)). */
-  private def candidates(qcSeries: DataFrame, meta: DataFrame, k: Int,
-      multiplicative: Boolean, maSeries: DataFrame = null): DataFrame = {
-    val knn = Neighbors.knnDistBucketed(meta, k)
-    val coefs = coefJoin(knn, maQc(Option(maSeries).getOrElse(qcSeries)), multiplicative)
-    val raw = if (multiplicative) col("nb_qc") * col("coef") else col("nb_qc") + col("coef")
-    nullSlots(qcSeries)
-      .join(broadcast(coefs), Seq("station_id"))
-      .join(qcSeries.filter(col("qc").isNotNull)
-        .select(col("station_id").as("nb_id"), col("day"), col("qc").as("nb_qc")), Seq("nb_id", "day"))
-      .withColumn("cand_raw", raw)
-      .withColumn("cand", round(raw + lit(1e-9), 2))
+  /** Donor candidates: every (station, day) slot where `v` is NULL ×
+    * the broadcast neighbor table `neighbors(knn)` on station_id × the
+    * `donor` frame (default: [[donors]] of `v`) on (nb_id, day), then
+    * the `cands` columns in order. Generated only for NULL slots, so
+    * the volume is NULL-share × k. */
+  private def donorCandidates(series: DataFrame, v: String, meta: DataFrame, k: Int,
+      neighbors: DataFrame => DataFrame, donor: DataFrame = null)(
+      cands: (String, Column)*): DataFrame = {
+    val joined = series.filter(col(v).isNull).select(col("station_id"), col("day"))
+      .join(broadcast(neighbors(Neighbors.knnDistBucketed(meta, k))), Seq("station_id"))
+      .join(Option(donor).getOrElse(donors(series, v)), Seq("nb_id", "day"))
+    cands.foldLeft(joined) { case (df, (name, c)) => df.withColumn(name, c) }
   }
 
-  /** First-non-null-neighbor fill with multiplicative regionalization
-    * (P/ET-style: coef = ma_stat / ma_other). Output adds
-    * `filled` and `filled_by`. */
-  def fillNeighbor(qcSeries: DataFrame, meta: DataFrame, k: Int = FillK,
-      multiplicative: Boolean = true, maSeries: DataFrame = null): DataFrame = {
-    val cand = candidates(qcSeries, meta, k, multiplicative, maSeries)
+  /** The lowest-rank candidate per (station, day), as (station_id,
+    * day, keep…). */
+  private def firstDonor(cand: DataFrame, keep: String*): DataFrame = {
     // best-candidate selection stays a row_number window + `rn = 1`
     // filter on purpose: InferWindowGroupLimit rewrites it to a
     // partial+final WindowGroupLimit, so each map partition forwards
@@ -78,14 +95,40 @@ object Fillup {
     // but its struct buffer forces a SortAggregate fallback (struct is
     // not a mutable hash-agg buffer type), measured ~3× slower.
     val w = Window.partitionBy(col("station_id"), col("day")).orderBy(col("rank"))
-    val best = cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("station_id"), col("day"), col("cand"), col("nb_id"))
-      .drop("cand_raw")
-    qcSeries.join(best, Seq("station_id", "day"), "left")
-      .withColumn("filled", coalesce(col("qc"), col("cand")))
-      .withColumn("filled_by", when(col("qc").isNull, col("nb_id")).otherwise(lit(null)))
-      .drop("cand", "nb_id")
+    cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select((Seq("station_id", "day") ++ keep).map(col): _*)
   }
+
+  /** `series` left-joined with the per-(station, day) `picks`, the
+    * `fills` columns added in order, the picks' own columns dropped. */
+  private def fillFrom(series: DataFrame, picks: DataFrame)(
+      fills: (String, Column)*): DataFrame = {
+    val slot = Seq("station_id", "day")
+    fills.foldLeft(series.join(picks, slot, "left")) { case (df, (name, c)) =>
+      df.withColumn(name, c)
+    }.drop(picks.columns.filterNot(slot.contains): _*)
+  }
+
+  private val filled = "filled" -> coalesce(col("qc"), col("cand"))
+  private val filledBy = "filled_by" -> when(col("qc").isNull, col("nb_id")).otherwise(lit(null))
+
+  /** Candidate fill values: for each unfilled (station, day), every
+    * neighbor with a non-NULL qc value, regionalized. */
+  private def candidates(qcSeries: DataFrame, meta: DataFrame, k: Int,
+      multiplicative: Boolean, maSeries: DataFrame = null): DataFrame = {
+    val ma = maQc(Option(maSeries).getOrElse(qcSeries))
+    val raw = if (multiplicative) col("nb_qc") * col("coef") else col("nb_qc") + col("coef")
+    donorCandidates(qcSeries, "qc", meta, k, coefTable(_, ma, "ma", multiplicative))(
+      "cand_raw" -> raw, "cand" -> round(raw + lit(1e-9), 2))
+  }
+
+  /** First-non-null-neighbor fill with multiplicative regionalization
+    * (P/ET-style: coef = ma_stat / ma_other). Output adds
+    * `filled` and `filled_by`. */
+  def fillNeighbor(qcSeries: DataFrame, meta: DataFrame, k: Int = FillK,
+      multiplicative: Boolean = true, maSeries: DataFrame = null): DataFrame =
+    fillFrom(qcSeries, firstDonor(candidates(qcSeries, meta, k, multiplicative, maSeries),
+      "cand", "nb_id"))(filled, filledBy)
 
   /** T-style additive variant (coef = ma_stat − ma_other) with the
     * reference's min/max companion columns: when a day is gap-filled,
@@ -95,33 +138,21 @@ object Fillup {
     * raw_min, raw_max) frame. */
   def fillAdditive(qcSeries: DataFrame, meta: DataFrame, minMax: DataFrame,
       k: Int = FillK): DataFrame = {
-    val knn = Neighbors.knnDistBucketed(meta, k)
-    val coefs = coefJoin(knn, maQc(qcSeries), multiplicative = false)
-    val nbSeries = qcSeries.filter(col("qc").isNotNull)
-      .select(col("station_id").as("nb_id"), col("day"), col("qc").as("nb_qc"))
+    val ma = maQc(qcSeries)
+    val donor = donors(qcSeries, "qc")
       .join(minMax.select(col("station_id").as("nb_id"), col("day"),
         col("raw_min").as("nb_min"), col("raw_max").as("nb_max")), Seq("nb_id", "day"), "left")
-    val cand = nullSlots(qcSeries)
-      .join(broadcast(coefs), Seq("station_id"))
-      .join(nbSeries, Seq("nb_id", "day"))
-      .withColumn("cand", round(col("nb_qc") + col("coef") + lit(1e-9), 2))
-      .withColumn("cand_min", round(col("nb_min") + col("coef") + lit(1e-9), 2))
-      .withColumn("cand_max", round(col("nb_max") + col("coef") + lit(1e-9), 2))
-    val w = Window.partitionBy(col("station_id"), col("day")).orderBy(col("rank"))
-    val best = cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("station_id"), col("day"), col("cand"), col("cand_min"),
-        col("cand_max"), col("nb_id"))
-    qcSeries
-      .join(minMax.select(col("station_id"), col("day"), col("raw_min"), col("raw_max")),
-        Seq("station_id", "day"), "left")
-      .join(best, Seq("station_id", "day"), "left")
-      .withColumn("filled", coalesce(col("qc"), col("cand")))
-      .withColumn("filled_min",
-        when(col("qc").isNotNull, col("raw_min")).otherwise(col("cand_min")))
-      .withColumn("filled_max",
-        when(col("qc").isNotNull, col("raw_max")).otherwise(col("cand_max")))
-      .withColumn("filled_by", when(col("qc").isNull, col("nb_id")).otherwise(lit(null)))
-      .drop("cand", "cand_min", "cand_max", "nb_id")
+    def cand(nb: String) = round(col(nb) + col("coef") + lit(1e-9), 2)
+    val cands = donorCandidates(qcSeries, "qc", meta, k,
+        coefTable(_, ma, "ma", multiplicative = false), donor)(
+      "cand" -> cand("nb_qc"), "cand_min" -> cand("nb_min"), "cand_max" -> cand("nb_max"))
+    fillFrom(qcSeries.join(minMax.select(col("station_id"), col("day"), col("raw_min"),
+        col("raw_max")), Seq("station_id", "day"), "left"),
+      firstDonor(cands, "cand", "cand_min", "cand_max", "nb_id"))(
+      filled,
+      "filled_min" -> when(col("qc").isNotNull, col("raw_min")).otherwise(col("cand_min")),
+      "filled_max" -> when(col("qc").isNotNull, col("raw_max")).otherwise(col("cand_max")),
+      filledBy)
   }
 
   /** P-style seasonal regionalization (StationBases.py:1406-1425,
@@ -131,7 +162,10 @@ object Fillup {
     * season. A neighbor is eligible when ANY seasonal MA exists
     * (cond_mas_not_null); a NULL seasonal coefficient yields no
     * candidate for days of that season, falling through to the next
-    * neighbor — exactly the reference's loop behavior. */
+    * neighbor — exactly the reference's loop behavior. The
+    * two-coefficient, left-joined table is this variant's own: the
+    * single-coefficient [[coefTable]] keeps only pairs with both
+    * values. */
   def fillSeasonal(qcSeries: DataFrame, meta: DataFrame, k: Int = FillK): DataFrame = {
     val isWinter = month(col("day")).isin(1, 2, 3, 10, 11, 12)
     def seasonalMa(winter: Boolean, name: String) =
@@ -139,8 +173,7 @@ object Fillup {
         .groupBy(col("station_id")).agg(round(avg(col("qc")) + lit(1e-9), 6).as(name))
     val maW = seasonalMa(winter = true, "ma_wi")
     val maS = seasonalMa(winter = false, "ma_so")
-    val knn = Neighbors.knnDistBucketed(meta, k)
-    val coefs = knn
+    def coefs(knn: DataFrame) = knn
       .join(maW.select(col("station_id"), col("ma_wi").as("wi_stat")), Seq("station_id"), "left")
       .join(maS.select(col("station_id"), col("ma_so").as("so_stat")), Seq("station_id"), "left")
       .join(maW.select(col("station_id").as("nb_id"), col("ma_wi").as("wi_other")), Seq("nb_id"), "left")
@@ -149,21 +182,11 @@ object Fillup {
       .withColumn("coef_so", round(col("so_stat") / col("so_other") + lit(1e-9), 6))
       .filter(col("coef_wi").isNotNull || col("coef_so").isNotNull)
       .select(col("station_id"), col("nb_id"), col("rank"), col("coef_wi"), col("coef_so"))
-    val cand = nullSlots(qcSeries)
-      .join(broadcast(coefs), Seq("station_id"))
-      .join(qcSeries.filter(col("qc").isNotNull)
-        .select(col("station_id").as("nb_id"), col("day"), col("qc").as("nb_qc")), Seq("nb_id", "day"))
-      .withColumn("cand",
+    val cand = donorCandidates(qcSeries, "qc", meta, k, coefs)("cand" ->
         round(col("nb_qc") * when(isWinter, col("coef_wi")).otherwise(col("coef_so")) + lit(1e-9), 2))
       .filter(col("cand").isNotNull)
-    val w = Window.partitionBy(col("station_id"), col("day")).orderBy(col("rank"))
-    val best = cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("station_id"), col("day"), col("cand"), col("nb_id"))
-    qcSeries.join(best, Seq("station_id", "day"), "left")
-      .withColumn("is_winter", isWinter)
-      .withColumn("filled", coalesce(col("qc"), col("cand")))
-      .withColumn("filled_by", when(col("qc").isNull, col("nb_id")).otherwise(lit(null)))
-      .drop("cand", "nb_id")
+    fillFrom(qcSeries, firstDonor(cand, "cand", "nb_id"))(
+      "is_winter" -> isWinter, filled, filledBy)
   }
 
   /** P-style median-of-5-regionalized-neighbors fill
@@ -175,10 +198,8 @@ object Fillup {
     val med = candidates(qcSeries, meta, k, multiplicative = true)
       .groupBy(col("station_id"), col("day"))
       .agg(round(median(col("cand_raw")) + lit(1e-9), 2).as("med"))
-    qcSeries.join(med, Seq("station_id", "day"), "left")
-      .withColumn("filled", coalesce(col("qc"), col("med")))
-      .withColumn("filled_by", when(col("qc").isNull && col("med").isNotNull, lit(-2L)).otherwise(lit(null)))
-      .drop("med")
+    fillFrom(qcSeries, med)("filled" -> coalesce(col("qc"), col("med")),
+      "filled_by" -> when(col("qc").isNull && col("med").isNotNull, lit(-2L)).otherwise(lit(null)))
   }
 
   /** Linear interpolation of short gaps (≤ maxGap consecutive NULL
@@ -218,25 +239,18 @@ object Fillup {
     * Output adds `t_filled`. */
   def fillTemp(tempSeries: DataFrame, meta: DataFrame, raster: DataFrame,
       k: Int = FillK): DataFrame = {
-    val knn = Neighbors.knnDistBucketed(meta, k)
-    val coefs = knn
-      .join(raster.select(col("station_id"), col("raster_t").as("ma_stat")), Seq("station_id"))
-      .join(raster.select(col("station_id").as("nb_id"), col("raster_t").as("ma_other")), Seq("nb_id"))
-      .withColumn("coef", round(col("ma_stat") - col("ma_other") + lit(1e-9), 6))
-      .select(col("station_id"), col("nb_id"), col("rank"), col("coef"))
-    val holes = tempSeries.filter(col("t").isNull).select(col("station_id"), col("day"))
-    val cand = holes
-      .join(broadcast(coefs), Seq("station_id"))
-      .join(tempSeries.filter(col("t").isNotNull)
-        .select(col("station_id").as("nb_id"), col("day"), col("t").as("nb_t")), Seq("nb_id", "day"))
-      .withColumn("cand", round(col("nb_t") + col("coef") + lit(1e-9), 2))
-    val w = Window.partitionBy(col("station_id"), col("day")).orderBy(col("rank"))
-    val best = cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("station_id"), col("day"), col("cand"))
-    tempSeries.join(best, Seq("station_id", "day"), "left")
-      .withColumn("t_filled", coalesce(col("t"), col("cand")))
-      .drop("cand")
+    val cand = donorCandidates(tempSeries, "t", meta, k,
+        coefTable(_, raster, "raster_t", multiplicative = false))(
+      "cand" -> round(col("nb_t") + col("coef") + lit(1e-9), 2))
+    fillFrom(tempSeries, firstDonor(cand, "cand"))("t_filled" -> coalesce(col("t"), col("cand")))
   }
+
+  /** The filled temperature companion series (station_id, day, t) of
+    * `events` — [[fillTemp]] over the daily T series with raster
+    * regionalization, as Richter correction reads it. */
+  private[graft] def tempCompanion(events: DataFrame, meta: DataFrame): DataFrame =
+    fillTemp(Series.dailyTemp(events), meta, Series.raster(events))
+      .select(col("station_id"), col("day"), col("t_filled").as("t"))
 
   /** Inverse-distance-weighted regionalization fill: every unfilled
     * (station, day) slot gets `sum(qc_nb / d²) / sum(1 / d²)` over the
@@ -253,20 +267,14 @@ object Fillup {
     * aggregate on the slot key — no window, no sort, volume
     * proportional to NULL-share × k. */
   def fillIdw(qcSeries: DataFrame, meta: DataFrame, k: Int = FillK): DataFrame = {
-    val knn = Neighbors.knnDistBucketed(meta, k)
-      .select(col("station_id"), col("nb_id"), col("dist"))
     val wgt = lit(1.0) / (col("dist") * col("dist"))
-    val est = nullSlots(qcSeries)
-      .join(broadcast(knn), Seq("station_id"))
-      .join(qcSeries.filter(col("qc").isNotNull)
-        .select(col("station_id").as("nb_id"), col("day"), col("qc").as("nb_qc")), Seq("nb_id", "day"))
+    val est = donorCandidates(qcSeries, "qc", meta, k,
+        _.select(col("station_id"), col("nb_id"), col("dist")))()
       .groupBy(col("station_id"), col("day"))
       .agg(round(sum(col("nb_qc") * wgt) / sum(wgt) + lit(1e-9), 2).as("idw"),
         count(lit(1)).as("nd"))
-    qcSeries.join(est, Seq("station_id", "day"), "left")
-      .withColumn("filled", coalesce(col("qc"), col("idw")))
-      .withColumn("n_donors", when(col("qc").isNull, col("nd")).otherwise(lit(null)))
-      .drop("idw", "nd")
+    fillFrom(qcSeries, est)("filled" -> coalesce(col("qc"), col("idw")),
+      "n_donors" -> when(col("qc").isNull, col("nd")).otherwise(lit(null)))
   }
 
   /** Fill-quality cross-validation: hide a deterministic content-free

@@ -55,6 +55,18 @@ object Incremental {
     prev.filter(!mergeWindow(lo, hi))
       .unionByName(recomputed.filter(mergeWindow(lo, hi)).select(prev.columns.map(col): _*))
 
+  /** A last-imp merge is only valid when the previous frame already
+    * covers every station of `meta`: a first-time station import has no
+    * history rows in `prev`, so a window-scoped merge would silently
+    * leave its out-of-window history missing and its neighbors'
+    * knn-dependent stages stale. The reference likewise routes new
+    * stations through the full first-time import before last-imp runs
+    * (broker.py update_db vs last_imp_* cycle). */
+  private[graft] def coversAllStations(prev: DataFrame, meta: DataFrame): Boolean =
+    meta.select(col("station_id"))
+      .join(prev.select(col("station_id")).distinct(), Seq("station_id"), "left_anti")
+      .isEmpty
+
   /** Incremental quality check: recompute qc only for `[lo, hi]` of
     * the (already updated) raw series and merge into `prevQc`. */
   def updateQc(prevQc: DataFrame, rawSeries: DataFrame, ref: DataFrame,

@@ -75,29 +75,27 @@ object QualityCheck {
       .withColumn("qc", when(col("day_failed"), lit(null)).otherwise(col("raw")))
   }
 
-  /** Neighbor-consensus check: value vs the median of the 5 nearest
-    * stations' additively regionalized values
-    * (coef = ma_station − ma_neighbor); large deviation → NULL.
+  /** The regionalized neighbor median frame (station_id, day,
+    * nbs_median) — shared by neighborMedian and `all`: each value is
+    * compared against the median of the 5 nearest stations' additively
+    * regionalized values (coef = ma_station − ma_neighbor, the
+    * coefficient table of [[Fillup.coefTable]] over MA means of raw).
+    * `maSeries` is the frame the regionalization MA means come from:
+    * the series itself in a full run, the FULL series during a
+    * period-scoped incremental run (the reference reads stored MA
+    * values then).
     *
     * Scale: the neighbor map and MA means are O(#stations) →
     * broadcast; the series is shuffled once keyed by (nb_id, day) to
     * fetch neighbor values, then hash-aggregated back to
     * (station_id, day) — two shuffles of the big frame total. */
-  /** The regionalized neighbor median frame (station_id, day,
-    * nbs_median) — shared by neighborMedian and `all`. `maSeries` is
-    * the frame the regionalization MA means come from: the series
-    * itself in a full run, the FULL series during a period-scoped
-    * incremental run (the reference reads stored MA values then). */
   def nbMedian(series: DataFrame, meta: DataFrame,
       maSeries: DataFrame = null): DataFrame = {
     val ma = Series.maMean(Option(maSeries).getOrElse(series), "raw")
     // grid-bucketed knn (O(9n) spatial join) is the default scale path;
     // brute-force knnDist remains only as the test oracle's cross-check
-    val knn = Neighbors.knnDistBucketed(meta, NeighborK)
-    val coefs = knn
-      .join(ma.select(col("station_id"), col("ma").as("ma_stat")), Seq("station_id"))
-      .join(ma.select(col("station_id").as("nb_id"), col("ma").as("ma_other")), Seq("nb_id"))
-      .withColumn("coef", round(col("ma_stat") - col("ma_other") + lit(1e-9), 6))
+    val coefs = Fillup.coefTable(Neighbors.knnDistBucketed(meta, NeighborK), ma, "ma",
+      multiplicative = false)
     val nbVals = broadcast(coefs.select(col("station_id"), col("nb_id"), col("coef")))
       .join(series.select(col("station_id").as("nb_id"), col("day"), col("raw").as("nb_raw")),
         Seq("nb_id"))
@@ -113,6 +111,8 @@ object QualityCheck {
       .agg(round(median(col("adj")) + lit(1e-9), 6).as("nbs_median"))
   }
 
+  /** Neighbor-consensus check: a value further than
+    * NeighborMedianMaxDiff from its [[nbMedian]] → NULL. */
   def neighborMedian(series: DataFrame, meta: DataFrame): DataFrame = {
     series.join(nbMedian(series, meta), Seq("station_id", "day"), "left")
       .withColumn("qc",

@@ -203,11 +203,7 @@ object TsQueries {
     * (StationP.py:604 joins tst."filled" after forcing stat_t.fillup). */
   private[graft] def tempFilled(s: SparkSession, d: String): DataFrame =
     memo.getOrElseUpdate((s, d, "tfill"), {
-      val events = ev(s, d)
-      Fillup.fillTemp(Series.dailyTemp(events), meta(s, d),
-          Series.raster(events))
-        .select(col("station_id"), col("day"), col("t_filled").as("t"))
-        .persist()
+      Fillup.tempCompanion(ev(s, d), meta(s, d)).persist()
     })
 
   def qRichterCorrect(s: SparkSession, d: String): DataFrame =

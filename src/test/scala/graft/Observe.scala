@@ -8,7 +8,8 @@ import org.scalatest.time.SpanSugar._
 
 /** What an action runs on the suite's session: the query executions it
   * completes and the jobs it starts (any job, schema inference too, as
-  * long as it runs on the calling thread). */
+  * long as it runs on the calling thread), and the persistent RDDs it
+  * leaves behind. */
 trait Observe extends Eventually { this: SparkSpec =>
 
   /** Runs `action` and returns the query executions it ran and the
@@ -42,5 +43,29 @@ trait Observe extends Eventually { this: SparkSpec =>
       sc.removeSparkListener(jobListener)
     }
     (scala.jdk.CollectionConverters.CollectionHasAsScala(qes).asScala.toSeq, jobs.get)
+  }
+
+  /** The persistent RDDs `action` adds and leaves behind. The context
+    * holds persistent RDDs weakly, so one a GC collects mid-call would
+    * drop out of the count without being released: every persistent
+    * RDD is pinned at each job start until the count is taken.
+    * `action` must start a job while some RDD is persistent, which is
+    * how the count knows the pins have arrived. */
+  def leftPersistent(action: => Any): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val pin = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.values.foreach(pinned.add)
+    }
+    sc.addSparkListener(pin)
+    try {
+      action
+      eventually(timeout(30.seconds))(assert(!pinned.isEmpty))
+    } finally sc.removeSparkListener(pin)
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    java.lang.ref.Reference.reachabilityFence(pinned)
+    left
   }
 }

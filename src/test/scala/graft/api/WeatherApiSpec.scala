@@ -409,9 +409,10 @@ class WeatherApiSpec extends SparkSpec with AdaptiveSparkPlanHelper with Observe
     assert(sc.getPersistentRDDs.keySet.diff(before).nonEmpty) // the memo's kinds
     TsQueries.clearMemo(spark)
     assert(sc.getPersistentRDDs.keySet.subsetOf(before))
-    assert(rows(df) === dfRows)
-    assert(rows(corr) === corrRows)
-    val left = sc.getPersistentRDDs.keySet.diff(before)
-    assert(left.isEmpty, s"persisted again after the release: ${left.map(sc.getPersistentRDDs)}")
+    val left = leftPersistent {
+      assert(rows(df) === dfRows)
+      assert(rows(corr) === corrRows)
+    }
+    assert(left.isEmpty, s"persisted again after the release: ${left.flatMap(sc.getPersistentRDDs.get)}")
   }
 }

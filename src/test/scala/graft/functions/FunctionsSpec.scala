@@ -92,7 +92,18 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("extensions class injects every graft function without error") {
-    new GraftExtensions().apply(new SparkSessionExtensions)
+    val injected = Set.newBuilder[String]
+    new GraftExtensions().apply(new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    })
+    GraftFunctions.register(spark)
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(registered.nonEmpty)
+    assert(injected.result() === registered)
   }
 
   // --- native kernels ≡ the composed higher-order forms they replace ---

@@ -1,9 +1,9 @@
 package graft.similarity
 
-import graft.SparkSpec
+import graft.{Observe, SparkSpec}
 import org.apache.spark.sql.functions._
 
-class ClusterSpec extends SparkSpec {
+class ClusterSpec extends SparkSpec with Observe {
   import spark.implicits._
 
   test("kmeans groups by direction and is deterministic across runs") {
@@ -101,25 +101,6 @@ class ClusterSpec extends SparkSpec {
       .collect().map(r => r.getAs[Int]("step") -> r.getAs[Long]("vec_id")).toMap
     assert(picks(1) === 1L, "first pick is pure relevance")
     assert(picks(2) === 3L, "second pick trades relevance for diversity")
-  }
-
-  /** The persistent RDDs `action` adds and leaves behind. The context
-    * holds persistent RDDs weakly, so one a GC collects mid-call would
-    * drop out of the count without being released: every persistent
-    * RDD is pinned at each job start until the count is taken. */
-  private def leftPersistent(action: => Any): Set[Int] = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
-    val pin = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        sc.getPersistentRDDs.values.foreach(pinned.add)
-    }
-    sc.addSparkListener(pin)
-    try action finally sc.removeSparkListener(pin)
-    val left = sc.getPersistentRDDs.keySet.toSet -- before
-    assert(!pinned.isEmpty)
-    left
   }
 
   test("mmrRerank leaves one checkpoint behind: the final selection") {

@@ -118,6 +118,56 @@ class FillupSpec extends SparkSpec {
     assert(out(1).getDouble(1) === 12.0)  // summer: 60 * (10/50)
   }
 
+  test("seasonal fill falls through when the nearest neighbor has no coefficient for the season") {
+    def d(m: Int, day: Int) = Date.valueOf(f"2024-$m%02d-$day%02d")
+    // station 1 (nearest) has no winter values: coef_wi NULL, coef_so
+    // 200 -> 0.5; station 2 has both: coef_wi = coef_so = 100/400
+    val rows = Seq(
+      (0L, d(1, 1), Some(100.0)), (0L, d(1, 2), None),
+      (0L, d(7, 1), Some(100.0)), (0L, d(7, 2), None),
+      (1L, d(1, 1), None), (1L, d(1, 2), None),
+      (1L, d(7, 1), Some(200.0)), (1L, d(7, 2), Some(200.0)),
+      (2L, d(1, 1), Some(400.0)), (2L, d(1, 2), Some(400.0)),
+      (2L, d(7, 1), Some(400.0)), (2L, d(7, 2), Some(400.0)))
+    val s = rows.map { case (id, dy, v) => (id, dy, v, v, 1L) }
+      .toDF("station_id", "day", "raw", "qc", "n_obs")
+    val out = Fillup.fillSeasonal(s, meta)
+      .filter($"station_id" === 0 && $"qc".isNull).orderBy("day")
+      .select("is_winter", "filled", "filled_by").as[(Boolean, Option[Double], Option[Long])]
+      .collect()
+    assert(out(0) === ((true, Some(100.0), Some(2L))))  // winter: 400 * 0.25
+    assert(out(1) === ((false, Some(100.0), Some(1L)))) // summer: 200 * 0.5
+    // without a winter mean of its own, station 0 has no winter
+    // coefficient with any neighbor: its winter hole stays unfilled
+    // and unattributed, its summer hole fills as before
+    val noWinter = s.withColumn("qc",
+      when($"station_id" === 0 && month($"day") === 1, lit(null)).otherwise($"qc"))
+    val out2 = Fillup.fillSeasonal(noWinter, meta)
+      .filter($"station_id" === 0 && $"day".isin(d(1, 2), d(7, 2))).orderBy("day")
+      .select("filled", "filled_by").as[(Option[Double], Option[Long])].collect()
+    assert(out2.toSeq === Seq((None, None), (Some(100.0), Some(1L))))
+  }
+
+  test("additive fill takes min/max from the same donor and coefficient as the value") {
+    // ma0=10, ma1=20, ma2=40; station 1 (nearest) has no qc on day 2,
+    // so station 0's day 2 comes from station 2 with coef 10-40 = -30
+    val s = qcSeries(Seq(
+      (0L, 1, Some(10.0)), (0L, 2, None),
+      (1L, 1, Some(20.0)), (1L, 2, None),
+      (2L, 1, Some(40.0)), (2L, 2, Some(40.0))))
+    val minMax = Seq(
+      (0L, day(1), 8.0, 12.0), (0L, day(2), 1.0, 99.0),
+      (1L, day(1), 15.0, 25.0), (1L, day(2), 15.0, 25.0),
+      (2L, day(1), 35.0, 45.0), (2L, day(2), 35.0, 45.0))
+      .toDF("station_id", "day", "raw_min", "raw_max")
+    val out = Fillup.fillAdditive(s, meta, minMax)
+      .filter($"station_id" === 0).orderBy("day")
+      .select("filled", "filled_min", "filled_max", "filled_by")
+      .as[(Option[Double], Option[Double], Option[Double], Option[Long])].collect()
+    assert(out(0) === ((Some(10.0), Some(8.0), Some(12.0), None))) // observed: raw min/max
+    assert(out(1) === ((Some(10.0), Some(5.0), Some(15.0), Some(2L))))
+  }
+
   test("median fill uses the median of regionalized neighbor values") {
     val s = qcSeries(Seq(
       (0L, 1, Some(100.0)), (0L, 2, None),
