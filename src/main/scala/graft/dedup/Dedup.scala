@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pairs
 import graft.text.TextFns._
 
 /** Document deduplication operators for training-data pipelines.
@@ -14,6 +15,9 @@ import graft.text.TextFns._
   * verifies candidates exactly. At 100 TB the only all-to-all data
   * movement is the band-key shuffle of 64-long signatures, not
   * documents.
+  * Every within-corpus candidate set is enumerated by
+  * [[graft.core.Pairs.within]], cross-side probes are equi-joins, and
+  * every exact-cosine pair is scored by [[scoreBlocks]].
   */
 object Dedup {
 
@@ -100,27 +104,14 @@ object Dedup {
     szB >= ceil(szA * threshold - lit(1e-9)) && szB <= szA / threshold + lit(1e-9)
 
   /** Within-side candidates (id_a, id_b) from prefix postings: every
-    * (id_a < id_b) pair sharing a prefix hash, length-filtered,
-    * distinct.
-    *
-    * Pair enumeration is a single h-keyed bucket collapse + a
-    * partition-local double explode (the q_item_cf collapse), NOT a
-    * self-join: a join would evaluate the whole prefix subtree once
-    * per side (ReusedExchange shares only the exchange, not the
-    * collect/sort/explode above it) and broadcast one side per action.
-    * Pair volume is identical, so the distinct output EQUALS the
-    * self-join's row-for-row. Bucket sizes are bounded by the
+    * (id_a < id_b) pair sharing a prefix hash ([[Pairs.within]] on h),
+    * length-filtered, distinct. Bucket sizes are bounded by the
     * rare-first ranking (a hash of document frequency k yields at most
     * k prefix rows, and common shingles never enter prefixes). */
   private def bucketPairs(postings: DataFrame, threshold: Double): DataFrame =
-    postings.groupBy(col("h"))
-      .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .select(explode(col("ds")).as("a"), col("ds"))
-      .select(col("a"), explode(col("ds")).as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id") &&
-        lengthFilter(col("a.sz"), col("b.sz"), threshold))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b")).distinct()
+    Pairs.within(postings, Seq("h"), "doc_id")
+      .filter(lengthFilter(col("sz_a"), col("sz_b"), threshold))
+      .select(col("id_a"), col("id_b")).distinct()
 
   /** Cross-side candidates (inc_id, idx_id): increment postings
     * equi-joined with index postings on h, length-filtered, distinct. */
@@ -234,16 +225,11 @@ object Dedup {
       .select(col("doc_id"), col("bd.band"), col("bd.k1"), col("bd.k2"))
       .filter(col("k1").isNotNull && col("k2").isNotNull)
 
-  /** (id_a, id_b, n_bands): the band self-join, bucketed on
-    * (band, k1, k2). */
-  private def minhashBandPairs(sigs: DataFrame): DataFrame = {
-    val bands = minhashBandRows(sigs)
-    bands.select(col("doc_id").as("id_a"), col("band"), col("k1"), col("k2"))
-      .join(bands.select(col("doc_id").as("id_b"), col("band"), col("k1"), col("k2")),
-        Seq("band", "k1", "k2"))
-      .filter(col("id_a") < col("id_b"))
+  /** (id_a, id_b, n_bands): the pairs sharing a (band, k1, k2)
+    * bucket ([[Pairs.within]]), counted. */
+  private def minhashBandPairs(sigs: DataFrame): DataFrame =
+    Pairs.within(minhashBandRows(sigs), Seq("band", "k1", "k2"), "doc_id")
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_bands"))
-  }
 
   /** MinHash-LSH candidate pairs: docs sharing at least one band of
     * the 32×2 signature. Output: (id_a, id_b, n_bands). */
@@ -251,10 +237,10 @@ object Dedup {
     minhashBandPairs(minhashSigs(documents))
 
   /** LSH bucket-skew diagnostics per band — the report that predicts
-    * whether the [[minhashBands]] self-join survives at scale: bucket
+    * whether the [[minhashBands]] pairing survives at scale: bucket
     * census, the largest bucket (one oversized bucket = one straggler
     * task doing s²/2 comparisons), and the exact candidate-pair mass
-    * Σ s(s−1)/2 the band join will emit. Run this BEFORE the join on
+    * Σ s(s−1)/2 the band pairing will emit. Run this BEFORE it on
     * new data; a max_bucket in the thousands means the band key needs
     * more rows (narrower bands) or a salt.
     *
@@ -280,8 +266,8 @@ object Dedup {
     *
     * Plan: ONE shingle+signature pass shared by candidate generation
     * and verification (persisted for the two consumers, released
-    * eagerly — [[minhashBands]] would recompute it); the band
-    * self-join is bucketed on (band, k1, k2); est and exact are
+    * eagerly — [[minhashBands]] would recompute it); the band pairs
+    * are bucketed on (band, k1, k2); est and exact are
     * per-pair native/codegen array ops over the O(candidates) frame. */
   def minhashCalibration(documents: DataFrame): DataFrame = {
     val sigs = minhashSigs(documents)
@@ -596,8 +582,8 @@ object Dedup {
     * re-shingling it: the snapshot already holds every doc's rare-first
     * PPJoin prefix (cut under the index corpus's own df order — the
     * identical (dfreq, h) ranking [[prefixCandidates]] computes) and
-    * its sorted hash set, so candidate generation is a self-equi-join
-    * of the stored prefixes (same length filter) and verification the
+    * its sorted hash set, so candidate generation pairs the stored
+    * prefixes (same [[bucketPairs]] and length filter) and verification the
     * usual native merge intersection over the stored `sh` arrays.
     * Candidates — and therefore the verified output — equal
     * [[jaccardPairs]](indexDocs, threshold) row for row.
@@ -636,11 +622,14 @@ object Dedup {
     * — all read that one exchange (planned once, reused by the other
     * two), and neither column pruning nor pushed or inferred filters
     * (the caller's `doc_id` range included) reach below it, so no stage
-    * but the increment scan carries a per-request literal. Every
-    * increment-side operator keys on the increment's doc_id (renamed
-    * inc_id): the prefix cut's (doc_id, sz) aggregate, the candidate
-    * (inc_id, idx_id) distinct, the verify join on inc_id, the argmax
-    * window and the probe join; none of them shuffles. Under the
+    * but the increment scan carries a per-request literal. A second
+    * fence keeps the prefix cut's inferred `size(hashes) > 0` off the
+    * shingle projection: the prefix stage and the verify side each
+    * shingle a document once. Every increment-side operator keys on
+    * the increment's doc_id (renamed inc_id): the prefix cut's
+    * (doc_id, sz) aggregate, the candidate (inc_id, idx_id) distinct,
+    * the verify join on inc_id, the argmax window and the probe join;
+    * none of them shuffles. Under the
     * broadcast threshold the planner broadcasts the df table, the index
     * postings and both verify sides' hash sets: one shuffle exchange and
     * four broadcasts (spec-pinned). An index past the threshold is
@@ -653,7 +642,7 @@ object Dedup {
     val inc = graft.plans.Fence(
       incrementDocs.select(col("doc_id"), col("text")).repartition(col("doc_id")))
     bestMatch(inc.select(col("doc_id")),
-      snapshotVerifiedPairs(withShingles(inc), snapshot), "jaccard")
+      snapshotVerifiedPairs(graft.plans.Fence(withShingles(inc)), snapshot), "jaccard")
   }
 
   /** Near-dup threshold sensitivity sweep — the tuning curve run
@@ -917,9 +906,9 @@ object Dedup {
   /** Pigeonhole banded-Hamming candidates over (doc_id, sig) 64-bit
     * signatures, shared by [[simhashPairs]] and
     * graft.multimodal.Multimodal.imagePhash: the `bands` low
-    * `bandBits`-bit slices of `sig` are the (band, bucket) keys of ONE
-    * keyed self-equi-join; output (id_a, id_b, hamming), distinct,
-    * before the caller's radius filter. A pair within Hamming
+    * `bandBits`-bit slices of `sig` are the (band, bucket) keys of
+    * [[Pairs.within]]; output (id_a, id_b, hamming), distinct, before
+    * the caller's radius filter. A pair within Hamming
     * < `bands` differs in at most bands − 1 slices, so it shares a
     * bucket: recall is exactly 1 and the output equals the all-pairs
     * result. The mask also strips the arithmetic-shift sign extension
@@ -931,9 +920,7 @@ object Dedup {
         posexplode(expr(s"transform(sequence(0, ${bands - 1}), " +
           s"b -> shiftright(sig, b * $bandBits) & $mask)")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    val a = keyed.select(col("doc_id").as("id_a"), col("sig").as("sig_a"), col("band"), col("bucket"))
-    val b = keyed.select(col("doc_id").as("id_b"), col("sig").as("sig_b"), col("band"), col("bucket"))
-    a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
+    Pairs.within(keyed, Seq("band", "bucket"), "doc_id")
       .select(col("id_a"), col("id_b"), expr("bit_count(sig_a ^ sig_b)").as("hamming"))
       .distinct()
   }
@@ -944,7 +931,8 @@ object Dedup {
     * Vectors hash to `nBlocks` blocks; each vector is replicated to the
     * B block-pair groups it participates in, and each group scores its
     * pair block with a primitive-array loop — the block decomposition
-    * of an exact similarity join (block matrix multiply). Shuffle
+    * of an exact similarity join (block matrix multiply), scored by
+    * [[scoreBlocks]]. Shuffle
     * volume is O(n·B) vector rows instead of O(n²) materialized pairs;
     * per-task memory is O(d·n/B); compute stays O(n²·d/2), which is
     * inherent to EXACT pairwise similarity on unstructured vectors:
@@ -955,8 +943,7 @@ object Dedup {
     * For production near-dup thresholds (τ ≳ 0.8) the banded
     * [[embeddingPairsLsh]] is the sub-quadratic route.
     * At cluster scale pick B ≈ sqrt(n²d / flopsPerTask) so tasks stay
-    * uniform; the dot product runs in index order (left fold), matching
-    * the oracle bit-for-bit. */
+    * uniform. */
   def embeddingPairs(embeddings: DataFrame, threshold: Double = 0.4,
       nBlocks: Int = 16): DataFrame = {
     val spark = embeddings.sparkSession
@@ -973,45 +960,10 @@ object Dedup {
         (lo * B + hi, blk == lo, id, emb, nrm)
       }
     }
-    // candidates leave the task pre-filtered slightly BELOW the
-    // threshold; the exact rounded filter below reproduces the oracle's
-    // round-then-compare semantics
-    val cut = threshold - 1e-4
-    val pairs = replicated.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val lo = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
-      val hi = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
-      it.foreach { case (_, isLo, id, emb, nrm) =>
-        if (isLo) lo += ((id, emb, nrm)) else hi += ((id, emb, nrm))
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      def score(a: (Long, Array[Double], Double), b: (Long, Array[Double], Double)): Unit = {
-        val (ia, ea, na) = a; val (ib, eb, nb) = b
-        var acc = 0.0; var i = 0; val d = ea.length
-        while (i < d) { acc += ea(i) * eb(i); i += 1 }
-        val cos = acc / (na * nb)
-        if (cos >= cut) out += (if (ia < ib) (ia, ib, cos) else (ib, ia, cos))
-      }
-      if (key / B == key % B) { // diagonal block: all pairs within `lo`
-        var i = 0
-        while (i < lo.length) {
-          var j = i + 1
-          while (j < lo.length) { score(lo(i), lo(j)); j += 1 }
-          i += 1
-        }
-      } else {
-        var i = 0
-        while (i < lo.length) {
-          var j = 0
-          while (j < hi.length) { score(lo(i), hi(j)); j += 1 }
-          i += 1
-        }
-      }
-      out.iterator
-    }.toDF("id_a", "id_b", "cos")
-    pairs
-      .withColumn("cosine", round(col("cos") + lit(1e-9), 6))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+    // a pair's sides arrive in block order, not id order
+    scoreBlocks(replicated, threshold, "l", "r")(key => key / B == key % B)
+      .select(least(col("l"), col("r")).as("id_a"), greatest(col("l"), col("r")).as("id_b"),
+        col("cosine"))
   }
 
   /** Normalized (id, double-vector, norm) rows for the exact-cosine
@@ -1030,7 +982,7 @@ object Dedup {
     * it belongs to, keyed incBlk * B + idxBlk with blocks
     * floorMod(id, B): an increment vector (`isInc`) across the idx
     * dimension, an index vector across the inc one — the
-    * (groupKey, isIncrement, id, emb, norm) rows [[crossScore]] takes. */
+    * (groupKey, isIncrement, id, emb, norm) rows [[scoreBlocks]] takes. */
   private def crossReplicate(vecs: Dataset[(Long, Array[Double], Double)], nBlocks: Int)(
       isInc: Long => Boolean): Dataset[(Int, Boolean, Long, Array[Double], Double)] = {
     val spark = vecs.sparkSession
@@ -1045,45 +997,52 @@ object Dedup {
     }
   }
 
-  /** The grouped cross-side scorer behind both incremental embedding
-    * screens: `replicated` carries (groupKey, isIncrement, id, emb,
-    * norm) rows fanned out so every (incBlk, idxBlk) group holds both
-    * sides; each group scores inc×idx only. */
-  private def crossScore(
+  /** The exact-cosine block scorer of [[embeddingPairs]] and both
+    * incremental embedding screens: each (group, isLeft, id, emb, norm)
+    * group is scored in one task by a primitive-array loop, i < j
+    * within the left side where `diagonal(group)`, else left × right.
+    * The dot product runs in index order (left fold), matching the
+    * oracle bit for bit; the task cuts slightly BELOW the threshold and
+    * the filter on the cosine rounded to 6 places reproduces the
+    * oracle's round-then-compare. Output (`left`, `right`, cosine);
+    * `scored` (spec instrumentation only) counts dot products. */
+  private def scoreBlocks(
       replicated: Dataset[(Int, Boolean, Long, Array[Double], Double)],
-      threshold: Double,
-      scored: Option[org.apache.spark.util.LongAccumulator]): DataFrame = {
+      threshold: Double, left: String, right: String,
+      scored: Option[org.apache.spark.util.LongAccumulator] = None)(
+      diagonal: Int => Boolean): DataFrame = {
     val spark = replicated.sparkSession
     import spark.implicits._
     val cut = threshold - 1e-4
-    val pairs = replicated.groupByKey(_._1).flatMapGroups { (_, it) =>
-      val inc = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
-      val idx = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
-      it.foreach { case (_, isInc, id, emb, nrm) =>
-        if (isInc) inc += ((id, emb, nrm)) else idx += ((id, emb, nrm))
+    val pairs = replicated.groupByKey(_._1).flatMapGroups { (key, it) =>
+      val l = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
+      val r = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
+      it.foreach { case (_, isLeft, id, emb, nrm) =>
+        if (isLeft) l += ((id, emb, nrm)) else r += ((id, emb, nrm))
       }
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+      def score(a: (Long, Array[Double], Double), b: (Long, Array[Double], Double)): Unit = {
+        val (ia, ea, na) = a; val (ib, eb, nb) = b
+        var acc = 0.0; var p = 0; val d = ea.length
+        while (p < d) { acc += ea(p) * eb(p); p += 1 }
+        scored.foreach(_.add(1L))
+        val cos = acc / (na * nb)
+        if (cos >= cut) out += ((ia, ib, cos))
+      }
+      val diag = diagonal(key)
+      val other = if (diag) l else r
       var i = 0
-      while (i < inc.length) {
-        val (ia, ea, na) = inc(i)
-        var j = 0
-        while (j < idx.length) {
-          val (ib, eb, nb) = idx(j)
-          var acc = 0.0; var p = 0; val d = ea.length
-          while (p < d) { acc += ea(p) * eb(p); p += 1 }
-          scored.foreach(_.add(1L))
-          val cos = acc / (na * nb)
-          if (cos >= cut) out += ((ia, ib, cos))
-          j += 1
-        }
+      while (i < l.length) {
+        var j = if (diag) i + 1 else 0
+        while (j < other.length) { score(l(i), other(j)); j += 1 }
         i += 1
       }
       out.iterator
-    }.toDF("inc_id", "idx_id", "cos")
+    }.toDF(left, right, "cos")
     pairs
       .withColumn("cosine", round(col("cos") + lit(1e-9), 6))
       .filter(col("cosine") >= threshold)
-      .select(col("inc_id"), col("idx_id"), col("cosine"))
+      .select(col(left), col(right), col("cosine"))
   }
 
   /** CROSS-SIDE exact cosine pairs for the incremental screen: the
@@ -1104,8 +1063,9 @@ object Dedup {
   private[graft] def embeddingCrossPairs(embeddings: DataFrame, threshold: Double,
       mod: Int, nBlocks: Int = 16,
       scored: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
-    crossScore(crossReplicate(prepVecs(embeddings), nBlocks)(
-      id => java.lang.Math.floorMod(id, mod.toLong) == 0L), threshold, scored)
+    scoreBlocks(crossReplicate(prepVecs(embeddings), nBlocks)(
+      id => java.lang.Math.floorMod(id, mod.toLong) == 0L), threshold, "inc_id", "idx_id",
+      scored)(_ => false)
 
   /** Incremental embedding near-dup screening — [[incrementalDedup]]'s
     * vector twin: the NEW embedding shard (vec_id % mod == 0) probes
@@ -1139,7 +1099,7 @@ object Dedup {
   /** [[embeddingIncremental]] against a precomputed index artifact:
     * only the INCREMENT is normalized; the index side streams straight
     * off the snapshot parquet into its block groups. Same cross-side
-    * block decomposition ([[crossScore]]), same rounding — output
+    * block decomposition ([[scoreBlocks]]), same rounding — output
     * equals [[embeddingIncremental]] over the union corpus with the
     * same side split (spec-pinned). */
   def embeddingIncrementalWithSnapshot(incrementEmbeddings: DataFrame,
@@ -1150,7 +1110,7 @@ object Dedup {
     val incRep = crossReplicate(prepVecs(incrementEmbeddings), nBlocks)(_ => true)
     val idxRep = crossReplicate(snapshot.as[(Long, Array[Double], Double)], nBlocks)(_ => false)
     bestMatch(incrementEmbeddings.select(col("vec_id")),
-      crossScore(incRep.union(idxRep), threshold, None), "cosine")
+      scoreBlocks(incRep.union(idxRep), threshold, "inc_id", "idx_id")(_ => false), "cosine")
   }
 
   /** Persisted LSH embedding-index artifact — the SUB-QUADRATIC twin
@@ -1284,19 +1244,15 @@ object Dedup {
       bands: Int = 20, rowsPerBand: Int = 5): DataFrame = {
     val sigs = lshSigRows(embeddings, bands, rowsPerBand, col("embedding"),
       expr("sqrt(graft_dot(embedding, embedding))").as("nrm"))
-    val a = sigs.select(col("id").as("id_a"), col("embedding").as("va"),
-      col("nrm").as("na"), col("band"), col("sig"))
-    val b = sigs.select(col("id").as("id_b"), col("embedding").as("vb"),
-      col("nrm").as("nb"), col("band"), col("sig"))
-    val dot = "graft_dot(va, vb)"
     // score at the collision site, THEN dedup multi-band collisions as
     // a scalar hash aggregate: every collision of a pair computes the
     // identical cosine, so min() is exact — and the dedup shuffle moves
     // (id, id, cosine) triples instead of embedding arrays (at corpus
-    // scale the post-join dedup is the big exchange; d-dimensional
+    // scale the pair dedup is the big exchange; d-dimensional
     // payloads there would multiply it by the vector width)
-    a.join(b, Seq("band", "sig")).filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(expr(dot) / (col("na") * col("nb")) + lit(1e-9), 6))
+    Pairs.within(sigs, Seq("band", "sig"), "id")
+      .withColumn("cosine", round(expr("graft_dot(embedding_a, embedding_b)") /
+        (col("nrm_a") * col("nrm_b")) + lit(1e-9), 6))
       .groupBy(col("id_a"), col("id_b")).agg(min(col("cosine")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
@@ -1306,14 +1262,9 @@ object Dedup {
     * set [[embeddingPairsLsh]] verifies, before the cosine filter;
     * exposed for the recall audit's candidate-share metric. */
   private[graft] def embeddingLshCandidates(embeddings: DataFrame,
-      bands: Int = 20, rowsPerBand: Int = 5): DataFrame = {
-    val sigs = lshSigRows(embeddings, bands, rowsPerBand)
-    sigs.select(col("id").as("id_a"), col("band"), col("sig"))
-      .join(sigs.select(col("id").as("id_b"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .filter(col("id_a") < col("id_b"))
+      bands: Int = 20, rowsPerBand: Int = 5): DataFrame =
+    Pairs.within(lshSigRows(embeddings, bands, rowsPerBand), Seq("band", "sig"), "id")
       .select(col("id_a"), col("id_b")).distinct()
-  }
 
   /** Duplicated-span removal bookkeeping — the exact-substring-dedup
     * step of a training corpus (Lee et al. 2022, "Deduplicating

@@ -2948,14 +2948,14 @@ object Multimodal {
     * bits; candidate generation is the
     * [[graft.dedup.Dedup.simhashPairs]] pigeonhole banding — 4 bands
     * × 16 bits (2¹⁶ buckets per band), hamming ≤ 3 forces at least one
-    * equal band, so the banded equi-join is COMPLETE, never all-pairs.
+    * equal band, so the banded pairing is COMPLETE, never all-pairs.
     * Output: per image its hash (exact integer — the oracle recomputes
     * it from the pixel closed form through the identical integer
     * arithmetic) and its near-dup neighbor count.
     *
     * Plan: stateless partition-local decode+hash; a 4-row band explode
-    * and keyed self-equi-join on (band, bucket); distinct'd pair frame
-    * rolls up to O(#images) counts. */
+    * and graft.core.Pairs.within on (band, bucket); distinct'd pair
+    * frame rolls up to O(#images) counts. */
   def imagePhash(spark: SparkSession, documents: DataFrame,
       maxHamming: Int = 3): DataFrame = {
     val hashes = phashFrame(spark, documents)

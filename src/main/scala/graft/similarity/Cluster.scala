@@ -140,7 +140,8 @@ object Cluster {
     * caller's one-line filter and stays auditable.
     *
     * Scale shape — the whole point of the method: similarity runs per
-    * CLUSTER (an equi-join on the cluster id), never corpus-all-pairs;
+    * CLUSTER (graft.core.Pairs.within on the cluster id), never
+    * corpus-all-pairs;
     * the paper scales k with the corpus (50k clusters for LAION) so
     * per-cluster candidate sets stay bounded and the join cost is
     * Σ n_c² ≈ n²/k. Cosines are quantized to 6dp BEFORE the τ
@@ -149,22 +150,17 @@ object Cluster {
       iters: Int = 2): DataFrame = {
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
     // norms are precomputed per VECTOR (one self-dot + sqrt each),
-    // not per candidate pair: the cluster self-join scored each pair
-    // with three dot products (ea·eb plus both self-dots) — same
-    // sqrt/division arithmetic, now evaluated once per row before the
-    // join, so the O(Σ n_c²) verify pays one dot per pair
+    // not per candidate pair: scoring a pair with three dot products
+    // (a·b plus both self-dots) is the same sqrt/division arithmetic,
+    // evaluated once per row before the pairing, so the O(Σ n_c²)
+    // verify pays one dot per pair
     val vecs = embeddings.select(col("vec_id").cast("long").as("vec_id"),
       expr("transform(embedding, x -> cast(x AS double))").as("emb"))
       .withColumn("nrm", expr("sqrt(graft_dot(emb, emb))"))
     val assigned = kmeans(embeddings, k, iters).select(col("vec_id"), col("cluster"))
     val av = assigned.join(vecs, Seq("vec_id"))
-    val a = av.select(col("cluster"), col("vec_id").as("id_a"),
-      col("emb").as("ea"), col("nrm").as("na"))
-    val b = av.select(col("cluster"), col("vec_id").as("id_b"),
-      col("emb").as("eb"), col("nrm").as("nb"))
-    val cosE = "graft_dot(ea, eb) / (na * nb)"
-    val dropped = a.join(b, Seq("cluster")).filter(col("id_a") < col("id_b"))
-      .withColumn("cos", expr(s"round($cosE + 1e-9, 6)"))
+    val dropped = graft.core.Pairs.within(av, Seq("cluster"), "vec_id")
+      .withColumn("cos", expr("round(graft_dot(emb_a, emb_b) / (nrm_a * nrm_b) + 1e-9, 6)"))
       .filter(col("cos") >= tau)
       .groupBy(col("id_b").as("vec_id"))
       .agg(count(lit(1)).as("n_dup_lower"), max(col("cos")).as("max_cos"))

@@ -113,7 +113,7 @@ object ScaleCanary {
   }
 
   /** Image-phash banding canary (round 9): the 4×16-bit band
-    * self-join Multimodal.imagePhash runs
+    * pairing Multimodal.imagePhash runs
     * (Dedup.bandedHammingCandidates), over a DIVERSE 64-bit hash
     * corpus (xxhash64 of the id — the synthetic image closed form
     * repeats hashes exactly, which is planted-dup structure, not

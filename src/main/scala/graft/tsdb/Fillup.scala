@@ -51,16 +51,18 @@ object Fillup {
     * of `knn`, as (station_id, nb_id, rank, coef): coef is
     * v(station) / v(neighbor) when `multiplicative`, else
     * v(station) − v(neighbor), rounded to 6 places, where v is the
-    * per-station column `v` of `values`. A pair with either station
-    * missing from `values` has no row. */
+    * per-station column `v` of `values`. A pair without a coefficient
+    * (a value missing or NULL, or a zero divisor: `try_divide`, where
+    * ANSI `/` throws) has no row, so the next neighbor donates. */
   private[tsdb] def coefTable(knn: DataFrame, values: DataFrame, v: String,
       multiplicative: Boolean): DataFrame = {
     val c = knn
       .join(values.select(col("station_id"), col(v).as("ma_stat")), Seq("station_id"))
       .join(values.select(col("station_id").as("nb_id"), col(v).as("ma_other")), Seq("nb_id"))
-    val coef = if (multiplicative) col("ma_stat") / col("ma_other")
+    val coef = if (multiplicative) try_divide(col("ma_stat"), col("ma_other"))
       else col("ma_stat") - col("ma_other")
     c.withColumn("coef", round(coef + lit(1e-9), 6))
+      .filter(col("coef").isNotNull)
       .select(col("station_id"), col("nb_id"), col("rank"), col("coef"))
   }
 
@@ -159,8 +161,9 @@ object Fillup {
     * StationPBase `_ma_terms = ["wihy","suhy"]`): separate
     * winter-half-year (Oct–Mar) and summer-half-year (Apr–Sep)
     * coefficients; each day is filled with the coefficient of its
-    * season. A neighbor is eligible when ANY seasonal MA exists
-    * (cond_mas_not_null); a NULL seasonal coefficient yields no
+    * season. A neighbor is eligible when ANY seasonal coefficient
+    * exists (cond_mas_not_null); a NULL seasonal coefficient (a missing
+    * MA, or a zero one on the neighbor's side) yields no
     * candidate for days of that season, falling through to the next
     * neighbor — exactly the reference's loop behavior. The
     * two-coefficient, left-joined table is this variant's own: the
@@ -178,8 +181,8 @@ object Fillup {
       .join(maS.select(col("station_id"), col("ma_so").as("so_stat")), Seq("station_id"), "left")
       .join(maW.select(col("station_id").as("nb_id"), col("ma_wi").as("wi_other")), Seq("nb_id"), "left")
       .join(maS.select(col("station_id").as("nb_id"), col("ma_so").as("so_other")), Seq("nb_id"), "left")
-      .withColumn("coef_wi", round(col("wi_stat") / col("wi_other") + lit(1e-9), 6))
-      .withColumn("coef_so", round(col("so_stat") / col("so_other") + lit(1e-9), 6))
+      .withColumn("coef_wi", round(try_divide(col("wi_stat"), col("wi_other")) + lit(1e-9), 6))
+      .withColumn("coef_so", round(try_divide(col("so_stat"), col("so_other")) + lit(1e-9), 6))
       .filter(col("coef_wi").isNotNull || col("coef_so").isNotNull)
       .select(col("station_id"), col("nb_id"), col("rank"), col("coef_wi"), col("coef_so"))
     val cand = donorCandidates(qcSeries, "qc", meta, k, coefs)("cand" ->

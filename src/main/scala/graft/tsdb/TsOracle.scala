@@ -264,7 +264,8 @@ object TsOracle {
       SELECT k.station_id, k.nb_id, k.rank, round(ms.ma / mo.ma + 1e-9, 6) AS coef
       FROM knn10 k
       JOIN ma_qc ms ON ms.station_id = k.station_id
-      JOIN ma_qc mo ON mo.station_id = k.nb_id),
+      JOIN ma_qc mo ON mo.station_id = k.nb_id
+      WHERE ms.ma / mo.ma IS NOT NULL),
     cand AS (
       SELECT c.station_id, s.day, round(s.qc * c.coef + 1e-9, 2) AS cand, c.nb_id, c.rank
       FROM coefs10 c JOIN qc_all s ON s.station_id = c.nb_id AND s.qc IS NOT NULL),
@@ -386,7 +387,8 @@ object TsOracle {
       SELECT k.station_id, k.nb_id, k.rank, round(ms.ma - mo.ma + 1e-9, 6) AS coef
       FROM knn10 k
       JOIN ma_qc ms ON ms.station_id = k.station_id
-      JOIN ma_qc mo ON mo.station_id = k.nb_id),
+      JOIN ma_qc mo ON mo.station_id = k.nb_id
+      WHERE ms.ma - mo.ma IS NOT NULL),
     mm AS (
       SELECT user_id::BIGINT AS station_id, ts::date AS day,
         round(min(value) + 1e-9, 3) AS raw_min, round(max(value) + 1e-9, 3) AS raw_max

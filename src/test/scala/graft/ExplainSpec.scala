@@ -238,4 +238,15 @@ class ExplainSpec extends SparkSpec {
     }
     assert(gen.size == 1, s"expected one explode, got ${gen.size}")
   }
+
+  test("Explain masks session counters: one query planned twice prints one plan") {
+    def plan() = SparkEntry.queries("q1_agg")(spark, sf).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    val (a, b) = (plan(), plan())
+    assert(a !== b, "two plannings of one query number their expressions apart")
+    assert(Explain.masked(a) === Explain.masked(b))
+    assert(Explain.masked("sum(x#12L) AS s#3, [plan_id=45]") === "sum(x#x) AS s#x, [plan_id=x]")
+    assert(Explain.masked("MapPartitionsRDD[1343], Dedup$$$Lambda$5907/0x00007f8d3d808a60@3e9f,")
+      === "MapPartitionsRDD[x], Dedup$$$Lambda$x,")
+  }
 }

@@ -4,12 +4,13 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, ProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions.col
 import graft.{Observe, SparkSpec}
 import graft.core.Tables
+import graft.functions.ShingleHashes
 import graft.similarity.Ann
 
 /** The persisted artifacts' pinned schemas, the text snapshot's load
@@ -117,6 +118,18 @@ class SnapshotArtifactSpec extends SparkSpec with AdaptiveSparkPlanHelper with O
       // df table, index postings and both verify sides at sf0.001
       assert(collect(plan) { case e: BroadcastExchangeLike => e }.size === 4, s"$plan")
     } finally reference.unpersist()
+  }
+
+  test("a screen shingles its increment once per consumer, never again in a filter") {
+    val dir = tmp("graft-text-shingle")
+    Dedup.buildTextIndexSnapshot(corpus.filter(col("doc_id") % 10 =!= 0), 0.5).save(dir)
+    val plan = Dedup.incrementalDedupWithSnapshot(corpus.filter(col("doc_id") % 10 === 0),
+      Dedup.TextIndexSnapshot.load(spark, dir)).queryExecution.executedPlan
+    val shingling = collect(plan) {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[ShingleHashes])) => p
+    }
+    // the prefix stage and the verify side, each one projection
+    assert(shingling.size === 2 && shingling.forall(_.isInstanceOf[ProjectExec]), s"$plan")
   }
 
   test("a screen over an unseen doc_id range compiles no more than its increment's stages") {

@@ -420,10 +420,13 @@ class LlmSpec extends SparkSpec {
     val exact = Dedup.embeddingPairs(embs)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(exact.size === 66) // verified against the DuckDB all-pairs oracle
-    // block decomposition must be invariant to the block count
-    val otherB = Dedup.embeddingPairs(embs, nBlocks = 7)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(otherB === exact)
+    // block decomposition must be invariant to the block count: one
+    // diagonal group scores everything at 1 block, against 7 and 16
+    for (b <- Seq(1, 7)) {
+      val otherB = Dedup.embeddingPairs(embs, nBlocks = b)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(otherB === exact, s"nBlocks $b")
+    }
     val lsh = Dedup.embeddingPairsLsh(embs)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(lsh.subsetOf(exact), s"false positives: ${lsh -- exact}")

@@ -41,6 +41,21 @@ class FillupSpec extends SparkSpec {
     assert(out.head === ((Some(100.0), Some(2L))))
   }
 
+  test("a neighbor whose MA is 0 gives no coefficient: the next neighbor fills") {
+    val s = qcSeries(Seq(
+      (0L, 1, Some(100.0)), (0L, 2, None),
+      (1L, 1, Some(0.0)), (1L, 2, Some(0.0)),
+      (2L, 1, Some(400.0)), (2L, 2, Some(400.0))))
+    def slot(df: org.apache.spark.sql.DataFrame) =
+      df.filter($"station_id" === 0 && $"day" === day(2)).head
+    // ma1 = 0 divides nothing; ma0=100, ma2=400 -> coef 0.25, 400*0.25=100
+    val nb = slot(Fillup.fillNeighbor(s, meta))
+    assert((nb.getAs[Double]("filled"), nb.getAs[Long]("filled_by")) === ((100.0, 2L)))
+    assert(slot(Fillup.fillMedian(s, meta)).getAs[Double]("filled") === 100.0)
+    // January: the winter coefficient, NULL for neighbor 1
+    assert(slot(Fillup.fillSeasonal(s, meta)).getAs[Double]("filled") === 100.0)
+  }
+
   test("idw fill weights neighbor values by inverse squared distance") {
     val s = qcSeries(Seq(
       (0L, 1, Some(100.0)), (0L, 2, None),
