@@ -59,32 +59,51 @@ final class Artifact(parts: (String, String)*) {
     * this session is returned again, and nothing is read. Any write to
     * the artifact changes that listing, so the next call loads again
     * and re-checks the parts; a missing part leaves the call to `load`
-    * and its failure. The memo holds the loaded value (plans, never
-    * storage), one entry per directory; a load from another session
-    * replaces the entry, so no two sessions share one. Entries of
-    * stopped sessions are dropped on the next call. */
+    * and its failure. The memo holds one entry per directory: the
+    * loaded value, its plans and whatever driver-side state it has
+    * prepared since (a [[Artifact.Holding]] value, such as the text
+    * snapshot's probe broadcast). The memo owns that state and releases
+    * it when it lets go of the entry: when a new version supersedes
+    * it, when a load from another session replaces it (no two sessions
+    * share one), and when its session has stopped (dropped on the next
+    * call). */
   def memoized[T](spark: SparkSession, dir: String)(load: => T): T = {
     val root = new Path(dir)
     val key = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(root).toString
     val current = version(spark, root)
-    val hit = memo.synchronized {
-      memo.filterInPlace { case (_, e) => !e.spark.sparkContext.isStopped }
-      memo.get(key).filter(e => e.spark.eq(spark) && current.contains(e.version))
+    val (hit, dropped) = memo.synchronized {
+      val stopped = memo.filter(_._2.spark.sparkContext.isStopped)
+      memo --= stopped.keys
+      val entry = memo.get(key)
+      val hit = entry.filter(e => e.spark.eq(spark) && current.contains(e.version))
+      if (hit.isEmpty) memo.remove(key)
+      (hit, stopped.values ++ entry.filter(_ => hit.isEmpty))
     }
+    dropped.foreach(_.release())
     hit match {
       case Some(e) => e.value.asInstanceOf[T]
       case None =>
-        memo.synchronized(memo.remove(key))
         val value = load
-        current.foreach(v => memo.synchronized(memo(key) = Artifact.Loaded(spark, v, value)))
+        current.foreach { v =>
+          memo.synchronized(memo.put(key, Artifact.Loaded(spark, v, value))).foreach(_.release())
+        }
         value
     }
   }
 }
 
-private object Artifact {
+object Artifact {
+  /** A loaded value that holds driver-side state beyond its plans;
+    * `release` frees it, and a later use prepares it again. */
+  trait Holding { def release(): Unit }
+
   /** One memo entry: the session that loaded it, the version it was
     * loaded at and the loaded value. */
-  final case class Loaded(spark: SparkSession, version: Seq[(String, Long, Long)], value: Any)
+  private final case class Loaded(spark: SparkSession, version: Seq[(String, Long, Long)], value: Any) {
+    def release(): Unit = value match {
+      case h: Holding => h.release()
+      case _ =>
+    }
+  }
 }

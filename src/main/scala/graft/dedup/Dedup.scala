@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge
 import graft.core.Pairs
 import graft.text.TextFns._
 
@@ -424,12 +425,34 @@ object Dedup {
     * screen loads the snapshot on every request; while the artifact is
     * unchanged, a load lists the parts on the driver and returns the
     * snapshot already loaded — no meta-row job, no footer read, no
-    * relation listed again. A `save`, an
+    * relation listed again — and with it the probe state the first
+    * screen over it prepared (see [[incrementalDedupWithSnapshot]]), so
+    * that state is built once per artifact version. A `save`, an
     * [[appendToTextIndexSnapshotInPlace]] or any rewritten part changes
-    * the version, so the next load reads and checks the parts again.
-    * A corrupt part still fails loudly (spec-pinned): a column in an
-    * unreadable type fails the screen's scan, a missing one the load. */
-  case class TextIndexSnapshot(index: DataFrame, dfreq: DataFrame, threshold: Double) {
+    * the version: the next load reads and checks the parts again, and
+    * the memo releases the superseded snapshot's probe state. A corrupt
+    * part still fails loudly (spec-pinned): a column missing from a part
+    * fails the load; a column in an unreadable type fails the screen's
+    * first action, on either path. */
+  case class TextIndexSnapshot(index: DataFrame, dfreq: DataFrame, threshold: Double)
+      extends graft.core.Artifact.Holding {
+    /** The probe state screens over this snapshot read: built by the
+      * first action that needs it, held until [[release]]. */
+    @transient private[graft] lazy val probe = new PreparedProbe(this)
+
+    /** Destroy the probe state's broadcast; a later screen prepares it
+      * again. */
+    def release(): Unit = probe.release()
+
+    /** Whether screens over this snapshot run the prepared probe: both
+      * parts' plan-stats sizes are within the session's
+      * `spark.sql.autoBroadcastJoinThreshold`, the planner's own budget
+      * for a side it holds in memory. */
+    private[graft] def prepares: Boolean = {
+      val budget = index.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+      Seq(index, dfreq).forall(_.queryExecution.optimizedPlan.stats.sizeInBytes <= budget)
+    }
+
     /** Write the artifact (parquet dirs + the threshold the prefix
       * lengths were cut at), then release the builder's cache — once
       * the artifact is on disk the in-memory copies are dead weight
@@ -570,12 +593,37 @@ object Dedup {
     * an increment's shingle frame against a snapshot — the complete
     * pair set [[incrementalDedupWithSnapshot]] argmaxes over, exposed
     * whole for consumers that need every edge (incremental component
-    * maintenance, [[mergeComponents]]) rather than the best match. */
+    * maintenance, [[mergeComponents]]) rather than the best match. On
+    * the prepared path (the rule of [[incrementalDedupWithSnapshot]])
+    * each row's probe pairs are exploded; otherwise
+    * [[relationalVerifiedPairs]] joins them. */
   private[graft] def snapshotVerifiedPairs(hsInc: DataFrame,
+      snapshot: TextIndexSnapshot): DataFrame =
+    if (!snapshot.prepares) relationalVerifiedPairs(hsInc, snapshot)
+    // explode_outer: an inner explode infers `size(pairs) > 0`, which
+    // the optimizer pushes below the increment's exchanges, a second
+    // probe in a stage that can run before the probe is prepared
+    else probed(hsInc, col("hashes"), snapshot)(
+      _.select(col("doc_id").as("inc_id"), explode_outer(col("pairs")).as("p"))
+        .filter(col("p").isNotNull)
+        .select(col("inc_id"), col("p.idx_id").as("idx_id"), col("p.jaccard").as("jaccard")))
+
+  /** [[snapshotVerifiedPairs]] as a relational plan: prefix-posting
+    * equi-join, then the keyed verify joins. */
+  private[graft] def relationalVerifiedPairs(hsInc: DataFrame,
       snapshot: TextIndexSnapshot): DataFrame =
     verifyJaccard(snapshotPrefixCandidates(hsInc, snapshot),
       hsInc.select(col("doc_id"), sort_array(col("hashes")).as("sh")),
       snapshot.index, snapshot.threshold)
+
+  /** `f` over (doc_id, pairs): each `frame` row's verified (idx_id,
+    * jaccard) pairs against the snapshot's prepared probe, probed from
+    * its shingle `hashes` in one projection, under the node that
+    * prepares the probe. */
+  private def probed(frame: DataFrame, hashes: Column, snapshot: TextIndexSnapshot)(
+      f: DataFrame => DataFrame): DataFrame =
+    graft.plans.Prepare(snapshot.probe)(f(frame.select(col("doc_id"), GraftSqlBridge.column(
+      SnapshotProbe(GraftSqlBridge.expression(hashes), snapshot.probe)).as("pairs"))))
 
   /** EXACT within-index near-dup pairs derived from the snapshot
     * artifact alone — [[jaccardPairs]] over the index corpus WITHOUT
@@ -607,7 +655,7 @@ object Dedup {
   /** [[incrementalDedup]] against a precomputed [[TextIndexSnapshot]]
     * — the production daily run: only the INCREMENT is shingled and
     * ranked (under the snapshot's df order); the index side's prefixes
-    * and sorted hash sets come straight off parquet. Output schema and
+    * and sorted hash sets come off the artifact. Output schema and
     * values equal [[incrementalDedup]] over the union corpus with the
     * same side split (spec-pinned): candidates may differ (df orders
     * differ) but both candidate sets are complete, and verification is
@@ -616,7 +664,44 @@ object Dedup {
     * Lazy: building the screen starts no job and persists nothing; the
     * caller's one action runs the whole screen as one query.
     *
-    * Plan: the increment's (doc_id, text) rows are hash-partitioned on
+    * Plan: one of two, picked when the screen is built by an
+    * observable rule — whether both snapshot parts' plan-stats sizes
+    * fit `spark.sql.autoBroadcastJoinThreshold` (the planner's own
+    * broadcast budget; −1 turns the prepared path off).
+    *  - Within the budget, the screen is a per-row projection over the
+    *    increment: one native probe ([[SnapshotProbe]]) over each
+    *    document's shingle hashes, which are computed in that one
+    *    node, reads the snapshot's prepared [[ProbeIndex]] (df table,
+    *    prefix postings, sorted hash sets) and returns the document's
+    *    verified pairs, best first; the screen takes the first. The
+    *    index is collected and broadcast by the first action over the
+    *    snapshot object and held with it (once per artifact version for
+    *    a loaded snapshot; [[TextIndexSnapshot.release]]), so later
+    *    screens run one job with no exchange of their own and no
+    *    broadcast. Nothing is persisted.
+    *  - Past it, the screen is the relational plan of
+    *    [[relationalScreen]], which holds no index on the driver.
+    * Both paths return the same rows (spec-pinned).
+    *
+    * doc_id contract: the output has one row per increment row, keyed
+    * by its doc_id. Keep increment doc_ids unique, as index ones: for a
+    * doc_id repeated in the increment, the prepared path screens each
+    * row on its own text (each row carries its own best match), while
+    * the relational path pools the rows' candidates and pairs under the
+    * id (every row carries the id's one best match). */
+  def incrementalDedupWithSnapshot(incrementDocs: DataFrame,
+      snapshot: TextIndexSnapshot): DataFrame =
+    if (!snapshot.prepares) relationalScreen(incrementDocs, snapshot)
+    else probed(reg(incrementDocs), expr(shingleHashes("text")), snapshot) { p =>
+      val best = get(col("pairs"), lit(0))
+      p.select(col("doc_id"), (size(col("pairs")) > 0).as("is_dup"),
+        best.getField("idx_id").as("best_match"), best.getField("jaccard").as("best_jaccard"))
+    }
+
+  /** [[incrementalDedupWithSnapshot]] as a relational plan, the path
+    * for snapshots past the broadcast budget.
+    *
+    * The increment's (doc_id, text) rows are hash-partitioned on
     * doc_id once, before shingling, behind a [[graft.plans.Fence]]. Its
     * three consumers — the prefix cut, the verify side and the probe ids
     * — all read that one exchange (planned once, reused by the other
@@ -629,20 +714,20 @@ object Dedup {
     * the increment's doc_id (renamed inc_id): the prefix cut's
     * (doc_id, sz) aggregate, the candidate (inc_id, idx_id) distinct,
     * the verify join on inc_id, the argmax window and the probe join;
-    * none of them shuffles. Under the
-    * broadcast threshold the planner broadcasts the df table, the index
-    * postings and both verify sides' hash sets: one shuffle exchange and
-    * four broadcasts (spec-pinned). An index past the threshold is
-    * joined on h and idx_id by shuffled keyed joins instead — the
-    * 100 TB shape. A small single-file increment that
+    * none of them shuffles. Under the broadcast threshold (reached here
+    * directly) the planner broadcasts the df table, the index postings
+    * and both verify sides' hash sets: one shuffle exchange and four
+    * broadcasts (spec-pinned). An index past the threshold is joined on
+    * h and idx_id by shuffled keyed joins instead — the 100 TB shape.
+    * A small single-file increment that
     * [[graft.core.Tables.ensureParallelism]] spreads round-robin
     * collapses into the same one exchange. */
-  def incrementalDedupWithSnapshot(incrementDocs: DataFrame,
+  private[graft] def relationalScreen(incrementDocs: DataFrame,
       snapshot: TextIndexSnapshot): DataFrame = {
     val inc = graft.plans.Fence(
       incrementDocs.select(col("doc_id"), col("text")).repartition(col("doc_id")))
     bestMatch(inc.select(col("doc_id")),
-      snapshotVerifiedPairs(graft.plans.Fence(withShingles(inc)), snapshot), "jaccard")
+      relationalVerifiedPairs(graft.plans.Fence(withShingles(inc)), snapshot), "jaccard")
   }
 
   /** Near-dup threshold sensitivity sweep — the tuning curve run

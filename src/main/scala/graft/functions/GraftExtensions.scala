@@ -14,6 +14,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // the optimizer fence shared frames are planned behind
     ext.injectPlannerStrategy(_ => graft.plans.FenceStrategy)
+    // the node that builds a text snapshot's probe state at execution
+    ext.injectPlannerStrategy(_ => graft.plans.PrepareStrategy)
     // optimizer extensions: predicate pushdown + column pruning
     // through the as-of plan (opaque to the built-in rules)
     ext.injectOptimizerRule(_ => graft.plans.AsOfFilterPushdown)

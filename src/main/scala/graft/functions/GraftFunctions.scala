@@ -307,10 +307,16 @@ object PrefixCut {
       h(i) = row.getLong(1)
       i += 1
     }
+    new GenericArrayData(cut(dfreq, h, n))
+  }
+
+  /** [[cut]] over the (dfreq, h) pairs as two parallel arrays. */
+  def cut(dfreq: Array[Long], h: Array[Long], n: Int): Array[Long] = {
+    val m = h.length
     // index sort under the (dfreq, h) key — n is small (per-doc token
     // count), so the boxed index comparator is JIT-compiled and cheap
     val idx = new Array[Integer](m)
-    i = 0; while (i < m) { idx(i) = i; i += 1 }
+    var i = 0; while (i < m) { idx(i) = i; i += 1 }
     java.util.Arrays.sort(idx, new java.util.Comparator[Integer] {
       override def compare(x: Integer, y: Integer): Int = {
         val c = java.lang.Long.compare(dfreq(x), dfreq(y))
@@ -318,9 +324,9 @@ object PrefixCut {
       }
     })
     val k = math.min(math.max(n, 0), m)
-    val out = new Array[Any](k)
+    val out = new Array[Long](k)
     i = 0; while (i < k) { out(i) = h(idx(i)); i += 1 }
-    new GenericArrayData(out)
+    out
   }
 }
 

@@ -82,12 +82,15 @@ object Streaming extends Serializable {
     * is_dup / best_match / best_jaccard row per arriving doc
     * (identical to the batch
     * [[graft.dedup.Dedup.incrementalDedupWithSnapshot]] frame,
-    * spec-pinned). Per batch only the BATCH is shingled — prefixes cut
-    * under the snapshot's df order, candidate equi-join against the
-    * snapshot's prefix postings, keyed verify joins against its sorted
-    * hash sets: stream-static joins end to end, no per-key streaming
-    * state (the index lives in the artifact, the maintained result is
-    * O(screened docs)). foreachBatch is at-least-once, so a redelivered
+    * spec-pinned). Per batch only the BATCH is shingled and probed:
+    * within the broadcast budget each arriving document is one probe
+    * of the snapshot's prepared index (built by the first batch,
+    * broadcast once and reused by every later one); past it, the
+    * batch's prefixes are equi-joined with the snapshot's prefix
+    * postings and verified by keyed joins against its sorted hash sets
+    * (the rule of the batch screen). No per-key streaming state: the
+    * index lives in the artifact, the maintained result is
+    * O(screened docs). foreachBatch is at-least-once, so a redelivered
     * batchId is skipped rather than double-screened. */
   class IncrementalScreen(snapshot: graft.dedup.Dedup.TextIndexSnapshot) extends AtLeastOnce {
     @volatile private var resultFrame: Option[DataFrame] = None
@@ -158,11 +161,14 @@ object Streaming extends Serializable {
       // paying only the increment.
       val compacted = appended.copy(index = appended.index.localCheckpoint(true))
       val oldLabels = labelFrame
-      val oldIndex = snapshot.index
+      val old = snapshot
       labelFrame = next
       snapshot = compacted
       graft.core.Checkpoints.release(oldLabels)
-      if (oldIndex ne initial.index) graft.core.Checkpoints.release(oldIndex)
+      // the superseded index and the probe the batch's screen prepared
+      // over it
+      old.release()
+      if (old.index ne initial.index) graft.core.Checkpoints.release(old.index)
       b.unpersist()
     }
   }

@@ -1,13 +1,14 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.util.truncatedString
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.columnar.CachedBatch
 import org.apache.spark.sql.execution.{LeafExecNode, SparkStrategy}
 import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
@@ -42,6 +43,11 @@ object GraftSqlBridge {
           cs.experimental.extraOptimizations :+ rule
     classic.Dataset.ofRows(cs, plan)
   }
+
+  /** A Catalyst expression as a Column, and back: for native
+    * expressions that take an argument no SQL text can carry. */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** `df` over what the CacheManager holds now: a persisted `df` becomes
     * one in-memory leaf, anything else keeps its plan with its cached
