@@ -513,33 +513,16 @@ object EventAnalytics {
     * scalar behind q_pareto_share's whale curve): users ranked
     * ascending by mass, `G = 2·Σ(rank·x) / (n·Σx) − (n+1)/n`.
     *
-    * The global rank is computed scalably — NOT as a single-partition
-    * `row_number() OVER (ORDER BY …)` (which would serialize the
-    * O(#users) frame through one task): the user frame is
-    * range-partitioned on (mass, user_id), eagerly localCheckpoint'ed
-    * (pinning one set of range boundaries for both consumers), and
-    * `rank = within-partition row_number + prefix-sum of partition
-    * counts` — the offsets frame is O(#partitions), the final
-    * aggregate one row. Same machinery as Corpus.shuffle's ordinal;
-    * the oracle pins the spec AS the global window and this route
+    * The global rank is [[graft.core.Ordinals.running]]'s ordinal
+    * under (mass, user_id) — NOT a single-partition
+    * `row_number() OVER (ORDER BY …)`, which would serialize the
+    * O(#users) frame through one task; the final aggregate is one row.
+    * The oracle pins the spec AS the global window and this route
     * must reproduce it exactly. */
   def gini(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val perUser = events.groupBy(col("user_id"))
       .agg(round(sum(col("value")) + lit(1e-9), 3).as("x"))
-    val ranged = perUser
-      .repartitionByRange(col("x"), col("user_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = ranged.groupBy(col("pid"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("offset", coalesce(
-        sum(col("cnt")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("offset"))
-    val wLocal = Window.partitionBy(col("pid")).orderBy(col("x"), col("user_id"))
-    ranged.join(broadcast(offsets), Seq("pid"))
-      .withColumn("ord", row_number().over(wLocal) + col("offset"))
+    graft.core.Ordinals.running(perUser, Seq(col("x"), col("user_id")))
       .agg(count(lit(1)).as("n_users"),
         round(sum(col("x")) + lit(1e-9), 3).as("total_value"),
         sum(col("ord") * col("x")).as("rank_mass"))
@@ -1445,9 +1428,9 @@ object EventAnalytics {
     *
     * Plan: ranks come from the mannWhitney tie-block trick — ONE
     * aggregate to the distinct-value frame, cumulative average ranks
-    * over it (at 100 TB the same ordinal is a range-partition +
-    * prefix-sum pass, the Corpus.shuffle pattern — no row-level global
-    * sort either way), then a keyed (type, value) join and two tiny
+    * over it (at 100 TB the same ordinal is an
+    * [[graft.core.Ordinals.running]] pass — no row-level global sort
+    * either way), then a keyed (type, value) join and two tiny
     * rollups. R_j sums are exact-long-weighted doubles; only the O(1)
     * H statistic rounds. */
   def kruskalWallis(events: DataFrame): DataFrame = {

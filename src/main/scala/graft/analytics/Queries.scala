@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{Ordinals, Tables}
 
 /** General relational query surface.
   *
@@ -951,44 +951,26 @@ object Queries {
     *
     * Plan: one keyed aggregate to O(#customers) — a frame that GROWS
     * with SF (billions at 100 TB), so the global rank is NOT a
-    * single-partition ntile window: range-partition on the sort key,
-    * partition-local row_number + broadcast exclusive prefix-count
-    * offsets (the corpus_shuffle ordinal pattern), and ntile's exact
-    * bucket arithmetic (first n%10 buckets one row larger) applied in
-    * closed form. Shares off a 10-row rollup. */
+    * single-partition ntile window: [[Ordinals.running]]'s ordinal and
+    * count, and ntile's exact bucket arithmetic (first n%10 buckets one
+    * row larger) applied in closed form. Shares off a 10-row rollup. */
   def qCustomerDeciles(spark: SparkSession, dir: String): DataFrame = {
     val rev = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(round(sum(col("o_totalprice")) + lit(1e-9), 2).as("rev"))
-    // pin the physical split once: spark_partition_id is a property
-    // of the materialized layout, not of the plan
-    val ranged = rev.repartitionByRange(col("rev").desc, col("o_custkey"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = ranged.groupBy(col("pid"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("offset", coalesce(
-        sum(col("cnt")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("cnt")).over(Window.partitionBy()))
-      .select(col("pid"), col("offset"), col("n"))
-    val wLocal = Window.partitionBy(col("pid"))
-      .orderBy(col("rev").desc, col("o_custkey"))
-    val wAll = Window.partitionBy()
-    ranged.join(broadcast(offsets), Seq("pid"))
-      .withColumn("rn", row_number().over(wLocal) + col("offset"))
+    Ordinals.running(rev, Seq(col("rev").desc, col("o_custkey")))
       // ntile(10) exact semantics: q = n DIV 10 rows per bucket, the
       // first r = n % 10 buckets take one extra row
       .withColumn("decile", expr(
-        """CAST(CASE WHEN rn <= (n % 10) * (n DIV 10 + 1)
-             THEN (rn - 1) DIV (n DIV 10 + 1) + 1
-             ELSE (n % 10) + (rn - (n % 10) * (n DIV 10 + 1) - 1)
+        """CAST(CASE WHEN ord <= (n % 10) * (n DIV 10 + 1)
+             THEN (ord - 1) DIV (n DIV 10 + 1) + 1
+             ELSE (n % 10) + (ord - (n % 10) * (n DIV 10 + 1) - 1)
                   DIV (n DIV 10) + 1 END AS INT)"""))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_customers"),
         round(sum(col("rev")) + lit(1e-9), 2).as("decile_rev"))
       .withColumn("share", round(col("decile_rev")
-        / sum(col("decile_rev")).over(wAll) + lit(1e-9), 6))
+        / sum(col("decile_rev")).over(Window.partitionBy()) + lit(1e-9), 6))
       .select(col("decile"), col("n_customers"), col("decile_rev"), col("share"))
       .orderBy(col("decile"))
   }
@@ -1147,8 +1129,7 @@ object Queries {
     * share runs over integer CENTS (2-dp revenue × 100 as BIGINT) so
     * the running sum is exact on both engines — a float cumsum's
     * fold order is engine-private, an integer one has no order. The
-    * revenue cumsum runs distributed — range-partition + prefix-sum,
-    * the customer_deciles / corpus_shuffle pattern. */
+    * revenue cumsum runs distributed, as [[Ordinals.running]]. */
   def qAbcXyz(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val rev = li.groupBy(col("l_partkey"))
@@ -1165,26 +1146,10 @@ object Queries {
         round(sqrt(greatest(col("var_q"), lit(0.0))) / col("mean_q")
           + lit(1e-9), 4)))
       .select(col("l_partkey"), col("cv"))
-    // the part dim GROWS with SF: the global revenue cumsum runs as
-    // range-partition + prefix-sum (partition-local window + broadcast
-    // exclusive offsets), never a single-partition sort; integer cents
-    // make the split-order irrelevant
-    val ranged = rev.repartitionByRange(col("rev_c").desc, col("l_partkey"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = ranged.groupBy(col("pid"))
-      .agg(sum(col("rev_c")).as("psum"))
-      .withColumn("offset", coalesce(
-        sum(col("psum")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("tot_c", sum(col("psum")).over(Window.partitionBy()))
-      .select(col("pid"), col("offset"), col("tot_c"))
-    val wLocal = Window.partitionBy(col("pid"))
-      .orderBy(col("rev_c").desc, col("l_partkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged.join(broadcast(offsets), Seq("pid"))
-      .withColumn("cum_c", sum(col("rev_c")).over(wLocal) + col("offset"))
-      .withColumn("cum_share", col("cum_c").cast("double") / col("tot_c"))
+    // the part dim GROWS with SF: the global revenue cumsum is never a
+    // single-partition sort; integer cents make its order irrelevant
+    Ordinals.running(rev, Seq(col("rev_c").desc, col("l_partkey")), "rev_c")
+      .withColumn("cum_share", col("cum_rev_c").cast("double") / col("tot_rev_c"))
       .withColumn("abc", when(col("cum_share") <= 0.8, "A")
         .when(col("cum_share") <= 0.95, "B").otherwise("C"))
       .join(cv, Seq("l_partkey"))

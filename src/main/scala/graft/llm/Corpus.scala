@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Ordinals
 import graft.dedup.Dedup
 import graft.text.TextAnalysis
 import graft.text.TextFns._
@@ -211,33 +212,14 @@ object Corpus {
     * a GLOBAL contiguous ordinal under (key, doc_id) order, and a
     * round-robin shard assignment from the ordinal.
     *
-    * The global ordinal is computed scalably — NOT as a
-    * single-partition `row_number() OVER (ORDER BY …)`: the keyed
-    * frame is range-partitioned (so partition p holds a contiguous
-    * key range), eagerly localCheckpoint'ed (pinning one set of range
-    * boundaries for both consumers), then
-    * `ordinal = within-partition rank + prefix-sum of partition
-    * counts` — the offsets frame is O(#partitions). The result is
-    * boundary-independent: (key, doc_id) is a total order, so
-    * wherever the sampled range boundaries land, prefix counts +
-    * local ranks compose to the same global rank the oracle's global
+    * The global ordinal is [[Ordinals.running]]'s — NOT a
+    * single-partition `row_number() OVER (ORDER BY …)`. (key, doc_id)
+    * is a total order, so it is the global rank the oracle's global
     * window produces. */
   def shuffle(documents: DataFrame, shards: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val skey = pmod(pmod(col("doc_id"), lit(P)) * lit(2654435761L), lit(P))
-    val ranged = documents.select(col("doc_id"), skey.as("skey"))
-      .repartitionByRange(col("skey"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = ranged.groupBy(col("pid"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("offset", coalesce(
-        sum(col("cnt")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("offset"))
-    val wLocal = Window.partitionBy(col("pid")).orderBy(col("skey"), col("doc_id"))
-    ranged.join(broadcast(offsets), Seq("pid"))
-      .withColumn("ord", row_number().over(wLocal) + col("offset"))
+    Ordinals.running(documents.select(col("doc_id"), skey.as("skey")),
+        Seq(col("skey"), col("doc_id")))
       .withColumn("shard", pmod(col("ord") - 1, lit(shards.toLong)))
       .select(col("doc_id"), col("skey"), col("ord"), col("shard"))
   }

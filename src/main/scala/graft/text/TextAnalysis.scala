@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Ordinals
 import TextFns._
 
 /** Text analysis operators: language ID, quality scoring, token
@@ -199,13 +200,11 @@ object TextAnalysis {
     *
     * Plan: token first-occurrence = ONE keyed min(doc_id) aggregate
     * (never a scan-order dependence), per-doc counts collapse to the
-    * O(#docs) frame, and both cumsums run as range-partition +
-    * prefix-sum (partition-local exact-integer windows + broadcast
-    * per-partition offsets — the corpus_shuffle ordinal pattern,
-    * never a single-partition global sort over the corpus-sized doc
-    * frame); the log–log OLS runs on doc checkpoints only. */
+    * O(#docs) frame, and both exact-integer cumsums come from one
+    * [[Ordinals.running]] (never a single-partition global sort over
+    * the corpus-sized doc frame); the log–log OLS runs on doc
+    * checkpoints only. */
   def heapsFit(documents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val tok = documents
       .select(col("doc_id").cast("long").as("doc_id"),
         explode(expr(tokens("text"))).as("token"))
@@ -214,28 +213,11 @@ object TextAnalysis {
       .agg(min(col("doc_id")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_new"))
     val perDoc = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tok"))
-    // pin the physical split once: spark_partition_id is a property of
-    // the materialized layout, not of the plan
-    val ranged = perDoc.join(newTypes, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tok"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"))
-      .repartitionByRange(col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = ranged.groupBy(col("pid"))
-      .agg(sum(col("n_tok")).as("t"), sum(col("n_new")).as("v"))
-      .withColumn("off_tok", coalesce(
-        sum(col("t")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("off_vocab", coalesce(
-        sum(col("v")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("off_tok"), col("off_vocab"))
-    val wLocal = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = ranged.join(broadcast(offsets), Seq("pid"))
-      .withColumn("cum_tok", sum(col("n_tok")).over(wLocal) + col("off_tok"))
-      .withColumn("cum_vocab", sum(col("n_new")).over(wLocal) + col("off_vocab"))
+    val cum = Ordinals.running(perDoc.join(newTypes, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_tok"),
+          coalesce(col("n_new"), lit(0L)).as("n_new")),
+        Seq(col("doc_id")), "n_tok", "n_new")
+      .select(col("cum_n_tok").as("cum_tok"), col("cum_n_new").as("cum_vocab"))
       .filter(col("cum_tok") > 0 && col("cum_vocab") > 0)
     cum.select(log(col("cum_tok").cast("double")).as("x"),
         log(col("cum_vocab").cast("double")).as("y"),

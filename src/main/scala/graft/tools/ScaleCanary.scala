@@ -84,9 +84,9 @@ object ScaleCanary {
           canaryKnn(spark), band = 512, cap = 100000),
         Climate.dtwNeighbors(tall, canaryKnn(spark), band = 7, cap = 100000)),
       // the global-cumsum PATTERN (concurrency / heaps_fit /
-      // customer_deciles / abc_xyz): one 20M-row running sum as a
+      // customer_deciles / abc_xyz): one running sum over CumsumRows rows as a
       // single-partition Window.orderBy (the r6 shape — every row
-      // through ONE task) vs range-partition + prefix-sum
+      // through ONE task) vs graft.core.Ordinals.running
       entryAt("global_cumsum", s"$CumsumRows rows",
         cumsumSingle(spark), cumsumPrefix(spark)),
     )
@@ -408,22 +408,9 @@ object ScaleCanary {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
-  def cumsumPrefix(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ranged = cumsumBase(spark).repartitionByRange(col("id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = ranged.groupBy(col("pid")).agg(sum(col("v")).as("s"))
-      .withColumn("offset", coalesce(
-        sum(col("s")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("offset"))
-    val wLocal = Window.partitionBy(col("pid")).orderBy(col("id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged.join(broadcast(offsets), Seq("pid"))
-      .withColumn("c", sum(col("v")).over(wLocal) + col("offset"))
-      .select(col("id"), col("v"), col("c"))
-  }
+  def cumsumPrefix(spark: SparkSession): DataFrame =
+    graft.core.Ordinals.running(cumsumBase(spark), Seq(col("id")), "v")
+      .select(col("id"), col("v"), col("cum_v").as("c"))
 
   def canaryKnn(spark: SparkSession): DataFrame = {
     import spark.implicits._

@@ -237,11 +237,8 @@ object Aggregate {
     *
     * Plan: sessionize's one user_id exchange, delta collapse to the
     * O(#distinct boundary ts) frame, then the global running sum is
-    * range-partition + prefix-sum (the corpus_shuffle ordinal
-    * pattern): per-partition delta totals roll into exclusive offsets
-    * over the O(#partitions) frame, the cumulative window runs
-    * PARTITION-LOCAL, and the offset joins back broadcast — never a
-    * single-partition Window.orderBy over all boundary timestamps. */
+    * [[graft.core.Ordinals.running]]'s — never a single-partition
+    * Window.orderBy over all boundary timestamps. */
   def concurrency(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     val sessions = sessionize(events, gapMinutes)
     val deltas = sessions
@@ -252,21 +249,8 @@ object Aggregate {
     val perTs = deltas.groupBy(col("ts"))
       .agg(sum(col("d")).as("delta"),
         sum(when(col("d") > 0, col("d")).otherwise(lit(0L))).as("starts"))
-    // pin the physical split once: spark_partition_id is a property of
-    // the materialized layout, not of the plan
-    val ranged = perTs.repartitionByRange(col("ts"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = ranged.groupBy(col("pid"))
-      .agg(sum(col("delta")).as("dsum"))
-      .withColumn("offset", coalesce(
-        sum(col("dsum")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("offset"))
-    val wLocal = Window.partitionBy(col("pid")).orderBy(col("ts"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged.join(broadcast(offsets), Seq("pid"))
-      .withColumn("concurrent", sum(col("delta")).over(wLocal) + col("offset"))
+    graft.core.Ordinals.running(perTs, Seq(col("ts")), "delta")
+      .withColumnRenamed("cum_delta", "concurrent")
       .withColumn("day", to_date(col("ts")))
       .groupBy(col("day"))
       .agg(max(col("concurrent")).as("peak_concurrent"),

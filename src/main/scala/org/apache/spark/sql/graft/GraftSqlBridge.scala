@@ -12,11 +12,13 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.columnar.CachedBatch
 import org.apache.spark.sql.execution.{LeafExecNode, SparkStrategy}
 import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
 /** Bridge into the `private[sql]` seams graft needs: the classic
-  * `Dataset.ofRows` factory (wrap a custom LogicalPlan as a DataFrame),
+  * `Dataset.ofRows` factory (wrap a custom LogicalPlan, or an RDD of
+  * rows, as a DataFrame),
   * per-session strategy registration and the CacheManager's plan
   * matching. Lives under `org.apache.spark.sql` for access scope only —
   * contains no Spark code, just forwarding. Cluster deployments can
@@ -43,6 +45,12 @@ object GraftSqlBridge {
           cs.experimental.extraOptimizations :+ rule
     classic.Dataset.ofRows(cs, plan)
   }
+
+  /** `rows`, an RDD of rows of `schema`, as a DataFrame: a scan of
+    * the RDD, of unknown size to the planner, so broadcast only on a
+    * hint. */
+  def ofRdd(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   /** A Catalyst expression as a Column, and back: for native
     * expressions that take an argument no SQL text can carry. */
